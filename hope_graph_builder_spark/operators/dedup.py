@@ -40,11 +40,16 @@ def _hasher(method: str):
       oracle replays; ~16 md5+base-conversions per shingle make it
       the expensive verification mode (measured ~4 ms/doc/core on the
       bench corpus).
-    - 'xx': native xxhash64 — one JVM hash per (shingle, salt),
-      measured ~10× cheaper; semantics identical up to the hash
-      family (exact duplicates still collide in every band), but NOT
-      replayable in DuckDB — production mode, verified by pytest
-      equivalence-on-exact-dups rather than by oracle."""
+    - 'xx': native xxhash64 of the string, measured ~10× cheaper;
+      semantics identical up to the hash family (exact duplicates
+      still collide), but NOT replayable in DuckDB — production mode,
+      verified by pytest equivalence-on-exact-dups rather than by
+      oracle. The ExactSubstr window hash uses it once per window.
+      minhash_signature's 'xx' mode does not call this hasher: it
+      hashes each shingle once and derives the k rows from that base
+      hash, so its signatures differ from those of the earlier
+      per-(shingle, salt) 'xx' family — 'xx' signatures stored before
+      that change do not compare with new ones."""
     if method == "md5":
         return hash60
     if method == "xx":
@@ -623,14 +628,15 @@ def dup_substring_spans(
     xxhash64 at ~10× less CPU (identical spans up to 64-bit hash
     collisions; production mode, pytest-equivalence-verified).
 
-    100 TB shape: this operator's cost is inherent to exact-substring
-    dedup — one row per sampled position. All heavy stages partially
-    aggregate map-side: window hashes → groupBy(hash) count (a window
-    repeated 10⁸ times collapses per input partition before the
-    shuffle), flagged hashes re-attach by equi-join, and span merging
-    is a per-document window (lag → island cumsum → two groupBys) that
-    shuffles only the FLAGGED positions — on clean corpora a small
-    fraction of the input."""
+    Shape: the cost is inherent to exact-substring dedup — one row per
+    sampled position, hashed in ONE explode+hash pass. Duplicated
+    windows are flagged by a count(*) window over partitionBy(hash)
+    (see _dup_flagged): one hash-keyed exchange, sort-based, no
+    per-key state — but no map-side combine either, so every
+    occurrence of a hot window hash lands in one task. Span merging
+    is a per-document window (lag → island cumsum → two groupBys) over
+    the FLAGGED positions only — on clean corpora a small fraction of
+    the input. ``n_windows`` is length arithmetic, not a pass."""
     from pyspark.sql.window import Window as W
 
     _, flagged = _dup_flagged(df, k, stride, text_col, id_col, hash_method)
@@ -658,11 +664,10 @@ def dup_substring_spans(
     )
     # n_windows is pure length arithmetic — size(sequence(1, L-k+1,
     # stride)) = floor((L-k)/stride)+1 — so the per-doc count needs NO
-    # explode+hash pass at all. This was the third full evaluation of
-    # the window-hash subtree per audit (r06: the explode+hash pass is
-    # the operator's dominant cost; now it runs twice — count + flag
-    # join — instead of three times). Sub-k and null-text docs fall
-    # through to 0 exactly as the posexplode_outer null row did.
+    # explode+hash pass at all (r06: the explode+hash pass is the
+    # operator's dominant cost; it now runs once per audit, for the
+    # flagged subtree). Sub-k and null-text docs fall through to 0
+    # exactly as the posexplode_outer null row did.
     s = F.col(text_col)
     per_doc = df.select(
         F.col(id_col),

@@ -4,12 +4,14 @@ noise_graph_join.py:17-138`, traced in SURVEY.md §3.1).
 
 Stage map (reference step → here):
   3  sampling points           sample_edges            (native explode)
-  4  xy_id dedup (CSE)         with_xy_id + unique_points
-  5  nodata-zone flag          native rect predicate
-  6  13-layer sjoin + dedup    pip_join_rect + pivot_layer_max (1 join,
-                               1 pivot — not 13 sequential sjoins)
+  4  xy_id dedup (CSE)         with_xy_id + location_exposures
+  5  nodata-zone flag          native rect predicate, or a pip_join_wkb
+                               semi-join for a nodata polygon
+  6  13-layer sjoin + dedup    location_exposures: 1 broadcast left
+                               cell-join + 1 grouped max (dedup and
+                               pivot in one shuffle — not 13 sjoins)
   7  missing split             Column predicate
-  8  kNN ring interpolation    ring_points + pip_join_rect +
+  8  kNN ring interpolation    ring_points + _left_cell_pivot +
                                exact 0.7-nearest quantile
   9  source coalesce/max/...   aggregate_noise_values
  10  union                     unionByName
@@ -19,40 +21,20 @@ Stage map (reference step → here):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """Reused-subtree persistence — OPT-IN via HGBS_PERSIST=1.
-
-    Measured (MULT=400, 4×2-core executors): caching the wide pivoted
-    point table costs MORE than recomputing its prefix for the second
-    (tiny, column-pruned) consumer — 58.4 s with persist vs 47.9 s
-    without for the full flagship. A one-reuse cache of a 10-column
-    table rarely pays for its build; the prefix is a broadcast join +
-    one distinct. Set HGBS_PERSIST=1 when the reused subtree is
-    genuinely expensive (e.g. a shuffle-path PIP join at scale)."""
-    if os.environ.get("HGBS_PERSIST"):
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
 
 from hope_graph_builder_spark.operators.noise import (
     LAYER_NAMES,
     aggregate_noise_values,
     aggregate_noises_by_edge,
     interpolate_missing,
-    pivot_layer_max,
 )
 from hope_graph_builder_spark.operators.sampling import (
     ring_points,
     sample_edges,
     with_xy_id,
 )
-from hope_graph_builder_spark.operators.spatial_join import pip_join_rect
 
 SAMPLE_COLS = [
     "xy_id", "road", "train", "tram", "metro",
@@ -80,125 +62,105 @@ def noise_final_samples(
     res: int = 7,
     ring_radius: float = 7.0,
     ring_count: int = 20,
-    salt: int = 1,
-    hot: DataFrame | None = None,
-    dedup_xy: bool = True,
     nodata_polys: DataFrame | None = None,
     nodata_res: int = 4,
-    fused_dedup: bool = True,
 ) -> DataFrame:
     """edges(edge_id, x1, y1, x2, y2, length) ×
     layers(layer, poly_id, minx, miny, maxx, maxy, db) →
     one row per edge sample with per-source dB, n_max, n_max_sources,
     n_max_adj (reference steps 3-11; input to the per-edge aggregate).
 
-    ``dedup_xy`` picks the physical strategy (results identical,
-    oracle-verified both ways):
-    - True — the reference's CSE: distinct quantized locations → PIP →
-      fan-out join back to samples. Right when the PIP is a SHUFFLE
-      join (layer table too big to broadcast): dedup shrinks the
-      expensive join's input ~2.4×.
-    - False — PIP every sample directly (at its quantized location, so
-      values per location stay identical) via the broadcast join, ONE
-      pivot keyed (edge_id, sample idx). Kills the distinct AND the
-      fan-out join. MEASURED on the street-edge workload (3 m sampling
-      → 2.4× co-located samples): dedup still wins (57-61 s vs
-      64-68 s at 4N/MULT=400) — the saved exchanges don't pay for the
-      2.4× extra refine work. Pick False only when sample locations
-      are mostly unique (dedup factor ≈ 1)."""
-    if not dedup_xy:
-        return _final_samples_nodedup(
-            edges, layers, nodata_rect, res, ring_radius, ring_count, salt, hot
-        )
+    Dedup + PIP + pivot run in ONE shuffle: the raw samples LEFT
+    cell-join the broadcast layer cover at their QUANTIZED coordinates
+    (identical evaluation points, so identical values) and one
+    groupBy(xy_id) with map-side combine is simultaneously the dedup
+    AND the per-layer max pivot (``location_exposures``); unmatched
+    locations survive via the left join. Measured at 4N/MULT=400:
+    42.5 → ~35 s end-to-end against an explicit distinct → inner
+    cell-join → pivot → join-back shape.
+
+    The nodata zone is ``nodata_rect`` (a native predicate) unless
+    ``nodata_polys`` (poly_id, geom WKB, bbox) is given — general
+    geometry, as the reference's nodata layer is a municipal-boundary
+    multipolygon read from GeoPackage (noise_graph_join_test.py:90,
+    noise_graph_join.py:41-47). The polygon form flags the distinct
+    locations with an even-odd ``pip_join_wkb`` semi-join;
+    ``nodata_res`` is coarse by default, because nodata zones are
+    municipality-scale and big cells keep their cover linear.
+
+    Miss-branch shape (each step oracle-pinned identical by the
+    flagship queries):
+    - rect zone: the miss input is a strip-only recompute. Only edges
+      whose bbox (±0.1 m, covering the 0.05 m quantization shift)
+      intersects the strip can yield strip samples, so the recompute
+      explodes a tiny fraction of the edges, and the OR-form predicate
+      pushes down to the parquet scan. ``pts.filter(missing)`` can't
+      push this itself: the no-noise predicate needs the pivot's output.
+    - polygon zone: no strip recompute (no benchmark workload runs
+      this form); the miss input is ``pts.filter(missing)``.
+    - the ring pivot is a LEFT broadcast cell-join + one aggregation
+      (``_left_cell_pivot``) instead of inner PIP → pivot → join-back.
+    - ``interp_vals`` has exactly one row per ``miss`` key by
+      construction (every miss point spawns ring_count ring rows, the
+      left join preserves them, both groupBys preserve keys), so no
+      ``miss ⟕ interp_vals`` reassembly join is needed."""
     samples = with_xy_id(sample_edges(edges))
+    x = (F.floor(F.col("xy_id") / 10_000_000) / 10.0)
+    y = (F.pmod(F.col("xy_id"), 10_000_000) / 10.0)
+    no_noise = None
+    for c in LAYER_NAMES:
+        cur = F.col(c).isNull()
+        no_noise = cur if no_noise is None else (no_noise & cur)
 
-    if fused_dedup and salt == 1 and hot is None and nodata_polys is None:
-        return _final_samples_fused_dedup(
-            samples, layers, nodata_rect, res, ring_radius, ring_count, edges=edges
-        )
-    uniq = unique_points(samples)
+    if nodata_polys is None:
+        nx0, ny0, nx1, ny1 = nodata_rect
+        in_rect = (x >= nx0) & (x < nx1) & (y >= ny0) & (y < ny1)
 
-    if nodata_polys is not None:
-        # general nodata GEOMETRY (the reference's nodata layer is a
-        # municipal-boundary multipolygon read from GeoPackage,
-        # noise_graph_join_test.py:90, noise_graph_join.py:41-47):
-        # even-odd PIP semi-join flags the unique sample locations.
-        # nodata_res is coarse by default — nodata zones are huge
-        # (municipality-scale), so big cells keep the cover linear.
+        def located(src: DataFrame, strip: tuple | None) -> DataFrame:
+            return location_exposures(src, layers, res, strip=strip).select(
+                "xy_id", x.alias("x"), y.alias("y"),
+                in_rect.alias("nodata_zone"), *LAYER_NAMES,
+            )
+
+        pts = located(samples, None)
+    else:
         from hope_graph_builder_spark.operators.spatial_join import pip_join_wkb
 
+        loc = location_exposures(samples, layers, res).select(
+            "xy_id", x.alias("x"), y.alias("y"), *LAYER_NAMES
+        )
         flags = (
             pip_join_wkb(
-                uniq.select("xy_id", "x", "y"), nodata_polys,
+                loc.select("xy_id", "x", "y"), nodata_polys,
                 res=nodata_res, point_id="xy_id",
             )
             .select("xy_id").distinct()
             .withColumn("_nz", F.lit(True))
         )
-        uniq = uniq.join(flags, "xy_id", "left").withColumn(
-            "nodata_zone", F.coalesce(F.col("_nz"), F.lit(False))
-        ).drop("_nz")
-    else:
-        nx0, ny0, nx1, ny1 = nodata_rect
-        uniq = uniq.withColumn(
-            "nodata_zone",
-            (F.col("x") >= nx0) & (F.col("x") < nx1)
-            & (F.col("y") >= ny0) & (F.col("y") < ny1),
+        pts = loc.join(flags, "xy_id", "left").select(
+            "xy_id", "x", "y",
+            F.coalesce(F.col("_nz"), F.lit(False)).alias("nodata_zone"),
+            *LAYER_NAMES,
         )
 
-    matches = pip_join_rect(
-        uniq, layers, res=res, how="inner", point_id="xy_id", salt=salt, hot=hot
-    ).select("xy_id", "layer", "db")
-    # pts feeds both the normal and the missing/kNN branches — persist
-    # so the sample→dedup→join→pivot prefix computes once
-    pts = _persist(uniq.join(pivot_layer_max(matches, "xy_id"), "xy_id", "left"))
-
-    no_noise = None
-    for c in LAYER_NAMES:
-        cond = F.col(c).isNull()
-        no_noise = cond if no_noise is None else (no_noise & cond)
     pts = pts.withColumn("missing_noises", F.col("nodata_zone") & no_noise)
-
     normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(*SAMPLE_COLS)
 
-    # Miss-branch input: missing ⇒ nodata_zone, so the second pass over
-    # the unpersisted pts lineage filters the (tiny) nodata strip BEFORE
-    # the PIP — a full-corpus PIP+pivot recompute becomes a strip-only
-    # one. pts.filter(missing) can't push this itself: the no_noise
-    # predicate needs the pivot's output. Identical rows by
-    # construction (oracle-pinned by the flagship queries). With the
-    # subtree persisted, reading the cache is cheaper than any
-    # recompute — then filter pts directly.
-    if os.environ.get("HGBS_PERSIST"):
-        miss = pts.filter(F.col("missing_noises")).select("xy_id", "x", "y")
-    else:
-        nod = uniq.filter(F.col("nodata_zone"))
-        nod_matches = pip_join_rect(
-            nod, layers, res=res, how="inner", point_id="xy_id", salt=salt, hot=hot
-        ).select("xy_id", "layer", "db")
-        nod_pts = nod.join(pivot_layer_max(nod_matches, "xy_id"), "xy_id", "left")
-        nod_no_noise = None
-        for c in LAYER_NAMES:
-            cond = F.col(c).isNull()
-            nod_no_noise = cond if nod_no_noise is None else (nod_no_noise & cond)
-        miss = nod_pts.filter(nod_no_noise).select("xy_id", "x", "y")
-    rings = ring_points(miss, radius=ring_radius, count=ring_count, keep=["xy_id"], index_col="ring_i")
-    if salt == 1 and hot is None:
-        # broadcastable layer side: LEFT cell-join + one aggregation
-        # replaces inner PIP → pivot → join-back (same values, one
-        # SortMergeJoin + exchange fewer — r06, oracle-pinned)
-        ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
-    else:
-        ring_matches = pip_join_rect(
-            rings, layers, res=res, how="inner", point_id="xy_id", salt=salt, hot=hot
-        ).select("xy_id", "ring_i", "layer", "db")
-        ring_pivot = rings.select("xy_id", "ring_i").join(
-            pivot_layer_max(ring_matches, ["xy_id", "ring_i"]), ["xy_id", "ring_i"], "left"
+    if nodata_polys is None:
+        m = 0.1  # quantization moves a sample ≤0.05 m; margin 2×
+        pre = edges.filter(
+            ((F.col("x1") >= nx0 - m) | (F.col("x2") >= nx0 - m))
+            & ((F.col("x1") < nx1 + m) | (F.col("x2") < nx1 + m))
+            & ((F.col("y1") >= ny0 - m) | (F.col("y2") >= ny0 - m))
+            & ((F.col("y1") < ny1 + m) | (F.col("y2") < ny1 + m))
         )
+        miss = located(with_xy_id(sample_edges(pre)), nodata_rect).filter(no_noise)
+    else:
+        miss = pts.filter(F.col("missing_noises"))
+    rings = ring_points(miss.select("xy_id", "x", "y"), radius=ring_radius,
+                        count=ring_count, keep=["xy_id"], index_col="ring_i")
+    ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
     interp_vals = interpolate_missing(ring_pivot, ring_count=ring_count)
-    # interp_vals carries exactly one row per miss key (rings preserve
-    # every miss point; both groupBys preserve keys), so the old
-    # ``miss ⟕ interp_vals`` reassembly join was the identity — dropped
     interp = aggregate_noise_values(interp_vals, prefer_syke=True).select(*SAMPLE_COLS)
 
     all_samples = normal.unionByName(interp)
@@ -239,8 +201,10 @@ def _left_cell_pivot(
     candidate rows reach the aggregation (measured at bench scale:
     53M → 33M rows, 2.36 → 1.79 s for the big location pass) at the
     cost of ~4× cover rows on the (tiny, broadcast) polygon side.
-    Callers bump only when the point side is large; the cover explode
-    stays bounded by the split_by_cover_size valve upstream."""
+    Callers bump only when the point side is large. Nothing bounds the
+    cover explode here: no flagship path applies split_by_cover_size,
+    so a layer polygon spanning n cells at the (bumped) resolution
+    becomes n broadcast rows."""
     from hope_graph_builder_spark.operators.spatial_join import (
         CELL,
         with_cover_cells,
@@ -288,7 +252,7 @@ def location_exposures(
     x / y are pure functions of xy_id, so they are NOT carried through
     the shuffle as first() buffers — callers re-derive them from xy_id
     (measured: dropping the derivable columns trims the fused partial
-    rows ~19%, the one place this path out-shuffled the explicit one).
+    rows ~19%).
 
     ``strip`` pre-filters samples to a rect BEFORE the join (the
     flagship's miss-branch recompute pushes the nodata filter down to
@@ -314,190 +278,6 @@ def location_exposures(
     return _left_cell_pivot(sq, layers, res, keys=["xy_id"], res_bump=1)
 
 
-def _final_samples_fused_dedup(
-    samples: DataFrame,
-    layers: DataFrame,
-    nodata_rect: tuple[float, float, float, float],
-    res: int,
-    ring_radius: float,
-    ring_count: int,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """Broadcast-PIP fast path: dedup + PIP + pivot in ONE shuffle.
-
-    The old shape was distinct(xy_id) → inner cell-join → groupBy
-    pivot → join-back (3 shuffles of xy_id-sized data). Here the raw
-    samples LEFT-cell-join the broadcast layer cover at their QUANTIZED
-    coordinates (identical evaluation points, so identical values) and
-    one groupBy(xy_id) with map-side combine is simultaneously the
-    dedup AND the per-layer max pivot; unmatched locations survive via
-    the left join. Measured at 4N/MULT=400: 42.5 → ~35 s end-to-end.
-    Only for the broadcast case — the salted/hot shuffle path and
-    polygon nodata keep the explicit-stage shape.
-
-    r06 miss-branch shape (guide §2.4 — remove shuffles outright; each
-    step oracle-pinned identical by the flagship queries):
-    - ``edges`` enables a bbox prefilter for the strip recompute: only
-      edges whose bbox (±0.1 m, covering the 0.05 m quantization shift)
-      intersects the nodata strip can yield strip samples, so the
-      recompute explodes a tiny fraction instead of every edge, and the
-      OR-form predicate pushes down to the parquet scan.
-    - the ring pivot is a LEFT broadcast cell-join + one aggregation
-      (``_left_cell_pivot``) instead of inner PIP → pivot → join-back
-      (removes one SortMergeJoin + exchange).
-    - ``interp_vals`` has exactly one row per ``miss`` key by
-      construction (every miss point spawns ring_count ring rows, the
-      left join preserves them, both groupBys preserve keys), so the
-      old ``miss ⟕ interp_vals`` reassembly join was the identity —
-      dropped (removes the second SortMergeJoin + exchange, and with
-      it 2 of the 3 strip recomputes of the whole sample explode)."""
-    nx0, ny0, nx1, ny1 = nodata_rect
-
-    def build_pts(strip_only: bool) -> DataFrame:
-        # miss-branch recompute (strip_only): the nodata filter pushes
-        # all the way down to the sample explode — and, when the raw
-        # edges are available, below it, to the edge scan itself
-        src = samples
-        if strip_only and edges is not None:
-            m = 0.1  # quantization moves a sample ≤0.05 m; margin 2×
-            pre = edges.filter(
-                ((F.col("x1") >= nx0 - m) | (F.col("x2") >= nx0 - m))
-                & ((F.col("x1") < nx1 + m) | (F.col("x2") < nx1 + m))
-                & ((F.col("y1") >= ny0 - m) | (F.col("y2") >= ny0 - m))
-                & ((F.col("y1") < ny1 + m) | (F.col("y2") < ny1 + m))
-            )
-            src = with_xy_id(sample_edges(pre))
-        agg = location_exposures(
-            src, layers, res, strip=nodata_rect if strip_only else None
-        )
-        x = (F.floor(F.col("xy_id") / 10_000_000) / 10.0)
-        y = (F.pmod(F.col("xy_id"), 10_000_000) / 10.0)
-        return agg.select(
-            "xy_id",
-            x.alias("x"),
-            y.alias("y"),
-            ((x >= nx0) & (x < nx1) & (y >= ny0) & (y < ny1)).alias("nodata_zone"),
-            *LAYER_NAMES,
-        )
-
-    def no_noise_pred() -> F.Column:
-        cond = None
-        for c in LAYER_NAMES:
-            cur = F.col(c).isNull()
-            cond = cur if cond is None else (cond & cur)
-        return cond
-
-    pts = _persist(build_pts(strip_only=False)).withColumn(
-        "missing_noises", F.col("nodata_zone") & no_noise_pred()
-    )
-    normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(*SAMPLE_COLS)
-
-    if os.environ.get("HGBS_PERSIST"):
-        miss = pts.filter(F.col("missing_noises")).select("xy_id", "x", "y")
-    else:
-        miss = build_pts(strip_only=True).filter(no_noise_pred()).select("xy_id", "x", "y")
-    rings = ring_points(miss, radius=ring_radius, count=ring_count,
-                        keep=["xy_id"], index_col="ring_i")
-    ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
-    interp_vals = interpolate_missing(ring_pivot, ring_count=ring_count)
-    interp = aggregate_noise_values(interp_vals, prefer_syke=True).select(*SAMPLE_COLS)
-
-    all_samples = normal.unionByName(interp)
-    return samples.join(all_samples, "xy_id", "left")
-
-
-def _final_samples_nodedup(
-    edges: DataFrame,
-    layers: DataFrame,
-    nodata_rect: tuple[float, float, float, float],
-    res: int,
-    ring_radius: float,
-    ring_count: int,
-    salt: int,
-    hot: DataFrame | None,
-) -> DataFrame:
-    """PIP-every-sample strategy (see noise_final_samples docstring).
-    Each sample is evaluated at its QUANTIZED location (xy_id bin
-    center) — exactly the coordinates the dedup path evaluates — so
-    per-location values, and therefore per-edge aggregates, are
-    identical. Salting is ignored: the layer side is broadcast here
-    (no shuffle to skew); use dedup_xy=True for the salted shuffle
-    path."""
-    from hope_graph_builder_spark.operators.spatial_join import (
-        CELL,
-        with_cover_cells,
-        with_point_cell,
-    )
-
-    samples = with_xy_id(sample_edges(edges, index_col="_si"))
-    s = samples.select(
-        "edge_id", "_si", "sample_len", "xy_id",
-        (F.floor(F.col("xy_id") / 10_000_000) / 10.0).alias("x"),
-        (F.pmod(F.col("xy_id"), 10_000_000) / 10.0).alias("y"),
-    )
-    nx0, ny0, nx1, ny1 = nodata_rect
-    s = s.withColumn(
-        "nodata_zone",
-        (F.col("x") >= nx0) & (F.col("x") < nx1) & (F.col("y") >= ny0) & (F.col("y") < ny1),
-    )
-    # LEFT cell-cover broadcast join keeps unmatched samples in-line
-    # (no separate match/join-back pass); refine becomes the match value
-    p = with_point_cell(s, "x", "y", res)
-    g = F.broadcast(with_cover_cells(layers, "minx", "miny", "maxx", "maxy", res))
-    cand = p.join(g, CELL, "left")
-    hit = (
-        (F.col("x") >= F.col("minx")) & (F.col("x") < F.col("maxx"))
-        & (F.col("y") >= F.col("miny")) & (F.col("y") < F.col("maxy"))
-    )
-    rows = cand.select(
-        "edge_id", "_si", "sample_len", "xy_id", "x", "y", "nodata_zone",
-        F.when(hit, F.col("layer")).alias("layer"),
-        F.when(hit, F.col("db")).alias("db"),
-    )
-    pts = rows.groupBy("edge_id", "_si").agg(
-        F.first("sample_len").alias("sample_len"),
-        F.first("xy_id").alias("xy_id"),
-        F.first("x").alias("x"),
-        F.first("y").alias("y"),
-        F.first("nodata_zone").alias("nodata_zone"),
-        *[F.max(F.when(F.col("layer") == c, F.col("db"))).alias(c) for c in LAYER_NAMES],
-    )
-
-    no_noise = None
-    for c in LAYER_NAMES:
-        cond = F.col(c).isNull()
-        no_noise = cond if no_noise is None else (no_noise & cond)
-    pts = pts.withColumn("missing_noises", F.col("nodata_zone") & no_noise)
-    pts = _persist(pts)
-
-    carry = ["edge_id", "_si", "sample_len", "xy_id"]
-    normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(
-        *carry, *SAMPLE_COLS[1:]
-    )
-
-    miss = pts.filter(F.col("missing_noises")).select(*carry, "x", "y")
-    rings = ring_points(
-        miss, radius=ring_radius, count=ring_count,
-        keep=["edge_id", "_si"], index_col="ring_i",
-    )
-    ring_matches = pip_join_rect(
-        rings, layers, res=res, how="inner", point_id="ring_i"
-    ).select("edge_id", "_si", "ring_i", "layer", "db")
-    ring_pivot = rings.select("edge_id", "_si", "ring_i").join(
-        pivot_layer_max(ring_matches, ["edge_id", "_si", "ring_i"]),
-        ["edge_id", "_si", "ring_i"],
-        "left",
-    )
-    interp_vals = interpolate_missing(
-        ring_pivot, ring_count=ring_count, key=["edge_id", "_si"]
-    )
-    interp = aggregate_noise_values(
-        miss.join(interp_vals, ["edge_id", "_si"], "left"), prefer_syke=True
-    ).select(*carry, *SAMPLE_COLS[1:])
-
-    return normal.unionByName(interp).drop("_si")
-
-
 def run_noise_join(
     edges: DataFrame,
     layers: DataFrame,
@@ -505,17 +285,14 @@ def run_noise_join(
     res: int = 7,
     ring_radius: float = 7.0,
     ring_count: int = 20,
-    salt: int = 1,
-    hot: DataFrame | None = None,
     extent_rect: tuple[float, float, float, float] | None = None,
-    dedup_xy: bool = True,
     nodata_polys: DataFrame | None = None,
     nodata_res: int = 4,
-    fused_dedup: bool = True,
     extent_polys: list | None = None,
 ) -> DataFrame:
     """Full flagship: → edge_noises(edge_id, noises map, noise_source,
-    noise_sources map).
+    noise_sources map). ``nodata_polys`` / ``nodata_res``: see
+    ``noise_final_samples``.
 
     ``extent_rect`` enables the J3 three-valued semantics (reference
     noise_graph_update.py:36-44, gpd.sjoin op='within'): edges whose
@@ -532,14 +309,11 @@ def run_noise_join(
     the endpoint-only predicate exactly when a segment exits and
     re-enters a concave region. Mutually exclusive with
     ``extent_rect``."""
-    if nodata_polys is not None and not dedup_xy:
-        raise ValueError("nodata_polys requires the dedup_xy=True strategy")
     if extent_rect is not None and extent_polys is not None:
         raise ValueError("pass extent_rect OR extent_polys, not both")
     final = noise_final_samples(
-        edges, layers, nodata_rect, res, ring_radius, ring_count, salt, hot,
-        dedup_xy=dedup_xy, nodata_polys=nodata_polys, nodata_res=nodata_res,
-        fused_dedup=fused_dedup,
+        edges, layers, nodata_rect, res, ring_radius, ring_count,
+        nodata_polys=nodata_polys, nodata_res=nodata_res,
     )
     # SLIM all-numeric projection into the fused single-pass edge
     # aggregate: ONE exchange for the entire tail (the old 2-pass +

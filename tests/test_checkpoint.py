@@ -144,3 +144,37 @@ def test_webtext_ingest_checkpointed_kill_resume(spark, tmpdir):
     )
     assert c_again["signals"]["groups_written"] == 0
     assert c_again["final"]["groups_written"] == 0
+
+
+def test_run_pipeline_entry_resumes(spark, tmp_path, monkeypatch, capsys):
+    """tools/run_pipeline.py (the spark-submit entry) end to end on the
+    tiny fixture: the first run writes every tile group of the flagship
+    output, a re-submit skips all of them and writes none, and the
+    committed stage holds exactly one row per edge."""
+    import json
+    import os
+    import runpy
+    import sys
+
+    script = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "run_pipeline.py",
+    )
+    out = str(tmp_path / "noise_out")
+    monkeypatch.setattr(sys, "argv", [script, "--sf-dir", SF_TINY, "--out", out])
+
+    def submit() -> dict:
+        runpy.run_path(script, run_name="__main__")
+        lines = capsys.readouterr().out.strip().splitlines()
+        return json.loads(lines[-1])
+
+    first = submit()
+    assert first["groups_skipped"] == 0 and first["groups_written"] > 0
+    again = submit()
+    assert again["groups_skipped"] == first["groups_written"]
+    assert again["groups_written"] == 0
+
+    got = read_stage(spark, out, "edge_noises")
+    n_edges = synth.page_edges(spark, SF_TINY).count()
+    assert got.count() == n_edges
+    assert got.select("edge_id").distinct().count() == n_edges

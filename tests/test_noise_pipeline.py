@@ -340,12 +340,24 @@ def test_nodata_polygon_with_hole(spark, edges, layers):
     assert out.count() > 0
 
 
-def test_fused_and_explicit_dedup_identical(spark, edges, layers):
-    """The fused one-shuffle dedup+PIP+pivot must be row-identical to
-    the explicit distinct→PIP→pivot→join-back shape (both also
-    oracle-pinned; this locks the equivalence engine-side)."""
-    a = run_noise_join(edges, layers, synth.NODATA_RECT, res=9, fused_dedup=True)
-    b = run_noise_join(edges, layers, synth.NODATA_RECT, res=9, fused_dedup=False)
+def test_nodata_polygon_and_rect_identical(spark, edges, layers, edge_noises):
+    """The nodata zone given as a one-ring WKB polygon of NODATA_RECT
+    (even-odd PIP flag, miss branch read from the flagged locations)
+    must give row-identical flagship output to the rect form (native
+    predicate, strip-only miss recompute). The layer grid leaves the
+    strip uncovered and default 7 m rings inside it hit no layer, so
+    150 m rings are used: they reach the layers beside the strip and
+    give the kNN gap-fill values to compare."""
+    from hope_graph_builder_spark.spatial.wkb import rect_to_wkb
+
+    nx0, ny0, nx1, ny1 = synth.NODATA_RECT
+    polys = spark.createDataFrame(
+        [(0, bytearray(rect_to_wkb(nx0, ny0, nx1, ny1)),
+          float(nx0), float(ny0), float(nx1), float(ny1))],
+        "poly_id long, geom binary, minx double, miny double, maxx double, maxy double",
+    )
+    a = run_noise_join(edges, layers, None, res=9, ring_radius=150.0, nodata_polys=polys)
+    b = run_noise_join(edges, layers, synth.NODATA_RECT, res=9, ring_radius=150.0)
 
     def canon(df):
         return df.select(
@@ -358,3 +370,6 @@ def test_fused_and_explicit_dedup_identical(spark, edges, layers):
     x, y = canon(a), canon(b)
     assert x.exceptAll(y).count() == 0
     assert y.exceptAll(x).count() == 0
+    # not vacuous: the 150 m gap-fill changes the output (edge_noises,
+    # with 7 m rings, equals the output without any nodata zone)
+    assert y.exceptAll(canon(edge_noises)).count() > 0

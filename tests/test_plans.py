@@ -116,21 +116,29 @@ def test_f16_distinct_before_global_window(spark):
 
 
 def test_status_store_stage_metrics_accessible(spark):
-    """tools/shuffle_audit.py reads shuffle bytes from the
-    AppStatusStore via a versioned py4j signature — pin that the
-    5-arg stageList call keeps working with the UI disabled, so the
-    perf-evidence tool doesn't rot silently."""
-    import sys
+    """perfbench/trace.py's SparkStats reads per-span engine counters
+    from the AppStatusStore through versioned py4j signatures
+    (statusTracker().getJobIdsForGroup, 5-arg statusStore().stageData,
+    taskSummary) — pin that they keep working with the UI disabled and
+    count exactly the jobs of the span's group, so the benchmark's
+    per-layer metrics don't rot silently."""
+    from perfbench.trace import SparkStats, Tracer
 
-    sys.path.insert(0, "tools")
-    from shuffle_audit import stage_totals
-
-    before = stage_totals(spark)
-    spark.range(100_000).groupBy((F.col("id") % 7).alias("k")).count().collect()
-    after = stage_totals(spark)
-    assert after["stages"] > before["stages"]
-    assert after["shuffle_write_bytes"] > before["shuffle_write_bytes"]
-    assert after["executor_run_ms"] >= before["executor_run_ms"]
+    sc = spark.sparkContext
+    tracer = Tracer(sc, "status-store-pin")
+    stats = SparkStats(sc, slots=sc.defaultParallelism)
+    with tracer.span("shuffle") as s:
+        spark.range(100_000).groupBy((F.col("id") % 7).alias("k")).count().collect()
+    got = stats.for_groups(tracer.groups(s), s.wall)
+    assert got["spark.stages"] >= 2
+    assert got["spark.tasks"] >= got["spark.stages"]
+    assert got["spark.shuffle_write_bytes"] > 0
+    assert got["spark.shuffle_read_bytes"] > 0
+    assert got["spark.task_s"] > 0
+    assert got["spark.task_skew"] >= 1.0
+    # a job outside the span's group is not attributed to it
+    spark.range(10_000).groupBy((F.col("id") % 3).alias("k")).count().collect()
+    assert stats.for_groups(tracer.groups(s), s.wall)["spark.stages"] == got["spark.stages"]
 
 
 def test_asof_join_single_keyed_sort_no_range_join(spark):

@@ -24,7 +24,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--mult", type=int, default=1)
     ap.add_argument("--res", type=int, default=9)
-    ap.add_argument("--salt", type=int, default=1)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -42,7 +41,7 @@ def main() -> None:
         else synth.page_edges(spark, args.sf_dir)
     )
     layers = synth.noise_layers(spark)
-    noises = run_noise_join(edges, layers, synth.NODATA_RECT, res=args.res, salt=args.salt)
+    noises = run_noise_join(edges, layers, synth.NODATA_RECT, res=args.res)
     # partition the output by tile group of the edge start point for
     # checkpointed, resumable writes
     out = with_tile_group(
