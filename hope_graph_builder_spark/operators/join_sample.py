@@ -294,21 +294,12 @@ def dwithin_uniform_sample(
     from hope_graph_builder_spark.operators.spatial_join import (
         CELL,
         point_segment_dist2,
-        with_cover_cells,
+        with_dist_cover,
         with_point_cell,
     )
 
     d = F.lit(float(dist))
-    seg = (
-        segments
-        .withColumn("_minx", F.least("x1", "x2") - d)
-        .withColumn("_maxx", F.greatest("x1", "x2") + d)
-        .withColumn("_miny", F.least("y1", "y2") - d)
-        .withColumn("_maxy", F.greatest("y1", "y2") + d)
-    )
-    g = with_cover_cells(seg, "_minx", "_miny", "_maxx", "_maxy", res).select(
-        CELL, seg_id
-    )
+    g = with_dist_cover(segments, dist, res).select(CELL, seg_id)
     p = with_point_cell(points, x, y, res).select(CELL, point_id)
     cand = join_uniform_sample(
         p, g, CELL, k * oversample, id_a=point_id, id_b=seg_id, salt=salt

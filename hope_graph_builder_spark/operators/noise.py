@@ -1,10 +1,11 @@
 """Noise-exposure aggregation semantics (reference operators A2–A7).
 
-Column-native re-expression of
+Native re-expression of
 `/root/reference/src/noise_graph_join/utils.py:112-275`. All row-wise
-`df.apply(..., axis=1)` lambdas become Column expressions; the only
-grouped aggregations are ordinary groupBy/pivot (map-side partials,
-one shuffle each).
+`df.apply(..., axis=1)` lambdas become native expressions, written as
+SQL fragments (one JVM parse each, see README "Building plans"); the
+only grouped aggregations are ordinary groupBy/pivot (map-side
+partials, one shuffle each).
 
 Layer model (synthetic graft of the reference's 13 layers,
 `noise_layers.csv`): providers {hel, syke} × sources
@@ -16,8 +17,10 @@ noise_graph_join.py:108).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hope_graph_builder_spark.functions.sqltext import ident
 
 SOURCES = ["road", "train", "tram", "metro"]
 PROVIDERS = ["hel", "syke"]
@@ -36,12 +39,14 @@ def pivot_layer_max(matches: DataFrame, key: str | list[str] = "xy_id") -> DataF
     same output schema."""
     keys = [key] if isinstance(key, str) else key
     return matches.groupBy(*keys).agg(
-        *[F.max(F.when(F.col("layer") == c, F.col("db"))).alias(c) for c in LAYER_NAMES]
+        *[F.expr(f"max(CASE WHEN layer = '{c}' THEN db END) AS {c}") for c in LAYER_NAMES]
     )
 
 
-def _first_finite(cols: list[str]) -> Column:
-    return F.coalesce(*[F.col(c).cast("double") for c in cols])
+def _with_sql(df: DataFrame, cols: dict[str, str]) -> DataFrame:
+    """One projection adding (or replacing) every ``name: SQL`` column
+    of one dependency level."""
+    return df.withColumns({c: F.expr(e) for c, e in cols.items()})
 
 
 def aggregate_noise_values(samples: DataFrame, prefer_syke: bool = False) -> DataFrame:
@@ -57,52 +62,42 @@ def aggregate_noise_values(samples: DataFrame, prefer_syke: bool = False) -> Dat
     NaN), so SQL coalesce == the reference's first-finite.
     """
     providers = PROVIDERS[::-1] if prefer_syke else PROVIDERS
-    df = samples
-    for s in SOURCES:
-        df = df.withColumn(s, _first_finite([f"{p}_{s}" for p in providers]))
-    df = df.withColumn("rail", F.greatest("train", "tram", "metro"))
-    df = df.withColumn("n_max", F.greatest(*SOURCES))
-    pairs = F.array(*[F.struct(F.lit(s).alias("name"), F.col(s).alias("val")) for s in SOURCES])
-    df = df.withColumn(
-        "n_max_sources",
-        F.when(
-            F.col("n_max").isNull(), F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.filter(pairs, lambda p: p["val"] == F.col("n_max")), lambda p: p["name"]
-            )
-        ),
+    df = _with_sql(samples, {
+        s: "coalesce(" + ", ".join(f"CAST({p}_{s} AS DOUBLE)" for p in providers) + ")"
+        for s in SOURCES
+    })
+    df = _with_sql(df, {
+        "rail": "greatest(train, tram, metro)",
+        "n_max": f"greatest({', '.join(SOURCES)})",
+    })
+    pairs = ", ".join(f"struct('{s}' AS name, {s} AS val)" for s in SOURCES)
+    # n_max_mask is the bitmask twin of n_max_sources (bit i ⇔
+    # SOURCES[i] attains n_max): all-numeric, so the hot path
+    # caches/shuffles ints instead of string arrays (array-column cache
+    # build measured ~10× slower)
+    mask = " + ".join(
+        ["0"] + [f"CASE WHEN {s} = n_max THEN {1 << i} ELSE 0 END" for i, s in enumerate(SOURCES)]
     )
-    # bitmask twin of n_max_sources (bit i ⇔ SOURCES[i] attains n_max):
-    # all-numeric, so the hot path caches/shuffles ints instead of
-    # string arrays (array-column cache build measured ~10× slower)
-    mask = F.lit(0)
-    for i, s in enumerate(SOURCES):
-        mask = mask + F.when(F.col(s) == F.col("n_max"), F.lit(1 << i)).otherwise(F.lit(0))
-    df = df.withColumn("n_max_mask", F.coalesce(mask, F.lit(0)))
+    df = _with_sql(df, {
+        "n_max_sources": (
+            "CASE WHEN n_max IS NULL THEN CAST(array() AS ARRAY<STRING>)"
+            f" ELSE transform(filter(array({pairs}), _p -> _p.val = n_max), _p -> _p.name) END"
+        ),
+        "n_max_mask": f"coalesce({mask}, 0)",
+    })
     # n_max_adj counts co-max sources via the mask's popcount instead of
     # size(n_max_sources): identical by construction (bit i set ⇔ source
     # i in the list; n_max null ⇒ mask 0 ⇔ empty list), but it frees
     # column pruning to ELIMINATE the per-row string-array build when a
     # consumer (the flagship slim tail) never reads n_max_sources (r06,
     # guide §2.3 — don't compute what you throw away)
-    cnt = F.bit_count("n_max_mask")
-    df = df.withColumn(
-        "n_max_adj",
-        F.when(cnt > 1, F.col("n_max") + cnt)
-        .when(cnt == 1, F.col("n_max"))
-        .otherwise(F.lit(None).cast("double")),
-    )
-    return df
-
-
-def quantile_nearest_agg(values: Column, n: int, q: float = 0.7) -> Column:
-    """Exact nearest-rank quantile over a collected list of exactly
-    ``n`` values — reproduces pandas ``quantile(q, 'nearest')`` used by
-    the kNN interpolation (noise_graph_join.py:93): sorted[round(q*(n-1))].
-    Native sort_array + element_at; NOT percentile_approx."""
-    idx = int(q * (n - 1) + 0.5) + 1  # 1-based
-    return F.element_at(F.sort_array(values), idx)
+    cnt = "bit_count(n_max_mask)"
+    return _with_sql(df, {
+        "n_max_adj": (
+            f"CASE WHEN {cnt} > 1 THEN n_max + {cnt} WHEN {cnt} = 1 THEN n_max"
+            " ELSE CAST(NULL AS DOUBLE) END"
+        ),
+    })
 
 
 def interpolate_missing(
@@ -116,16 +111,19 @@ def interpolate_missing(
     the pivot_layer_max output joined back to all ring points so every
     key has exactly ring_count rows (unmatched → nulls).
     """
+    # exact nearest-rank quantile, pandas ``quantile(q, 'nearest')``
+    # (noise_graph_join.py:93): sorted[round(q*(n-1))], 1-based here;
+    # sort_array + element_at, NOT percentile_approx
+    rank = int(q * (ring_count - 1) + 0.5) + 1
     aggs = [
-        quantile_nearest_agg(
-            F.collect_list(F.coalesce(F.col(c).cast("double"), F.lit(0.0))), ring_count, q
-        ).alias(c)
+        F.expr(
+            f"element_at(sort_array(collect_list(coalesce(CAST({c} AS DOUBLE), 0.0D))), {rank})"
+            f" AS {c}"
+        )
         for c in LAYER_NAMES
     ]
     out = ring_pivot.groupBy(key).agg(*aggs)
-    for c in LAYER_NAMES:
-        out = out.withColumn(c, F.when(F.col(c) != 0.0, F.col(c)))
-    return out
+    return _with_sql(out, {c: f"CASE WHEN {c} != 0.0D THEN {c} END" for c in LAYER_NAMES})
 
 
 def edge_db_rows(final_samples: DataFrame, edge_id: str = "edge_id") -> DataFrame:
@@ -213,89 +211,41 @@ def aggregate_noises_by_edge(
     per distinct (edge, adj, mask)) — strictly fewer bytes than the old
     partial collect buffers it replaces.
     """
+    eid = ident(edge_id)
     pre = final_samples.groupBy(edge_id, "n_max_adj", "n_max_mask").agg(
-        F.count(F.lit(1)).cast("int").alias("_c"),
-        F.min("sample_len").alias("_psl"),
-    )
-    rows_col = F.collect_list(
-        F.struct(
-            F.col("n_max_adj").alias("adj"),
-            F.col("n_max_mask").alias("mask"),
-            F.col("_c").alias("c"),
-        )
+        F.expr("CAST(count(1) AS INT) AS _c"), F.expr("min(sample_len) AS _psl")
     )
     g = pre.groupBy(edge_id).agg(
-        rows_col.alias("_rows"), F.min("_psl").alias("_sl")
+        F.expr("collect_list(struct(n_max_adj AS adj, n_max_mask AS mask, _c AS c)) AS _rows"),
+        F.expr("min(_psl) AS _sl"),
     )
 
-    adjs = F.sort_array(
-        F.array_distinct(
-            F.transform(
-                F.filter(F.col("_rows"), lambda r: r["adj"].isNotNull()),
-                lambda r: r["adj"],
-            )
-        )
+    def weight(pred: str) -> str:
+        """Σ c over the ``_rows`` entries ``_r`` that satisfy ``pred``."""
+        return f"aggregate(filter(_rows, _r -> {pred}), 0, (_acc, _r) -> _acc + _r.c)"
+
+    adjs = (
+        "sort_array(array_distinct(transform("
+        "filter(_rows, _r -> _r.adj IS NOT NULL), _r -> _r.adj)))"
     )
     # exposure per dB class = round(count × sample_len, 5)  (A2/A7)
-    noises = F.map_from_entries(
-        F.transform(
-            adjs,
-            lambda a: F.struct(
-                a.cast("int").alias("db"),
-                F.bround(
-                    F.aggregate(
-                        F.filter(F.col("_rows"), lambda r: r["adj"] == a),
-                        F.lit(0),
-                        lambda acc, r: acc + r["c"],
-                    )
-                    * F.col("_sl"),
-                    5,
-                ).alias("exposure"),
-            ),
-        )
+    noises = (
+        f"map_from_entries(transform({adjs}, _a -> struct(CAST(_a AS INT) AS db,"
+        f" bround({weight('_r.adj = _a')} * _sl, 5) AS exposure)))"
     )
-
-    def src_cnt(i: int) -> Column:
-        return F.aggregate(
-            F.filter(
-                F.col("_rows"),
-                lambda r: F.shiftright(r["mask"], i).bitwiseAND(F.lit(1)) == 1,
-            ),
-            F.lit(0),
-            lambda acc, r: acc + r["c"],
-        )
-
-    pairs = F.filter(
-        F.array(
-            *[
-                F.struct(
-                    src_cnt(i).alias("cnt"),
-                    F.lit(-i).alias("negprio"),
-                    F.lit(s).alias("src"),
-                )
-                for i, s in enumerate(SOURCES)
-            ]
-        ),
-        lambda p: p["cnt"] > 0,
-    )
+    pairs = "filter(array({}), _p -> _p.cnt > 0)".format(", ".join(
+        f"struct({weight(f'(shiftright(_r.mask, {i}) & 1) = 1')} AS cnt, {-i} AS negprio,"
+        f" '{s}' AS src)"
+        for i, s in enumerate(SOURCES)
+    ))
     # mode with the deterministic tie-break: max count, then the fixed
     # source order (struct ordering: cnt, then -priority)
-    noise_source = F.when(F.size(pairs) > 0, F.array_max(pairs)["src"]).otherwise(
-        F.lit("")
-    )
-    noise_sources = F.map_from_entries(
-        F.sort_array(
-            F.transform(
-                pairs, lambda p: F.struct(p["src"].alias("src"), p["cnt"].alias("cnt"))
-            )
-        )
-    )
-
-    out = g.select(
-        edge_id,
-        noises.alias("noises"),
-        noise_source.alias("noise_source"),
-        noise_sources.alias("noise_sources"),
+    out = g.selectExpr(
+        eid,
+        f"{noises} AS noises",
+        f"CASE WHEN size({pairs}) > 0 THEN array_max({pairs}).src ELSE '' END AS noise_source",
+        "map_from_entries(sort_array(transform("
+        f"{pairs}, _p -> struct(_p.src AS src, _p.cnt AS cnt)))) AS noise_sources",
     )
 
     if edges_all is None and extent_flag is None:
@@ -304,22 +254,25 @@ def aggregate_noises_by_edge(
         return out
     if edges_all is None:
         edges_all = final_samples.select(edge_id).distinct()
-    empty_noises = F.map_from_arrays(
-        F.array().cast("array<int>"), F.array().cast("array<double>")
-    )
-    empty_sources = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<int>")
-    )
-    in_extent = F.lit(True) if extent_flag is None else F.col(extent_flag)
-    return edges_all.join(out, edge_id, "left").select(
-        edge_id,
-        F.when(in_extent, F.coalesce("noises", empty_noises))
-        .otherwise(F.lit(None).cast("map<int,double>"))
-        .alias("noises"),
-        F.when(in_extent, F.coalesce("noise_source", F.lit("")))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("noise_source"),
-        F.when(in_extent, F.coalesce("noise_sources", empty_sources))
-        .otherwise(F.lit(None).cast("map<string,int>"))
-        .alias("noise_sources"),
+    in_extent = "true" if extent_flag is None else ident(extent_flag)
+
+    def gated(col: str, empty: str, typ: str) -> str:
+        return (
+            f"CASE WHEN {in_extent} THEN coalesce({col}, {empty})"
+            f" ELSE CAST(NULL AS {typ}) END AS {col}"
+        )
+
+    return edges_all.join(out, edge_id, "left").selectExpr(
+        eid,
+        gated(
+            "noises",
+            "map_from_arrays(CAST(array() AS ARRAY<INT>), CAST(array() AS ARRAY<DOUBLE>))",
+            "MAP<INT, DOUBLE>",
+        ),
+        gated("noise_source", "''", "STRING"),
+        gated(
+            "noise_sources",
+            "map_from_arrays(CAST(array() AS ARRAY<STRING>), CAST(array() AS ARRAY<INT>))",
+            "MAP<STRING, INT>",
+        ),
     )

@@ -25,7 +25,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hope_graph_builder_spark.functions.sqltext import dbl, ident
+
 SAMPLING_INTERVAL_M = 3.0  # reference noise_graph_join.py:28
+
+
+def _sample_count_sql(length: str, interval: float) -> str:
+    # rint = IEEE half-even on the double — same banker's semantics as
+    # bround at scale 0 (validated vs DuckDB round_even on 500k values)
+    # without bround's per-row BigDecimal allocation
+    return (
+        f"greatest(CAST(1 AS BIGINT), CAST(rint(({length}) / {dbl(interval)}) AS BIGINT))"
+    )
+
+
+_EXPLODE_SAMPLES = "explode(sequence(CAST(0 AS BIGINT), _n - 1))"
 
 
 def sample_edges(
@@ -35,27 +49,41 @@ def sample_edges(
     index_col: str | None = None,
 ) -> DataFrame:
     """2-vertex edges (x1,y1,x2,y2,length) → sample points
-    (edge_id, sample_len, x, y). Pure Column arithmetic: sequence +
+    (edge_id, sample_len, x, y). Pure native arithmetic: sequence +
     explode replaces the reference's row_accumulator loop
     (utils.py:38-56)."""
-    # rint = IEEE half-even on the double — same banker's semantics as
-    # bround at scale 0 (validated vs DuckDB round_even on 500k values)
-    # without bround's per-row BigDecimal allocation
-    n = F.greatest(F.lit(1).cast("long"), F.rint(F.col("length") / F.lit(interval)).cast("long"))
     df = (
-        edges.withColumn("_n", n)
-        .withColumn("sample_len", F.col("length") / F.col("_n"))
-        .withColumn("_i", F.explode(F.sequence(F.lit(0).cast("long"), F.col("_n") - 1)))
-        .withColumn("_frac", (F.col("_i") + F.lit(0.5)) / F.col("_n"))
+        edges.withColumn("_n", F.expr(_sample_count_sql("length", interval)))
+        # sample_len before the explode: computed once per edge
+        .withColumn("sample_len", F.expr("length / _n"))
+        .withColumn("_i", F.expr(_EXPLODE_SAMPLES))
+        .withColumn("_frac", F.expr("(_i + 0.5D) / _n"))
     )
-    extra = [F.col("_i").alias(index_col)] if index_col else []
-    return df.select(
-        edge_id,
+    extra = [f"_i AS {ident(index_col)}"] if index_col else []
+    return df.selectExpr(
+        ident(edge_id),
         "sample_len",
         *extra,
-        (F.col("x1") + (F.col("x2") - F.col("x1")) * F.col("_frac")).alias("x"),
-        (F.col("y1") + (F.col("y2") - F.col("y1")) * F.col("_frac")).alias("y"),
+        "x1 + (x2 - x1) * _frac AS x",
+        "y1 + (y2 - y1) * _frac AS y",
     )
+
+
+def _segment_lengths_sql(xs: str, ys: str) -> str:
+    """array<double> of the segment lengths of the polyline whose
+    vertex arrays are the SQL operands ``xs``, ``ys``."""
+
+    def delta(a: str) -> str:
+        return f"(element_at({a}, CAST(_s + 1 AS INT)) - element_at({a}, CAST(_s AS INT)))"
+
+    return (
+        f"transform(sequence(1, size({xs}) - 1),"
+        f" _s -> sqrt({delta(xs)} * {delta(xs)} + {delta(ys)} * {delta(ys)}))"
+    )
+
+
+def _fold_sum_sql(arr: str) -> str:
+    return f"aggregate({arr}, 0.0D, (_a, _v) -> _a + _v)"
 
 
 def sample_polyline(
@@ -73,7 +101,7 @@ def sample_polyline(
     ``sample_edges`` stays the 2-vertex fast path (same semantics,
     asserted in tests).
 
-    Entirely native higher-order Column functions (no UDF):
+    Entirely native higher-order SQL functions (no UDF):
     per-segment lengths → running-sum boundaries (left fold, same
     association order as the DuckDB oracle ⇒ bit-identical doubles) →
     sequence+explode of sample indices → locate the segment whose
@@ -81,94 +109,47 @@ def sample_polyline(
     within it. Vertex counts on street edges are small (tens), so the
     O(n²) slice-folds stay in whole-stage codegen and beat any Arrow
     round-trip."""
-
-    def fold_sum(arr: Column) -> Column:
-        return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x)
-
-    nseg = F.size(xs) - 1
-    seg = F.transform(
-        F.sequence(F.lit(1), nseg),
-        lambda i: F.sqrt(
-            (F.element_at(F.col(xs), (i + 1).cast("int")) - F.element_at(F.col(xs), i.cast("int")))
-            * (F.element_at(F.col(xs), (i + 1).cast("int")) - F.element_at(F.col(xs), i.cast("int")))
-            + (F.element_at(F.col(ys), (i + 1).cast("int")) - F.element_at(F.col(ys), i.cast("int")))
-            * (F.element_at(F.col(ys), (i + 1).cast("int")) - F.element_at(F.col(ys), i.cast("int")))
-        ),
-    )
-    df = edges.withColumn("_seg", seg)
-    cums = F.transform(
-        F.sequence(F.lit(1), F.size("_seg")),
-        lambda i: fold_sum(F.slice("_seg", F.lit(1), i)),
-    )
+    qx, qy = ident(xs), ident(ys)
+    cums = f"transform(sequence(1, size(_seg)), _s -> {_fold_sum_sql('slice(_seg, 1, _s)')})"
     df = (
-        df.withColumn("_cum", cums)
-        .withColumn("_len", F.element_at("_cum", -1))
+        edges.withColumn("_seg", F.expr(_segment_lengths_sql(qx, qy)))
+        .withColumn("_cum", F.expr(cums))
+        .withColumn("_len", F.expr("element_at(_cum, -1)"))
+        .withColumn("_n", F.expr(_sample_count_sql("_len", interval)))
+        .withColumn("sample_len", F.expr("_len / _n"))
+        .withColumn("_i", F.expr(_EXPLODE_SAMPLES))
+        .withColumn("_d", F.expr("(_i + 0.5D) / _n * _len"))
+        # segment index (1-based): 1 + #interior boundaries ≤ d (the
+        # last boundary == length is excluded so d never lands past the
+        # end)
         .withColumn(
-            "_n",
-            F.greatest(F.lit(1).cast("long"), F.rint(F.col("_len") / F.lit(interval)).cast("long")),
+            "_j",
+            F.expr("CAST(1 + size(filter(slice(_cum, 1, size(_cum) - 1), _c -> _c <= _d)) AS INT)"),
         )
-        .withColumn("sample_len", F.col("_len") / F.col("_n"))
-        .withColumn("_i", F.explode(F.sequence(F.lit(0).cast("long"), F.col("_n") - 1)))
-        .withColumn("_d", (F.col("_i") + F.lit(0.5)) / F.col("_n") * F.col("_len"))
-    )
-    # segment index (1-based): 1 + #interior boundaries ≤ d (the last
-    # boundary == length is excluded so d never lands past the end)
-    j = (
-        F.lit(1)
-        + F.size(
-            F.filter(
-                F.slice("_cum", F.lit(1), F.size("_cum") - 1),
-                lambda c: c <= F.col("_d"),
-            )
+        # zero-length segment (repeated consecutive vertices) ⇒ snap to
+        # the segment start instead of dividing 0/0 into NaN
+        .withColumn(
+            "_t",
+            F.expr(
+                "CASE WHEN element_at(_seg, _j) > 0"
+                " THEN (_d - CASE WHEN _j = 1 THEN 0.0D ELSE element_at(_cum, _j - 1) END)"
+                " / element_at(_seg, _j) ELSE 0.0D END"
+            ),
         )
-    ).cast("int")
-    # zero-length segment (repeated consecutive vertices) ⇒ snap to the
-    # segment start instead of dividing 0/0 into NaN
-    seg_j = F.element_at("_seg", F.col("_j"))
-    df = df.withColumn("_j", j).withColumn(
-        "_t",
-        F.when(
-            seg_j > 0,
-            (
-                F.col("_d")
-                - F.when(F.col("_j") == 1, F.lit(0.0)).otherwise(
-                    F.element_at("_cum", F.col("_j") - 1)
-                )
-            )
-            / seg_j,
-        ).otherwise(F.lit(0.0)),
     )
-    extra = [F.col("_i").alias(index_col)] if index_col else []
-    return df.select(
-        edge_id,
+    extra = [f"_i AS {ident(index_col)}"] if index_col else []
+    return df.selectExpr(
+        ident(edge_id),
         "sample_len",
         *extra,
-        (
-            F.element_at(F.col(xs), F.col("_j"))
-            + (F.element_at(F.col(xs), F.col("_j") + 1) - F.element_at(F.col(xs), F.col("_j")))
-            * F.col("_t")
-        ).alias("x"),
-        (
-            F.element_at(F.col(ys), F.col("_j"))
-            + (F.element_at(F.col(ys), F.col("_j") + 1) - F.element_at(F.col(ys), F.col("_j")))
-            * F.col("_t")
-        ).alias("y"),
+        f"element_at({qx}, _j) + (element_at({qx}, _j + 1) - element_at({qx}, _j)) * _t AS x",
+        f"element_at({qy}, _j) + (element_at({qy}, _j + 1) - element_at({qy}, _j)) * _t AS y",
     )
 
 
 def polyline_length_expr(xs: str = "xs", ys: str = "ys") -> Column:
     """F3 general polyline length as one native fold."""
-    nseg = F.size(xs) - 1
-    seg = F.transform(
-        F.sequence(F.lit(1), nseg),
-        lambda i: F.sqrt(
-            (F.element_at(F.col(xs), (i + 1).cast("int")) - F.element_at(F.col(xs), i.cast("int")))
-            * (F.element_at(F.col(xs), (i + 1).cast("int")) - F.element_at(F.col(xs), i.cast("int")))
-            + (F.element_at(F.col(ys), (i + 1).cast("int")) - F.element_at(F.col(ys), i.cast("int")))
-            * (F.element_at(F.col(ys), (i + 1).cast("int")) - F.element_at(F.col(ys), i.cast("int")))
-        ),
-    )
-    return F.aggregate(seg, F.lit(0.0), lambda a, x: a + x)
+    return F.expr(_fold_sum_sql(_segment_lengths_sql(ident(xs), ident(ys))))
 
 
 def xy_id_expr(x: Column, y: Column) -> Column:
@@ -180,8 +161,16 @@ def xy_id_expr(x: Column, y: Column) -> Column:
     return qx * F.lit(10_000_000).cast("long") + qy
 
 
+def xy_id_sql(x: str, y: str) -> str:
+    """``xy_id_expr`` as SQL text over the SQL operands ``x``, ``y``."""
+    return (
+        f"CAST(rint(({x}) * 10.0D) AS BIGINT) * CAST(10000000 AS BIGINT)"
+        f" + CAST(rint(({y}) * 10.0D) AS BIGINT)"
+    )
+
+
 def with_xy_id(df: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
-    return df.withColumn("xy_id", xy_id_expr(F.col(x), F.col(y)))
+    return df.withColumn("xy_id", F.expr(xy_id_sql(ident(x), ident(y))))
 
 
 def ring_points(
@@ -196,18 +185,14 @@ def ring_points(
     noise_graph_join.py:75). Native trig, sequence + explode.
     ``index_col`` optionally exposes the ring-point index 0..count-1."""
     keep = keep or ["xy_id"]
-    theta = (
-        F.lit(2.0 * 3.141592653589793)
-        * (F.col("_i") + F.lit(0.5))
-        / F.lit(float(count))
-    )
-    extra = [F.col("_i").alias(index_col)] if index_col else []
+    theta = f"({dbl(2.0 * 3.141592653589793)} * (_i + 0.5D) / {dbl(count)})"
+    extra = [f"_i AS {ident(index_col)}"] if index_col else []
     return (
-        points.withColumn("_i", F.explode(F.sequence(F.lit(0), F.lit(count - 1))))
-        .select(
-            *keep,
+        points.withColumn("_i", F.expr(f"explode(sequence(0, {count - 1}))"))
+        .selectExpr(
+            *[ident(c) for c in keep],
             *extra,
-            (F.col("x") + F.lit(float(radius)) * F.cos(theta)).alias("x"),
-            (F.col("y") + F.lit(float(radius)) * F.sin(theta)).alias("y"),
+            f"x + {dbl(radius)} * cos({theta}) AS x",
+            f"y + {dbl(radius)} * sin({theta}) AS y",
         )
     )

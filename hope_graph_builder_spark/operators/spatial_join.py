@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from hope_graph_builder_spark.spatial import cell_id_expr, cover_bbox_expr
+from hope_graph_builder_spark.functions.sqltext import dbl, ident
+from hope_graph_builder_spark.spatial.cells import cell_id_sql, cover_bbox_sql
 from hope_graph_builder_spark.spatial.kernels import points_in_rings
 from hope_graph_builder_spark.spatial.wkb import multipolygon_from_wkb
 
@@ -37,17 +38,27 @@ SALT = "_salt"
 
 
 def with_point_cell(df: DataFrame, x: str, y: str, res: int, out: str = CELL) -> DataFrame:
-    return df.withColumn(out, cell_id_expr(F.col(x), F.col(y), res))
+    return df.withColumn(out, F.expr(cell_id_sql(ident(x), ident(y), res)))
 
 
 def with_cover_cells(
     df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: int, out: str = CELL
 ) -> DataFrame:
     """Explode each bbox into the cells it intersects (native sequence)."""
-    return df.withColumn(
-        out,
-        F.explode(cover_bbox_expr(F.col(minx), F.col(miny), F.col(maxx), F.col(maxy), res)),
+    cover = cover_bbox_sql(ident(minx), ident(miny), ident(maxx), ident(maxy), res)
+    return df.withColumn(out, F.expr(f"explode({cover})"))
+
+
+def with_dist_cover(segments: DataFrame, dist: float, res: int) -> DataFrame:
+    """Explode each 2-vertex segment (x1, y1, x2, y2) into the cells
+    that its bbox, expanded by ``dist`` on every side, intersects — the
+    candidate cover of a DWithin join."""
+    d = dbl(dist)
+    cover = cover_bbox_sql(
+        f"least(x1, x2) - {d}", f"least(y1, y2) - {d}",
+        f"greatest(x1, x2) + {d}", f"greatest(y1, y2) + {d}", res,
     )
+    return segments.withColumn(CELL, F.expr(f"explode({cover})"))
 
 
 def split_by_cover_size(
@@ -266,36 +277,29 @@ def dwithin_join(
     joined on the packed single-long (cell, salt) key. A dense page
     hotspot otherwise lands every pair of its cell in one task at
     100 TB. Salted ≡ unsalted is pytest-asserted."""
-    d = F.lit(float(dist))
-    seg = (
-        segments
-        .withColumn("_minx", F.least("x1", "x2") - d)
-        .withColumn("_maxx", F.greatest("x1", "x2") + d)
-        .withColumn("_miny", F.least("y1", "y2") - d)
-        .withColumn("_maxy", F.greatest("y1", "y2") + d)
-    )
-    g = with_cover_cells(seg, "_minx", "_miny", "_maxx", "_maxy", res).drop(
-        "_minx", "_miny", "_maxx", "_maxy"
-    )
+    g = with_dist_cover(segments, dist, res)
     p = with_point_cell(points, x, y, res)
     p, g, keys = _apply_salt(p, g, point_id, salt, hot)
     cand = g.join(F.broadcast(p) if broadcast_points else p, keys, "inner").drop(*keys)
-    return cand.filter(point_segment_dist2(x, y) <= d * d)
+    return cand.filter(f"{_dist2_sql(x, y)} <= {dbl(dist * dist)}")
+
+
+def _dist2_sql(x: str, y: str) -> str:
+    px, py = ident(x), ident(y)
+    dx, dy = "(x2 - x1)", "(y2 - y1)"
+    seg2 = f"({dx} * {dx} + {dy} * {dy})"
+    t_raw = f"((({px} - x1) * {dx} + ({py} - y1) * {dy}) / {seg2})"
+    t = f"(CASE WHEN {seg2} > 0 THEN least(greatest({t_raw}, 0.0D), 1.0D) ELSE 0.0D END)"
+    cx, cy = f"(x1 + {t} * {dx})", f"(y1 + {t} * {dy})"
+    return f"(({px} - {cx}) * ({px} - {cx}) + ({py} - {cy}) * ({py} - {cy}))"
 
 
 def point_segment_dist2(x: str, y: str):
-    """Exact point→segment distance² as one codegen'd Column (clamped
+    """Exact point→segment distance² as one codegen'd expression (clamped
     projection onto [x1,y1]-[x2,y2]; degenerate segment → endpoint
     distance). The identical association order is mirrored in every
     DuckDB oracle that shares it."""
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    seg2 = dx * dx + dy * dy
-    t_raw = ((F.col(x) - F.col("x1")) * dx + (F.col(y) - F.col("y1")) * dy) / seg2
-    t = F.when(seg2 > 0, F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))).otherwise(F.lit(0.0))
-    cx = F.col("x1") + t * dx
-    cy = F.col("y1") + t * dy
-    return (F.col(x) - cx) * (F.col(x) - cx) + (F.col(y) - cy) * (F.col(y) - cy)
+    return F.expr(_dist2_sql(x, y))
 
 
 def dwithin_polyline_join(
@@ -324,36 +328,23 @@ def dwithin_polyline_join(
     distance². Same skew valve as the segment path. Filter-then-min
     equals min-then-filter because any pair with a surviving segment
     has its global minimum among the survivors."""
-    n = F.size("xs")
-    segs = polylines.select(
-        line_id,
-        F.explode(F.sequence(F.lit(1), n - 1)).alias("_i"),
-        "xs", "ys",
-    ).select(
-        line_id,
-        F.element_at("xs", F.col("_i").cast("int")).alias("x1"),
-        F.element_at("ys", F.col("_i").cast("int")).alias("y1"),
-        F.element_at("xs", (F.col("_i") + 1).cast("int")).alias("x2"),
-        F.element_at("ys", (F.col("_i") + 1).cast("int")).alias("y2"),
+    lid = ident(line_id)
+    segs = polylines.selectExpr(
+        lid, "explode(sequence(1, size(xs) - 1)) AS _i", "xs", "ys"
+    ).selectExpr(
+        lid,
+        "element_at(xs, CAST(_i AS INT)) AS x1",
+        "element_at(ys, CAST(_i AS INT)) AS y1",
+        "element_at(xs, CAST(_i + 1 AS INT)) AS x2",
+        "element_at(ys, CAST(_i + 1 AS INT)) AS y2",
     )
-    d = F.lit(float(dist))
-    seg = (
-        segs
-        .withColumn("_minx", F.least("x1", "x2") - d)
-        .withColumn("_maxx", F.greatest("x1", "x2") + d)
-        .withColumn("_miny", F.least("y1", "y2") - d)
-        .withColumn("_maxy", F.greatest("y1", "y2") + d)
-    )
-    g = with_cover_cells(seg, "_minx", "_miny", "_maxx", "_maxy", res).drop(
-        "_minx", "_miny", "_maxx", "_maxy"
-    )
+    g = with_dist_cover(segs, dist, res)
     p = with_point_cell(points, x, y, res)
     p, g, keys = _apply_salt(p, g, point_id, salt, hot)
     cand = g.join(p, keys, "inner").drop(*keys)
-    d2 = point_segment_dist2(x, y)
     return (
-        cand.withColumn("_d2", d2)
-        .filter(F.col("_d2") <= d * d)
+        cand.withColumn("_d2", F.expr(_dist2_sql(x, y)))
+        .filter(f"_d2 <= {dbl(dist * dist)}")
         .groupBy(line_id, point_id)
-        .agg(F.min("_d2").alias("min_d2"))
+        .agg(F.expr("min(_d2) AS min_d2"))
     )

@@ -35,20 +35,15 @@ def gvi_mean_per_edge(
         point_id="gvi_id",
     )
     g = j.groupBy("edge_id").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("GVI").cast("decimal(9,3)")).alias("s"),
-        F.min("length").alias("length"),
+        F.expr("count(*) AS n"),
+        F.expr("sum(CAST(GVI AS DECIMAL(9,3))) AS s"),
+        F.expr("min(length) AS length"),
     )
-    required = F.when(
-        F.col("length") > 20.0, F.floor((F.col("length") / 10.0) * 0.5)
-    ).otherwise(F.lit(1))
-    return g.select(
+    required = "CASE WHEN length > 20.0D THEN FLOOR((length / 10.0D) * 0.5D) ELSE 1 END"
+    return g.selectExpr(
         "edge_id",
         "n",
-        F.when(
-            F.col("n") >= required,
-            F.bround(F.col("s").cast("double") / F.col("n"), 2),
-        ).alias("mean_gvi"),
+        f"CASE WHEN n >= {required} THEN bround(CAST(s AS DOUBLE) / n, 2) END AS mean_gvi",
     )
 
 

@@ -10,7 +10,7 @@ Stage map (reference step → here):
   6  13-layer sjoin + dedup    location_exposures: 1 broadcast left
                                cell-join + 1 grouped max (dedup and
                                pivot in one shuffle — not 13 sjoins)
-  7  missing split             Column predicate
+  7  missing split             native predicate
   8  kNN ring interpolation    ring_points + _left_cell_pivot +
                                exact 0.7-nearest quantile
   9  source coalesce/max/...   aggregate_noise_values
@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hope_graph_builder_spark.functions.sqltext import dbl, ident
 from hope_graph_builder_spark.operators.noise import (
     LAYER_NAMES,
     aggregate_noise_values,
@@ -35,11 +36,24 @@ from hope_graph_builder_spark.operators.sampling import (
     sample_edges,
     with_xy_id,
 )
+from hope_graph_builder_spark.spatial.cells import cover_bbox_sql
 
 SAMPLE_COLS = [
     "xy_id", "road", "train", "tram", "metro",
     "n_max", "n_max_sources", "n_max_adj", "n_max_mask",
 ]
+
+# the quantized location's coordinates, derived from xy_id (SQL text)
+_X = "(FLOOR(xy_id / 10000000) / 10.0D)"
+_Y = "(pmod(xy_id, 10000000) / 10.0D)"
+# every layer column is NULL: the location got no noise value
+_NO_NOISE = "(" + " AND ".join(f"{c} IS NULL" for c in LAYER_NAMES) + ")"
+
+
+def _in_rect_sql(x: str, y: str, rect: tuple[float, float, float, float]) -> str:
+    """Half-open containment of the SQL operands (x, y) in ``rect``."""
+    x0, y0, x1, y1 = (dbl(v) for v in rect)
+    return f"({x} >= {x0} AND {x} < {x1} AND {y} >= {y0} AND {y} < {y1})"
 
 
 def unique_points(samples: DataFrame) -> DataFrame:
@@ -48,11 +62,7 @@ def unique_points(samples: DataFrame) -> DataFrame:
     deterministic distributed execution we use the quantized location
     itself (bin coordinate, 0.1 m grid) — documented deviation, same
     equivalence classes."""
-    return samples.select("xy_id").distinct().select(
-        "xy_id",
-        (F.floor(F.col("xy_id") / 10_000_000) / 10.0).alias("x"),
-        (F.pmod(F.col("xy_id"), 10_000_000) / 10.0).alias("y"),
-    )
+    return samples.select("xy_id").distinct().selectExpr("xy_id", f"{_X} AS x", f"{_Y} AS y")
 
 
 def noise_final_samples(
@@ -105,29 +115,21 @@ def noise_final_samples(
       left join preserves them, both groupBys preserve keys), so no
       ``miss ⟕ interp_vals`` reassembly join is needed."""
     samples = with_xy_id(sample_edges(edges))
-    x = (F.floor(F.col("xy_id") / 10_000_000) / 10.0)
-    y = (F.pmod(F.col("xy_id"), 10_000_000) / 10.0)
-    no_noise = None
-    for c in LAYER_NAMES:
-        cur = F.col(c).isNull()
-        no_noise = cur if no_noise is None else (no_noise & cur)
 
     if nodata_polys is None:
-        nx0, ny0, nx1, ny1 = nodata_rect
-        in_rect = (x >= nx0) & (x < nx1) & (y >= ny0) & (y < ny1)
+        in_rect = _in_rect_sql(_X, _Y, nodata_rect)
 
         def located(src: DataFrame, strip: tuple | None) -> DataFrame:
-            return location_exposures(src, layers, res, strip=strip).select(
-                "xy_id", x.alias("x"), y.alias("y"),
-                in_rect.alias("nodata_zone"), *LAYER_NAMES,
+            return location_exposures(src, layers, res, strip=strip).selectExpr(
+                "xy_id", f"{_X} AS x", f"{_Y} AS y", f"{in_rect} AS nodata_zone", *LAYER_NAMES,
             )
 
         pts = located(samples, None)
     else:
         from hope_graph_builder_spark.operators.spatial_join import pip_join_wkb
 
-        loc = location_exposures(samples, layers, res).select(
-            "xy_id", x.alias("x"), y.alias("y"), *LAYER_NAMES
+        loc = location_exposures(samples, layers, res).selectExpr(
+            "xy_id", f"{_X} AS x", f"{_Y} AS y", *LAYER_NAMES
         )
         flags = (
             pip_join_wkb(
@@ -135,30 +137,31 @@ def noise_final_samples(
                 res=nodata_res, point_id="xy_id",
             )
             .select("xy_id").distinct()
-            .withColumn("_nz", F.lit(True))
+            .selectExpr("xy_id", "true AS _nz")
         )
-        pts = loc.join(flags, "xy_id", "left").select(
-            "xy_id", "x", "y",
-            F.coalesce(F.col("_nz"), F.lit(False)).alias("nodata_zone"),
-            *LAYER_NAMES,
+        pts = loc.join(flags, "xy_id", "left").selectExpr(
+            "xy_id", "x", "y", "coalesce(_nz, false) AS nodata_zone", *LAYER_NAMES,
         )
 
-    pts = pts.withColumn("missing_noises", F.col("nodata_zone") & no_noise)
-    normal = aggregate_noise_values(pts.filter(~F.col("missing_noises"))).select(*SAMPLE_COLS)
+    pts = pts.withColumn("missing_noises", F.expr(f"nodata_zone AND {_NO_NOISE}"))
+    normal = aggregate_noise_values(pts.filter("NOT missing_noises")).select(*SAMPLE_COLS)
 
     if nodata_polys is None:
         m = 0.1  # quantization moves a sample ≤0.05 m; margin 2×
-        pre = edges.filter(
-            ((F.col("x1") >= nx0 - m) | (F.col("x2") >= nx0 - m))
-            & ((F.col("x1") < nx1 + m) | (F.col("x2") < nx1 + m))
-            & ((F.col("y1") >= ny0 - m) | (F.col("y2") >= ny0 - m))
-            & ((F.col("y1") < ny1 + m) | (F.col("y2") < ny1 + m))
+        nx0, ny0, nx1, ny1 = nodata_rect
+        near_strip = " AND ".join(
+            f"({c}1 {op} {dbl(v)} OR {c}2 {op} {dbl(v)})"
+            for c, op, v in (
+                ("x", ">=", nx0 - m), ("x", "<", nx1 + m),
+                ("y", ">=", ny0 - m), ("y", "<", ny1 + m),
+            )
         )
-        miss = located(with_xy_id(sample_edges(pre)), nodata_rect).filter(no_noise)
+        pre = edges.filter(near_strip)
+        miss = located(with_xy_id(sample_edges(pre)), nodata_rect).filter(_NO_NOISE)
     else:
-        miss = pts.filter(F.col("missing_noises"))
-    rings = ring_points(miss.select("xy_id", "x", "y"), radius=ring_radius,
-                        count=ring_count, keep=["xy_id"], index_col="ring_i")
+        miss = pts.filter("missing_noises")
+    rings = ring_points(miss, radius=ring_radius, count=ring_count, keep=["xy_id"],
+                        index_col="ring_i")
     ring_pivot = _left_cell_pivot(rings, layers, res, keys=["xy_id", "ring_i"])
     interp_vals = interpolate_missing(ring_pivot, ring_count=ring_count)
     interp = aggregate_noise_values(interp_vals, prefer_syke=True).select(*SAMPLE_COLS)
@@ -167,15 +170,13 @@ def noise_final_samples(
     return samples.join(all_samples, "xy_id", "left")
 
 
-def _layer_index_col() -> F.Column:
-    """layer name → its LAYER_NAMES position, evaluated ONCE on the
-    (tiny, broadcast) polygon side so the hot per-candidate aggregation
-    compares ints instead of strings (r06: 8 string equalities per
-    candidate row × 53M rows dominated the fused-agg CPU)."""
-    expr = F.lit(None).cast("int")
-    for i in range(len(LAYER_NAMES) - 1, -1, -1):
-        expr = F.when(F.col("layer") == LAYER_NAMES[i], F.lit(i)).otherwise(expr)
-    return expr
+# layer name → its LAYER_NAMES position, evaluated ONCE on the (tiny,
+# broadcast) polygon side so the hot per-candidate aggregation compares
+# ints instead of strings (r06: 8 string equalities per candidate row ×
+# 53M rows dominated the fused-agg CPU)
+_LAYER_INDEX = (
+    "CASE " + " ".join(f"WHEN layer = '{c}' THEN {i}" for i, c in enumerate(LAYER_NAMES)) + " END"
+)
 
 
 def _left_cell_pivot(
@@ -187,7 +188,7 @@ def _left_cell_pivot(
     y: str = "y",
     res_bump: int = 0,
 ) -> DataFrame:
-    """LEFT broadcast cell-join + one grouped 8-way conditional max —
+    """LEFT broadcast cell-join + one grouped 8-way max(CASE WHEN) —
     the fused PIP+pivot core shared by ``location_exposures`` and the
     ring branch. Exactly one aggregation over a stream-static broadcast
     join; unmatched points survive with all-null layer columns.
@@ -205,34 +206,24 @@ def _left_cell_pivot(
     cover explode here: no flagship path applies split_by_cover_size,
     so a layer polygon spanning n cells at the (bumped) resolution
     becomes n broadcast rows."""
-    from hope_graph_builder_spark.operators.spatial_join import (
-        CELL,
-        with_cover_cells,
-        with_point_cell,
-    )
+    from hope_graph_builder_spark.operators.spatial_join import CELL, with_point_cell
 
     res = res + res_bump
     p = with_point_cell(points, x, y, res)
-    g = F.broadcast(
-        with_cover_cells(layers, "minx", "miny", "maxx", "maxy", res)
-        .withColumn("_li", _layer_index_col())
-        .select(CELL, "_li", "minx", "miny", "maxx", "maxy", "db")
-    )
+    cover = cover_bbox_sql("minx", "miny", "maxx", "maxy", res)
+    g = F.broadcast(layers.selectExpr(
+        f"explode({cover}) AS {CELL}", f"{_LAYER_INDEX} AS _li", "minx", "miny", "maxx", "maxy", "db"
+    ))
     cand = p.join(g, CELL, "left")
-    hit = (
-        (F.col(x) >= F.col("minx")) & (F.col(x) < F.col("maxx"))
-        & (F.col(y) >= F.col("miny")) & (F.col(y) < F.col("maxy"))
-    )
-    rows = cand.select(
-        *keys,
-        F.when(hit, F.col("_li")).alias("_li"),
-        F.when(hit, F.col("db")).alias("db"),
+    px, py = ident(x), ident(y)
+    hit = f"{px} >= minx AND {px} < maxx AND {py} >= miny AND {py} < maxy"
+    rows = cand.selectExpr(
+        *[ident(k) for k in keys],
+        f"CASE WHEN {hit} THEN _li END AS _li",
+        f"CASE WHEN {hit} THEN db END AS db",
     )
     return rows.groupBy(*keys).agg(
-        *[
-            F.max(F.when(F.col("_li") == i, F.col("db"))).alias(c)
-            for i, c in enumerate(LAYER_NAMES)
-        ],
+        *[F.expr(f"max(CASE WHEN _li = {i} THEN db END) AS {c}") for i, c in enumerate(LAYER_NAMES)]
     )
 
 
@@ -262,17 +253,9 @@ def location_exposures(
     legal Structured Streaming stage: streaming/noise_stream.py runs
     this same function over an edge STREAM and the test pins
     stream == batch equality."""
-    sq = samples.select(
-        "xy_id",
-        (F.floor(F.col("xy_id") / 10_000_000) / 10.0).alias("x"),
-        (F.pmod(F.col("xy_id"), 10_000_000) / 10.0).alias("y"),
-    )
+    sq = samples.selectExpr("xy_id", f"{_X} AS x", f"{_Y} AS y")
     if strip is not None:
-        nx0, ny0, nx1, ny1 = strip
-        sq = sq.filter(
-            (F.col("x") >= nx0) & (F.col("x") < nx1)
-            & (F.col("y") >= ny0) & (F.col("y") < ny1)
-        )
+        sq = sq.filter(_in_rect_sql("x", "y", strip))
     # the point side is corpus-sized here → join one res step finer
     # (fewer false candidates; see _left_cell_pivot docstring)
     return _left_cell_pivot(sq, layers, res, keys=["xy_id"], res_bump=1)
@@ -333,13 +316,11 @@ def run_noise_join(
             edges_all=edges_within_rings(edges, extent_polys),
             extent_flag="in_extent",
         )
-    ex0, ey0, ex1, ey1 = extent_rect
-    inside = lambda x, y: (  # noqa: E731
-        (F.col(x) >= ex0) & (F.col(x) < ex1) & (F.col(y) >= ey0) & (F.col(y) < ey1)
-    )
     # within(convex rect) ⇔ both endpoints inside (see docstring)
-    edges_flagged = edges.select(
-        "edge_id", (inside("x1", "y1") & inside("x2", "y2")).alias("in_extent")
+    edges_flagged = edges.selectExpr(
+        "edge_id",
+        f"{_in_rect_sql('x1', 'y1', extent_rect)} AND {_in_rect_sql('x2', 'y2', extent_rect)}"
+        " AS in_extent",
     )
     # (edges_flagged is the preserved side of the left join, so it
     # cannot be broadcast; it re-shuffles on edge_id — extent mode only)

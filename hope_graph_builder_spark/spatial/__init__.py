@@ -6,17 +6,18 @@ metric CRS is divided, at resolution r, into 2^r × 2^r square cells of
 side EXTENT_M / 2^r.  A cell id packs (res, ix, iy) into one int64 so
 cell joins are plain long equi-joins.
 
-Everything that touches cell ids is a *native Spark Column expression*
-(see cells.py) — it compiles into whole-stage codegen and the spatial
+Everything that touches cell ids is a *native Spark expression* (see
+cells.py) — it compiles into whole-stage codegen and the spatial
 join becomes an ordinary hash/broadcast join on a long key.
 """
 
 from hope_graph_builder_spark.spatial.cells import (  # noqa: F401
     EXTENT_M,
     cell_id_expr,
+    cell_id_sql,
     cell_ixy_expr,
     cell_size,
-    cover_bbox_expr,
+    cover_bbox_sql,
     cells_of_points_np,
     cover_bbox_np,
     unpack_cell_np,

@@ -14,9 +14,12 @@ Coordinates are metric, in [0, EXTENT_M). EXTENT_M = 2^17 m = 131.072 km,
 so at res r the cell side is 2^(17-r) meters; res 7 → 1024 m cells,
 res 10 → 128 m cells, res 12 → 32 m.
 
-All functions here come in two flavors:
-  *_expr  — pyspark Column expressions (JVM-side, codegen'd)
-  *_np    — identical numpy math for pandas-UDF internals and tests
+The functions here come in up to three flavors of the same math:
+  *_sql   — Spark SQL text over SQL operands (one JVM parse; what the
+            join operators build with)
+  *_expr  — pyspark Column expressions, for callers whose operands
+            are Columns
+  *_np    — numpy, for pandas-UDF internals and tests
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from hope_graph_builder_spark.functions.sqltext import dbl
 
 EXTENT_M = 131072.0  # 2^17 meters
 _IX_SHIFT = 28
@@ -69,31 +74,32 @@ def cell_id_expr(x: Column, y: Column, res: int) -> Column:
     return _pack_expr(ix, iy, res)
 
 
-def cover_bbox_expr(
-    minx: Column, miny: Column, maxx: Column, maxy: Column, res: int
-) -> Column:
-    """array<long> of every cell id intersecting the bbox — native
-    ``sequence`` + ``transform`` + ``flatten`` (no UDF, no shuffle).
+def _floor_sql(v: str, res: int) -> str:
+    return f"CAST(FLOOR(({v}) / {dbl(cell_size(res))}) AS BIGINT)"
+
+
+def cell_id_sql(x: str, y: str, res: int) -> str:
+    """``cell_id_expr`` as SQL text over the SQL operands ``x``, ``y``."""
+    return (
+        f"(CAST({res << _RES_SHIFT} AS BIGINT)"
+        f" + shiftleft({_floor_sql(x, res)}, {_IX_SHIFT}) + {_floor_sql(y, res)})"
+    )
+
+
+def cover_bbox_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
+    """array<long> of every cell id intersecting the bbox whose bounds
+    are the SQL operands — native ``sequence`` + ``transform`` +
+    ``flatten`` (no UDF, no shuffle).
 
     Replaces GeoPandas' per-call R-tree build (reference
     `utils.py:143-163`): the polygon side of a spatial join gets
     exploded over this cover, then joined to the point side's
-    ``cell_id_expr`` on a long key.
+    ``cell_id_sql`` on a long key.
     """
-    size = F.lit(cell_size(res))
-    ix0 = F.floor(minx / size).cast("long")
-    ix1 = F.floor(maxx / size).cast("long")
-    iy0 = F.floor(miny / size).cast("long")
-    iy1 = F.floor(maxy / size).cast("long")
-    base = F.lit(res << _RES_SHIFT).cast("long")
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(
-                F.sequence(iy0, iy1),
-                lambda iy: base + F.shiftleft(ix, _IX_SHIFT) + iy,
-            ),
-        )
+    return (
+        f"flatten(transform(sequence({_floor_sql(minx, res)}, {_floor_sql(maxx, res)}),"
+        f" _cix -> transform(sequence({_floor_sql(miny, res)}, {_floor_sql(maxy, res)}),"
+        f" _ciy -> CAST({res << _RES_SHIFT} AS BIGINT) + shiftleft(_cix, {_IX_SHIFT}) + _ciy)))"
     )
 
 
