@@ -28,7 +28,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hope_graph_builder_spark.spatial.cells import cell_id_expr
+from hope_graph_builder_spark.functions.sqltext import ident
+from hope_graph_builder_spark.spatial.cells import cell_id_sql
 
 MANIFEST_SCHEMA = "stage string, tile_group long, row_count long, checksum long, wall_ms long, status string"
 
@@ -37,7 +38,7 @@ def with_tile_group(df: DataFrame, x: str, y: str, res: int = 4,
                     out: str = "tile_group") -> DataFrame:
     """Coarse-cell partition key (res 4 → 8192 m tiles → ≤256 groups
     in the synthetic extent; tune res so groups ≫ executors)."""
-    return df.withColumn(out, cell_id_expr(F.col(x), F.col(y), res))
+    return df.withColumn(out, F.expr(cell_id_sql(ident(x), ident(y), res)))
 
 
 def _manifest_path(root: str) -> str:

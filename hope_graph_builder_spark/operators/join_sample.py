@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hope_graph_builder_spark.functions.sqltext import dbl
 from hope_graph_builder_spark.operators.dedup import hash60
 
 
@@ -293,12 +294,11 @@ def dwithin_uniform_sample(
     returned count reaches ``k``."""
     from hope_graph_builder_spark.operators.spatial_join import (
         CELL,
-        point_segment_dist2,
+        _dist2_sql,
         with_dist_cover,
         with_point_cell,
     )
 
-    d = F.lit(float(dist))
     g = with_dist_cover(segments, dist, res).select(CELL, seg_id)
     p = with_point_cell(points, x, y, res).select(CELL, point_id)
     cand = join_uniform_sample(
@@ -308,7 +308,7 @@ def dwithin_uniform_sample(
         cand.join(points.select(point_id, x, y), point_id)
         .join(segments.select(seg_id, "x1", "y1", "x2", "y2"), seg_id)
     )
-    acc = att.filter(point_segment_dist2(x, y) <= d * d)
+    acc = att.filter(f"{_dist2_sql(x, y)} <= {dbl(dist * dist)}")
     w = Window.orderBy(
         hash60(F.concat(F.lit(salt + "!"), F.col("idx").cast("string"))), "idx"
     )

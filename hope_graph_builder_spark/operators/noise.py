@@ -43,12 +43,6 @@ def pivot_layer_max(matches: DataFrame, key: str | list[str] = "xy_id") -> DataF
     )
 
 
-def _with_sql(df: DataFrame, cols: dict[str, str]) -> DataFrame:
-    """One projection adding (or replacing) every ``name: SQL`` column
-    of one dependency level."""
-    return df.withColumns({c: F.expr(e) for c, e in cols.items()})
-
-
 def aggregate_noise_values(samples: DataFrame, prefer_syke: bool = False) -> DataFrame:
     """Per-sampling-point source aggregation (utils.py:165-232):
 
@@ -62,13 +56,13 @@ def aggregate_noise_values(samples: DataFrame, prefer_syke: bool = False) -> Dat
     NaN), so SQL coalesce == the reference's first-finite.
     """
     providers = PROVIDERS[::-1] if prefer_syke else PROVIDERS
-    df = _with_sql(samples, {
-        s: "coalesce(" + ", ".join(f"CAST({p}_{s} AS DOUBLE)" for p in providers) + ")"
+    df = samples.withColumns({
+        s: F.expr("coalesce(" + ", ".join(f"CAST({p}_{s} AS DOUBLE)" for p in providers) + ")")
         for s in SOURCES
     })
-    df = _with_sql(df, {
-        "rail": "greatest(train, tram, metro)",
-        "n_max": f"greatest({', '.join(SOURCES)})",
+    df = df.withColumns({
+        "rail": F.expr("greatest(train, tram, metro)"),
+        "n_max": F.expr(f"greatest({', '.join(SOURCES)})"),
     })
     pairs = ", ".join(f"struct('{s}' AS name, {s} AS val)" for s in SOURCES)
     # n_max_mask is the bitmask twin of n_max_sources (bit i ⇔
@@ -78,12 +72,12 @@ def aggregate_noise_values(samples: DataFrame, prefer_syke: bool = False) -> Dat
     mask = " + ".join(
         ["0"] + [f"CASE WHEN {s} = n_max THEN {1 << i} ELSE 0 END" for i, s in enumerate(SOURCES)]
     )
-    df = _with_sql(df, {
-        "n_max_sources": (
+    df = df.withColumns({
+        "n_max_sources": F.expr(
             "CASE WHEN n_max IS NULL THEN CAST(array() AS ARRAY<STRING>)"
             f" ELSE transform(filter(array({pairs}), _p -> _p.val = n_max), _p -> _p.name) END"
         ),
-        "n_max_mask": f"coalesce({mask}, 0)",
+        "n_max_mask": F.expr(f"coalesce({mask}, 0)"),
     })
     # n_max_adj counts co-max sources via the mask's popcount instead of
     # size(n_max_sources): identical by construction (bit i set ⇔ source
@@ -92,12 +86,13 @@ def aggregate_noise_values(samples: DataFrame, prefer_syke: bool = False) -> Dat
     # consumer (the flagship slim tail) never reads n_max_sources (r06,
     # guide §2.3 — don't compute what you throw away)
     cnt = "bit_count(n_max_mask)"
-    return _with_sql(df, {
-        "n_max_adj": (
+    return df.withColumn(
+        "n_max_adj",
+        F.expr(
             f"CASE WHEN {cnt} > 1 THEN n_max + {cnt} WHEN {cnt} = 1 THEN n_max"
             " ELSE CAST(NULL AS DOUBLE) END"
         ),
-    })
+    )
 
 
 def interpolate_missing(
@@ -123,7 +118,7 @@ def interpolate_missing(
         for c in LAYER_NAMES
     ]
     out = ring_pivot.groupBy(key).agg(*aggs)
-    return _with_sql(out, {c: f"CASE WHEN {c} != 0.0D THEN {c} END" for c in LAYER_NAMES})
+    return out.withColumns({c: F.expr(f"CASE WHEN {c} != 0.0D THEN {c} END") for c in LAYER_NAMES})
 
 
 def edge_db_rows(final_samples: DataFrame, edge_id: str = "edge_id") -> DataFrame:

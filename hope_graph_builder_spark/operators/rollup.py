@@ -30,7 +30,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hope_graph_builder_spark.spatial.cells import _MASK28, _IX_SHIFT, _RES_SHIFT, cell_id_expr
+from hope_graph_builder_spark.functions.sqltext import ident
+from hope_graph_builder_spark.spatial.cells import _MASK28, _IX_SHIFT, _RES_SHIFT, cell_id_sql
 
 
 def parent_cell_expr(cell, child_res: int):
@@ -63,7 +64,7 @@ def tile_pyramid(
         raise ValueError(f"need 0 <= res_coarse <= res_fine, got {res_coarse}..{res_fine}")
     base = (
         points.select(
-            cell_id_expr(F.col(x), F.col(y), res_fine).alias("cell"),
+            F.expr(cell_id_sql(ident(x), ident(y), res_fine)).alias("cell"),
             F.bround(F.col(value).cast("double"), dp).cast("decimal(20,10)").alias("_v"),
         )
         .groupBy("cell")

@@ -152,17 +152,11 @@ def polyline_length_expr(xs: str = "xs", ys: str = "ys") -> Column:
     return F.expr(_fold_sum_sql(_segment_lengths_sql(ident(xs), ident(ys))))
 
 
-def xy_id_expr(x: Column, y: Column) -> Column:
-    """Quantized-location surrogate key (reference utils.py:58-65):
-    coords rounded to 0.1 m (banker's, on the ×10-scaled double via
-    rint — pure FP, no BigDecimal) packed into one long."""
-    qx = F.rint(x * F.lit(10.0)).cast("long")
-    qy = F.rint(y * F.lit(10.0)).cast("long")
-    return qx * F.lit(10_000_000).cast("long") + qy
-
-
 def xy_id_sql(x: str, y: str) -> str:
-    """``xy_id_expr`` as SQL text over the SQL operands ``x``, ``y``."""
+    """Quantized-location surrogate key (reference utils.py:58-65) over
+    the SQL operands ``x``, ``y``: coords rounded to 0.1 m (banker's, on
+    the ×10-scaled double via rint — pure FP, no BigDecimal) packed into
+    one long."""
     return (
         f"CAST(rint(({x}) * 10.0D) AS BIGINT) * CAST(10000000 AS BIGINT)"
         f" + CAST(rint(({y}) * 10.0D) AS BIGINT)"

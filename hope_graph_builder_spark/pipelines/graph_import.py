@@ -19,7 +19,7 @@ from hope_graph_builder_spark.operators.graph import (
     redensify_ids,
     remove_isolated_nodes,
 )
-from hope_graph_builder_spark.operators.sampling import xy_id_expr
+from hope_graph_builder_spark.operators.sampling import xy_id_sql
 
 
 def edges_with_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,9 +64,10 @@ def build_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """G1/J10 (otp_graph_import.py:76-111): node ids from quantized
     endpoint coordinates (shared endpoints coalesce to one node);
     returns (nodes, edges with src/dst)."""
-    e = edges.withColumn("src", xy_id_expr(F.col("x1"), F.col("y1"))).withColumn(
-        "dst", xy_id_expr(F.col("x2"), F.col("y2"))
-    )
+    e = edges.withColumns({
+        "src": F.expr(xy_id_sql("x1", "y1")),
+        "dst": F.expr(xy_id_sql("x2", "y2")),
+    })
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hope_graph_builder_spark.operators.spatial_join import with_cover_cells, CELL
-from hope_graph_builder_spark.spatial import cell_id_expr
+from hope_graph_builder_spark.spatial import cell_id_sql
 from hope_graph_builder_spark.spatial.kernels import (
     clip_area_rings,
     clip_polygon_convex,
@@ -41,6 +41,12 @@ from hope_graph_builder_spark.spatial.wkb import (
 )
 
 AREA_Q = 1_000_000.0  # micro-m² quantization for order-free sums
+
+
+def _canon_cell(res: int):
+    """Cell of the min corner of a (buffer, polygon) bbox intersection:
+    the one joined cover cell a candidate pair is kept in."""
+    return F.expr(cell_id_sql("greatest(bminx, minx)", "greatest(bminy, miny)", res))
 
 
 def edge_buffer_rect(edges: DataFrame, dist: float = 30.0) -> DataFrame:
@@ -80,11 +86,7 @@ def overlay_share_rect(
     # its cell is always among the joined cells — exactly once). This
     # is a codegen filter, replacing the full .distinct() shuffle of
     # the candidate set.
-    canon = cell_id_expr(
-        F.greatest(F.col("bminx"), F.col("minx")),
-        F.greatest(F.col("bminy"), F.col("miny")),
-        res,
-    )
+    canon = _canon_cell(res)
     inter = (
         cand.filter(F.col(CELL) == canon)
         .withColumn("area_q", F.floor(ix * iy * F.lit(AREA_Q)).cast("long"))
@@ -178,11 +180,7 @@ def overlay_share_round(
         "bminx", "bminy", "bmaxx", "bmaxy", res,
     )
     vc = with_cover_cells(polys, "minx", "miny", "maxx", "maxy", res)
-    canon = cell_id_expr(
-        F.greatest(F.col("bminx"), F.col("minx")),
-        F.greatest(F.col("bminy"), F.col("miny")),
-        res,
-    )
+    canon = _canon_cell(res)
     buf_area = (
         F.sqrt(
             (F.col("x2") - F.col("x1")) * (F.col("x2") - F.col("x1"))
@@ -294,11 +292,7 @@ def overlay_share_convex(
     # bbox-intersection min corner picks ONE joined cell per pair — a
     # codegen filter instead of a .distinct() shuffle, and the exact
     # clip kernel then runs once per pair
-    canon = cell_id_expr(
-        F.greatest(F.col("bminx"), F.col("minx")),
-        F.greatest(F.col("bminy"), F.col("miny")),
-        res,
-    )
+    canon = _canon_cell(res)
     cand = (
         bc.join(vc, CELL, "inner")
         .filter(F.col(CELL) == canon)
@@ -366,11 +360,7 @@ def overlay_share_general(
         "bminx", "bminy", "bmaxx", "bmaxy", res,
     )
     vc = with_cover_cells(polys, "minx", "miny", "maxx", "maxy", res)
-    canon = cell_id_expr(
-        F.greatest(F.col("bminx"), F.col("minx")),
-        F.greatest(F.col("bminy"), F.col("miny")),
-        res,
-    )
+    canon = _canon_cell(res)
     cand = (
         bc.join(vc, CELL, "inner")
         .filter(F.col(CELL) == canon)

@@ -13,9 +13,7 @@ join becomes an ordinary hash/broadcast join on a long key.
 
 from hope_graph_builder_spark.spatial.cells import (  # noqa: F401
     EXTENT_M,
-    cell_id_expr,
     cell_id_sql,
-    cell_ixy_expr,
     cell_size,
     cover_bbox_sql,
     cells_of_points_np,

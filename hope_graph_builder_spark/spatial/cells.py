@@ -14,20 +14,15 @@ Coordinates are metric, in [0, EXTENT_M). EXTENT_M = 2^17 m = 131.072 km,
 so at res r the cell side is 2^(17-r) meters; res 7 → 1024 m cells,
 res 10 → 128 m cells, res 12 → 32 m.
 
-The functions here come in up to three flavors of the same math:
-  *_sql   — Spark SQL text over SQL operands (one JVM parse; what the
-            join operators build with)
-  *_expr  — pyspark Column expressions, for callers whose operands
-            are Columns
+The functions here come in two flavors of the same math:
+  *_sql   — Spark SQL text over SQL operands (one JVM parse); wrap in
+            ``F.expr`` to get a Column
   *_np    — numpy, for pandas-UDF internals and tests
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from hope_graph_builder_spark.functions.sqltext import dbl
 
 EXTENT_M = 131072.0  # 2^17 meters
@@ -53,37 +48,18 @@ def suggest_res(typical_extent_m: float) -> int:
     return max(0, min(20, int(res)))
 
 
-def cell_ixy_expr(x: Column, y: Column, res: int) -> tuple[Column, Column]:
-    size = cell_size(res)
-    ix = F.floor(x / F.lit(size)).cast("long")
-    iy = F.floor(y / F.lit(size)).cast("long")
-    return ix, iy
-
-
-def _pack_expr(ix: Column, iy: Column, res: int) -> Column:
-    return (
-        F.lit(res << _RES_SHIFT).cast("long")
-        + F.shiftleft(ix, _IX_SHIFT)
-        + iy
-    )
-
-
-def cell_id_expr(x: Column, y: Column, res: int) -> Column:
-    """Cell id of the point (x, y) at ``res`` — pure Column arithmetic."""
-    ix, iy = cell_ixy_expr(x, y, res)
-    return _pack_expr(ix, iy, res)
-
-
 def _floor_sql(v: str, res: int) -> str:
     return f"CAST(FLOOR(({v}) / {dbl(cell_size(res))}) AS BIGINT)"
 
 
+def _pack_sql(ix: str, iy: str, res: int) -> str:
+    return f"(CAST({res << _RES_SHIFT} AS BIGINT) + shiftleft({ix}, {_IX_SHIFT}) + {iy})"
+
+
 def cell_id_sql(x: str, y: str, res: int) -> str:
-    """``cell_id_expr`` as SQL text over the SQL operands ``x``, ``y``."""
-    return (
-        f"(CAST({res << _RES_SHIFT} AS BIGINT)"
-        f" + shiftleft({_floor_sql(x, res)}, {_IX_SHIFT}) + {_floor_sql(y, res)})"
-    )
+    """Cell id of the point whose coordinates are the SQL operands
+    ``x``, ``y`` at ``res`` — pure long arithmetic."""
+    return _pack_sql(_floor_sql(x, res), _floor_sql(y, res), res)
 
 
 def cover_bbox_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
@@ -99,7 +75,7 @@ def cover_bbox_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
     return (
         f"flatten(transform(sequence({_floor_sql(minx, res)}, {_floor_sql(maxx, res)}),"
         f" _cix -> transform(sequence({_floor_sql(miny, res)}, {_floor_sql(maxy, res)}),"
-        f" _ciy -> CAST({res << _RES_SHIFT} AS BIGINT) + shiftleft(_cix, {_IX_SHIFT}) + _ciy)))"
+        f" _ciy -> {_pack_sql('_cix', '_ciy', res)})))"
     )
 
 

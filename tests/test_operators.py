@@ -460,6 +460,35 @@ def test_dwithin_polyline_matches_bruteforce(spark):
     assert out.exceptAll(salted).count() == 0
 
 
+def test_cell_and_xy_id_sql_match_numpy(spark):
+    """The SQL cell-id, bbox-cover and xy_id texts agree bit for bit
+    with their numpy twins, cell-boundary and half-decimetre ties
+    included."""
+    from hope_graph_builder_spark.operators.sampling import xy_id_sql
+    from hope_graph_builder_spark.spatial import cells
+
+    rng = np.random.RandomState(3)
+    x = np.concatenate([[0.0, 255.9999, 256.0, 0.05, 0.15, 131071.99], rng.uniform(0, 131000, 200)])
+    y = np.concatenate([[1024.0, 0.25, 1023.99, 0.35, 7.45, 0.0], rng.uniform(0, 131000, 200)])
+    w, h = rng.uniform(0, 900, len(x)), rng.uniform(0, 900, len(x))
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(x)), "x": x, "y": y, "w": w, "h": h})
+    )
+    xy = df.select("i", F.expr(xy_id_sql("x", "y")).alias("xy")).orderBy("i").toPandas()
+    want = np.rint(x * 10.0).astype(np.int64) * 10_000_000 + np.rint(y * 10.0).astype(np.int64)
+    assert (xy["xy"].to_numpy() == want).all()
+    for res in (4, 9, 12):
+        got = df.select(
+            "i",
+            F.expr(cells.cell_id_sql("x", "y", res)).alias("c"),
+            F.expr(cells.cover_bbox_sql("x", "y", "x + w", "y + h", res)).alias("cover"),
+        ).orderBy("i").toPandas()
+        assert (got["c"].to_numpy() == cells.cells_of_points_np(x, y, res)).all()
+        for k in range(len(x)):
+            want_cover = cells.cover_bbox_np(x[k], y[k], x[k] + w[k], y[k] + h[k], res)
+            assert list(got["cover"][k]) == want_cover.tolist(), (res, k)
+
+
 def test_host_and_domain_extraction(spark):
     """host_expr strips scheme, userinfo, port; lowercases.
     registered_domain_expr = last two labels (documented

@@ -187,7 +187,7 @@ def test_tile_pyramid_single_raw_scan(spark):
     from pyspark.sql import functions as F
 
     from hope_graph_builder_spark.operators.rollup import tile_pyramid
-    from hope_graph_builder_spark.spatial.cells import cell_id_expr
+    from hope_graph_builder_spark.spatial.cells import cell_id_sql
 
     pts = __import__("hope_graph_builder_spark.synth", fromlist=["synth"]).page_points(
         spark, SF_TINY
@@ -202,7 +202,7 @@ def test_tile_pyramid_single_raw_scan(spark):
     for r in (7, 9):
         direct = (
             pts.select(
-                cell_id_expr(F.col("x"), F.col("y"), r).alias("cell"),
+                F.expr(cell_id_sql("x", "y", r)).alias("cell"),
                 F.bround(F.col("value"), 5).cast("decimal(20,10)").alias("_v"),
             )
             .groupBy("cell")
