@@ -224,209 +224,6 @@ def q_pip_point_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "pip_sample_join",
-    f"""
-    WITH pts AS ({{PTS}}),
-    a AS (
-      SELECT doc_id AS a_id, x, y,
-             (9 * 72057594037927936)
-             + CAST(floor(x / 256.0) AS BIGINT) * 268435456
-             + CAST(floor(y / 256.0) AS BIGINT) AS kk
-      FROM pts
-    ),
-    lay AS ({{LAYERS}}),
-    lx AS (SELECT *, unnest(range(CAST(floor(minx / 256.0) AS BIGINT),
-                                  CAST(floor(maxx / 256.0) AS BIGINT) + 1))
-                     AS ix FROM lay),
-    lc AS (SELECT *, unnest(range(CAST(floor(miny / 256.0) AS BIGINT),
-                                  CAST(floor(maxy / 256.0) AS BIGINT) + 1))
-                     AS iy FROM lx),
-    b AS (SELECT poly_id AS b_id,
-                 (9 * 72057594037927936) + ix * 268435456 + iy AS kk
-          FROM lc),
-    ca AS (SELECT kk, count(*) AS ca FROM a GROUP BY kk),
-    cb AS (SELECT kk, count(*) AS cb FROM b GROUP BY kk),
-    keys AS (
-      SELECT ca.kk, ca.ca, cb.cb, ca.ca * cb.cb AS p,
-             CAST(('0x' || substr(md5(CAST(ca.kk AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 64 AS kb
-      FROM ca JOIN cb USING (kk)
-    ),
-    offs AS (
-      SELECT *, coalesce(sum(p) OVER (ORDER BY kb, kk
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM keys
-    ),
-    tot AS (SELECT sum(p) AS pt FROM keys),
-    idx AS (
-      SELECT (j * (pt // 240) + (j * (pt % 240)) // 240)
-             + CAST(('0x' || substr(md5('ps0#' || CAST(j AS VARCHAR)), 1, 15))
-                    AS BIGINT)
-               % (((j + 1) * (pt // 240) + ((j + 1) * (pt % 240)) // 240)
-                  - (j * (pt // 240) + (j * (pt % 240)) // 240)) AS pos
-      FROM generate_series(0, 239) AS t(j), tot
-    ),
-    hit AS (
-      SELECT idx.pos, o.kk,
-             (idx.pos - o.off) // o.cb AS ia,
-             (idx.pos - o.off) % o.cb AS ib
-      FROM idx JOIN offs o ON idx.pos >= o.off AND idx.pos < o.off + o.p
-    ),
-    ra AS (SELECT kk, a_id, x, y,
-                  row_number() OVER (PARTITION BY kk ORDER BY a_id) - 1 AS ia
-           FROM a),
-    rb AS (SELECT kk, b_id,
-                  row_number() OVER (PARTITION BY kk ORDER BY b_id) - 1 AS ib
-           FROM b),
-    cand AS (
-      SELECT hit.pos, ra.a_id, ra.x, ra.y, rb.b_id
-      FROM hit
-      JOIN ra ON hit.kk = ra.kk AND hit.ia = ra.ia
-      JOIN rb ON hit.kk = rb.kk AND hit.ib = rb.ib
-    ),
-    acc AS (
-      SELECT cand.* FROM cand JOIN lay ON cand.b_id = lay.poly_id
-      WHERE cand.x >= lay.minx AND cand.x < lay.maxx
-        AND cand.y >= lay.miny AND cand.y < lay.maxy
-    )
-    SELECT CAST(pos AS BIGINT) AS idx, a_id AS doc_id, b_id AS poly_id FROM (
-      SELECT *, row_number() OVER (ORDER BY
-        CAST(('0x' || substr(md5('ps0!' || CAST(pos AS VARCHAR)), 1, 15))
-             AS BIGINT), pos) AS r
-      FROM acc) z
-    WHERE r <= 60
-    """.replace("{PTS}", synth.sql_points())
-       .replace("{LAYERS}", synth.sql_layers_duckdb()),
-)
-def q_pip_sample_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniform sampling over the SPATIAL join without materializing it
-    (operators/join_sample.pip_rect_uniform_sample, the ICDE'25
-    spatial range-join sampling shape): 240 candidates from the cell
-    pair-grid bijection, containment rejection, 60 accepted pairs in
-    salted-hash order. The oracle replays cells, covers, the full
-    bijection, the rejection and the hash-order cut."""
-    from hope_graph_builder_spark.operators.join_sample import (
-        pip_rect_uniform_sample,
-    )
-
-    pts = synth.page_points(spark, sf_dir).select("doc_id", "x", "y")
-    layers = synth.noise_layers(spark)
-    return pip_rect_uniform_sample(
-        pts, layers, k=60, res=9, rect_id="poly_id", oversample=4, salt="ps0"
-    )
-
-
-@register(
-    "dwithin_sample_join",
-    f"""
-    WITH pts AS ({{PTS}}),
-    edges AS ({{EDGES}}),
-    a AS (
-      SELECT doc_id AS a_id, x, y,
-             (11 * 72057594037927936)
-             + CAST(floor(x / 64.0) AS BIGINT) * 268435456
-             + CAST(floor(y / 64.0) AS BIGINT) AS kk
-      FROM pts
-    ),
-    eb AS (SELECT edge_id, x1, y1, x2, y2,
-                  least(x1, x2) - 30.0 AS minx, greatest(x1, x2) + 30.0 AS maxx,
-                  least(y1, y2) - 30.0 AS miny, greatest(y1, y2) + 30.0 AS maxy
-           FROM edges),
-    ex AS (SELECT *, unnest(range(CAST(floor(minx / 64.0) AS BIGINT),
-                                  CAST(floor(maxx / 64.0) AS BIGINT) + 1))
-                     AS ix FROM eb),
-    ec AS (SELECT *, unnest(range(CAST(floor(miny / 64.0) AS BIGINT),
-                                  CAST(floor(maxy / 64.0) AS BIGINT) + 1))
-                     AS iy FROM ex),
-    b AS (SELECT edge_id AS b_id,
-                 (11 * 72057594037927936) + ix * 268435456 + iy AS kk
-          FROM ec),
-    ca AS (SELECT kk, count(*) AS ca FROM a GROUP BY kk),
-    cb AS (SELECT kk, count(*) AS cb FROM b GROUP BY kk),
-    keys AS (
-      SELECT ca.kk, ca.ca, cb.cb, ca.ca * cb.cb AS p,
-             CAST(('0x' || substr(md5(CAST(ca.kk AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 64 AS kb
-      FROM ca JOIN cb USING (kk)
-    ),
-    offs AS (
-      SELECT *, coalesce(sum(p) OVER (ORDER BY kb, kk
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM keys
-    ),
-    tot AS (SELECT sum(p) AS pt FROM keys),
-    idx AS (
-      SELECT (j * (pt // 400) + (j * (pt % 400)) // 400)
-             + CAST(('0x' || substr(md5('ds0#' || CAST(j AS VARCHAR)), 1, 15))
-                    AS BIGINT)
-               % (((j + 1) * (pt // 400) + ((j + 1) * (pt % 400)) // 400)
-                  - (j * (pt // 400) + (j * (pt % 400)) // 400)) AS pos
-      FROM generate_series(0, 399) AS t(j), tot
-    ),
-    hit AS (
-      SELECT idx.pos, o.kk,
-             (idx.pos - o.off) // o.cb AS ia,
-             (idx.pos - o.off) % o.cb AS ib
-      FROM idx JOIN offs o ON idx.pos >= o.off AND idx.pos < o.off + o.p
-    ),
-    ra AS (SELECT kk, a_id, x, y,
-                  row_number() OVER (PARTITION BY kk ORDER BY a_id) - 1 AS ia
-           FROM a),
-    rb AS (SELECT kk, b_id,
-                  row_number() OVER (PARTITION BY kk ORDER BY b_id) - 1 AS ib
-           FROM b),
-    cand AS (
-      SELECT hit.pos, ra.a_id, ra.x, ra.y, rb.b_id
-      FROM hit
-      JOIN ra ON hit.kk = ra.kk AND hit.ia = ra.ia
-      JOIN rb ON hit.kk = rb.kk AND hit.ib = rb.ib
-    ),
-    acc AS (
-      SELECT cand.pos, cand.a_id, cand.b_id
-      FROM cand JOIN edges e ON cand.b_id = e.edge_id
-      WHERE (
-        CASE WHEN (e.x2-e.x1)*(e.x2-e.x1) + (e.y2-e.y1)*(e.y2-e.y1) > 0 THEN
-          (cand.x - (e.x1 + least(greatest(((cand.x-e.x1)*(e.x2-e.x1) + (cand.y-e.y1)*(e.y2-e.y1))
-              / ((e.x2-e.x1)*(e.x2-e.x1) + (e.y2-e.y1)*(e.y2-e.y1)), 0.0), 1.0) * (e.x2-e.x1)))
-          * (cand.x - (e.x1 + least(greatest(((cand.x-e.x1)*(e.x2-e.x1) + (cand.y-e.y1)*(e.y2-e.y1))
-              / ((e.x2-e.x1)*(e.x2-e.x1) + (e.y2-e.y1)*(e.y2-e.y1)), 0.0), 1.0) * (e.x2-e.x1)))
-          + (cand.y - (e.y1 + least(greatest(((cand.x-e.x1)*(e.x2-e.x1) + (cand.y-e.y1)*(e.y2-e.y1))
-              / ((e.x2-e.x1)*(e.x2-e.x1) + (e.y2-e.y1)*(e.y2-e.y1)), 0.0), 1.0) * (e.y2-e.y1)))
-          * (cand.y - (e.y1 + least(greatest(((cand.x-e.x1)*(e.x2-e.x1) + (cand.y-e.y1)*(e.y2-e.y1))
-              / ((e.x2-e.x1)*(e.x2-e.x1) + (e.y2-e.y1)*(e.y2-e.y1)), 0.0), 1.0) * (e.y2-e.y1)))
-        ELSE (cand.x - e.x1)*(cand.x - e.x1) + (cand.y - e.y1)*(cand.y - e.y1) END
-      ) <= 900.0
-    )
-    SELECT CAST(pos AS BIGINT) AS idx, a_id AS doc_id, b_id AS edge_id FROM (
-      SELECT *, row_number() OVER (ORDER BY
-        CAST(('0x' || substr(md5('ds0!' || CAST(pos AS VARCHAR)), 1, 15))
-             AS BIGINT), pos) AS r
-      FROM acc) z
-    WHERE r <= 50
-    """.replace("{PTS}", synth.sql_points())
-       .replace("{EDGES}", synth.sql_edges()),
-)
-def q_dwithin_sample_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniform sampling over the DWithin RANGE join without
-    materializing it (operators/join_sample.dwithin_uniform_sample —
-    the ICDE'25 spatial range-join sampling title case): 400 dilated-
-    cover candidates through the pair-grid bijection, exact
-    point-segment distance² rejection, 50 accepted pairs in
-    salted-hash order; every stage replayed by the oracle."""
-    from hope_graph_builder_spark.operators.join_sample import (
-        dwithin_uniform_sample,
-    )
-
-    pts = synth.page_points(spark, sf_dir).select("doc_id", "x", "y")
-    edges = synth.page_edges(spark, sf_dir).select(
-        "edge_id", "x1", "y1", "x2", "y2"
-    )
-    return dwithin_uniform_sample(
-        pts, edges, 30.0, 50, res=11, oversample=8, salt="ds0"
-    )
-
-
-@register(
     "dwithin_pages_edges",
     f"""
     WITH pts AS ({synth.sql_points()}),
@@ -566,8 +363,8 @@ def q_edge_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Register the relational + text/dedup/similarity batteries (they import
-# `register` from this module, so import them last).
+# Register the relational, text/dedup and pipeline batteries (they
+# import `register` from this module, so import them last).
 from hope_graph_builder_spark import contract_relational  # noqa: E402,F401
 from hope_graph_builder_spark import contract_text  # noqa: E402,F401
 from hope_graph_builder_spark import contract_pipelines  # noqa: E402,F401

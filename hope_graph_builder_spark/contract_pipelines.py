@@ -4,6 +4,7 @@ F12-F18, P2/P3/J10/G1-G4)."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hope_graph_builder_spark import synth
@@ -11,6 +12,10 @@ from hope_graph_builder_spark.contract import register
 from hope_graph_builder_spark.functions.rowexprs import (
     biking_length,
     geojson_line_feature,
+)
+from hope_graph_builder_spark.operators.graph import (
+    connected_components,
+    strongly_connected_components,
 )
 from hope_graph_builder_spark.pipelines.graph_import import (
     build_graph,
@@ -890,6 +895,96 @@ def q_gi_full(spark, sf_dir):
     threshold."""
     nodes, edges = run_graph_import(spark, sf_dir, min_component_nodes=0)
     return nodes.select("id", "new_id")
+
+
+# ------------------------------------------------- graph components (G2) --
+
+N_GRAPH_NODES = 2000
+
+
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    h1 = f"((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD})"
+    h2 = f"((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD})"
+    return d.select(
+        F.expr(f"{h1} % {N_GRAPH_NODES}").alias("src"),
+        F.expr(f"{h2} % {N_GRAPH_NODES}").alias("dst"),
+    )
+
+
+N_SCC_NODES = 400
+
+
+def _scc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed graph with real cycles: hash edges + reversed copies
+    for every third page."""
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    h1 = f"((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_SCC_NODES}"
+    h2 = f"((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_SCC_NODES}"
+    fwd = d.select(F.expr(h1).alias("src"), F.expr(h2).alias("dst"))
+    back = d.filter(F.col("doc_id") % 3 == 0).select(
+        F.expr(h2).alias("src"), F.expr(h1).alias("dst")
+    )
+    return fwd.unionByName(back)
+
+
+@register(
+    "g_strong_components",
+    f"""
+    WITH e AS (
+      SELECT ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_SCC_NODES} AS src,
+             ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_SCC_NODES} AS dst
+      FROM documents
+      UNION ALL
+      SELECT ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_SCC_NODES} AS src,
+             ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_SCC_NODES} AS dst
+      FROM documents WHERE doc_id % 3 = 0
+    ),
+    nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e),
+    reach AS (
+      WITH RECURSIVE r(a, b) AS (
+        SELECT id, id FROM nodes
+        UNION
+        SELECT r.a, e.dst FROM r JOIN e ON e.src = r.b
+      ) SELECT * FROM r
+    )
+    SELECT x.a AS id, min(x.b) AS component
+    FROM reach x JOIN reach y ON y.a = x.b AND y.b = x.a
+    GROUP BY x.a
+    """,
+)
+def q_strong_components(spark, sf_dir):
+    """G2 STRONG mode (otp_graph_import.py:161): FW-BW trim-settle SCC;
+    oracle = recursive-CTE mutual-reachability closure."""
+    return strongly_connected_components(_scc_edges(spark, sf_dir), max_rounds=20)
+
+
+@register(
+    "g_connected_components",
+    f"""
+    WITH e AS (
+      SELECT ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_GRAPH_NODES} AS src,
+             ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_GRAPH_NODES} AS dst
+      FROM documents
+    ),
+    sym AS (
+      SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e
+    ),
+    nodes AS (SELECT DISTINCT a AS id FROM sym),
+    walk AS (
+      WITH RECURSIVE w(id, seed) AS (
+        SELECT id, id FROM nodes
+        UNION
+        SELECT s.b, w.seed FROM w JOIN sym s ON s.a = w.id
+      ) SELECT * FROM w
+    )
+    SELECT id, min(seed) AS component FROM walk GROUP BY id
+    """,
+)
+def q_connected_components(spark, sf_dir):
+    """G2 re-expression: iterative min-label propagation; DuckDB oracle
+    is a recursive-CTE reachability closure."""
+    return connected_components(_graph_edges(spark, sf_dir))
 
 
 # -------------------------------------------- multi-vertex sampling (F4) --

@@ -430,163 +430,6 @@ def q_ring_area_centroid(spark, sf_dir):
 
 
 @register(
-    "j_interval_join",
-    """
-    WITH w AS (
-      SELECT event_id AS window_id, ts AS start_ts,
-             ts + to_seconds(CAST(1000 + event_id * 13 % 5000 AS BIGINT)) AS end_ts
-      FROM events WHERE event_id % 17 = 0
-    ),
-    p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-    SELECT p.event_id, p.user_id, p.ts, w.window_id, w.start_ts, w.end_ts
-    FROM p JOIN w ON w.start_ts <= p.ts AND p.ts < w.end_ts
-    """,
-)
-def q_interval_join(spark, sf_dir):
-    """Interval (range) join via 1-D binning — the temporal analogue
-    of the cell-indexed spatial join (operators/temporal.interval_join:
-    hour-bin explode + equi-join + containment refine, no
-    broadcast-nested-loop). Oracle: the plain inequality join DuckDB
-    can afford at this scale."""
-    from hope_graph_builder_spark.operators.temporal import interval_join
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = e.filter(F.col("event_id") % 17 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("start_ts"),
-        (
-            F.col("ts")
-            + F.make_interval(
-                secs=(F.lit(1000) + F.col("event_id") * 13 % 5000).cast("double")
-            )
-        ).alias("end_ts"),
-    )
-    p = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    return interval_join(p, w).select(
-        "event_id", "user_id", "ts", "window_id", "start_ts", "end_ts"
-    )
-
-
-@register(
-    "j_interval_cover",
-    """
-    WITH w AS (
-      SELECT event_id AS window_id, ts AS start_ts,
-             ts + to_seconds(CAST(CASE WHEN event_id % 5 = 0
-                  THEN 200000 + event_id * 7 % 400000
-                  ELSE 1000 + event_id * 13 % 5000 END AS BIGINT)) AS end_ts
-      FROM events WHERE event_id % 17 = 0
-    ),
-    p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-    SELECT p.event_id, p.user_id, p.ts, w.window_id, w.start_ts, w.end_ts
-    FROM p JOIN w ON w.start_ts <= p.ts AND p.ts < w.end_ts
-    """,
-)
-def q_interval_cover(spark, sf_dir):
-    """Interval join under a HEAVY-TAILED interval table (every 5th
-    window is 2.3–6.9 DAYS long vs the 17–100-minute typical case —
-    56–167 hour-bins each, where the single-level explode would let
-    the tail dominate shuffle volume). The cover valve
-    (interval_join(max_cover=16)) routes each interval to the
-    coarsest-needed level of the bin hierarchy (hour → 8 h → 64 h …),
-    bounding every interval's explode at max_cover bins; levels
-    union, each interval lives in exactly one level. Oracle: the
-    plain inequality join — results must be identical to the
-    single-level and valve-free forms."""
-    from hope_graph_builder_spark.operators.temporal import interval_join
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = e.filter(F.col("event_id") % 17 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("start_ts"),
-        (
-            F.col("ts")
-            + F.make_interval(
-                secs=F.when(
-                    F.col("event_id") % 5 == 0,
-                    F.lit(200000) + F.col("event_id") * 7 % 400000,
-                ).otherwise(
-                    F.lit(1000) + F.col("event_id") * 13 % 5000
-                ).cast("double")
-            )
-        ).alias("end_ts"),
-    )
-    p = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    return interval_join(p, w, max_cover=16).select(
-        "event_id", "user_id", "ts", "window_id", "start_ts", "end_ts"
-    )
-
-
-@register(
-    "j_sample_join",
-    """
-    WITH a AS (SELECT event_id AS a_id, user_id AS k FROM events
-               WHERE event_type = 'click'),
-    b AS (SELECT event_id AS b_id, user_id AS k FROM events
-          WHERE event_type = 'view'),
-    ca AS (SELECT k, count(*) AS ca FROM a GROUP BY k),
-    cb AS (SELECT k, count(*) AS cb FROM b GROUP BY k),
-    keys AS (
-      SELECT ca.k, ca.ca, cb.cb, ca.ca * cb.cb AS p,
-             CAST(('0x' || substr(md5(CAST(ca.k AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 64 AS kb
-      FROM ca JOIN cb USING (k)
-    ),
-    offs AS (
-      SELECT *, coalesce(sum(p) OVER (ORDER BY kb, k
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM keys
-    ),
-    tot AS (SELECT sum(p) AS pt FROM keys),
-    idx AS (
-      SELECT (j * (pt // 100) + (j * (pt % 100)) // 100)
-             + CAST(('0x' || substr(md5('js0#' || CAST(j AS VARCHAR)), 1, 15))
-                    AS BIGINT)
-               % (((j + 1) * (pt // 100) + ((j + 1) * (pt % 100)) // 100)
-                  - (j * (pt // 100) + (j * (pt % 100)) // 100)) AS pos
-      FROM generate_series(0, 99) AS t(j), tot
-    ),
-    hit AS (
-      SELECT idx.pos, o.k,
-             (idx.pos - o.off) // o.cb AS ia,
-             (idx.pos - o.off) % o.cb AS ib
-      FROM idx JOIN offs o ON idx.pos >= o.off AND idx.pos < o.off + o.p
-    ),
-    ra AS (SELECT k, a_id,
-                  row_number() OVER (PARTITION BY k ORDER BY a_id) - 1 AS ia
-           FROM a),
-    rb AS (SELECT k, b_id,
-                  row_number() OVER (PARTITION BY k ORDER BY b_id) - 1 AS ib
-           FROM b)
-    SELECT CAST(hit.pos AS BIGINT) AS idx, hit.k AS user_id, ra.a_id, rb.b_id
-    FROM hit
-    JOIN ra ON hit.k = ra.k AND hit.ia = ra.ia
-    JOIN rb ON hit.k = rb.k AND hit.ib = rb.ib
-    """,
-)
-def q_sample_join(spark, sf_dir):
-    """Uniform sampling over a join WITHOUT materializing it
-    (operators/join_sample.join_uniform_sample, the
-    sampling-over-joins line): 100 systematic-stratified pairs from
-    the click×view per-user join. The oracle replays the whole
-    bijection — pair counts, bucket-major key offsets, overflow-safe
-    stratum indices, grid inversion and the row-rank lookups — so
-    every sampled (idx, key, a, b) must match exactly."""
-    from hope_graph_builder_spark.operators.join_sample import (
-        join_uniform_sample,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("a_id"), "user_id"
-    )
-    b = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("b_id"), "user_id"
-    )
-    return join_uniform_sample(a, b, "user_id", 100, "a_id", "b_id", salt="js0")
-
-
-@register(
     "j_props_parse",
     """
     WITH e AS (
@@ -632,163 +475,6 @@ def q_props_parse(spark, sf_dir):
 
 
 @register(
-    "j_sessionize",
-    """
-    WITH e AS (
-      SELECT event_id, user_id, ts, epoch_us(ts) AS us FROM events
-    ),
-    l AS (
-      SELECT event_id, user_id, ts, us,
-             lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev
-      FROM e
-    )
-    SELECT event_id, user_id, ts,
-           CAST(sum(CASE WHEN prev IS NULL OR us - prev >= 30000000000
-                         THEN 1 ELSE 0 END)
-                OVER (PARTITION BY user_id ORDER BY us, event_id) - 1
-                AS BIGINT) AS session_seq
-    FROM l
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """Session assignment (operators/temporal.sessionize): new session
-    at every >= 30000 s gap per user (the streaming session_window
-    boundary rule), exact integer-microsecond gap arithmetic, ties
-    broken by event_id. The oracle replays the lag/cumsum islands —
-    every event's session_seq must match."""
-    from hope_graph_builder_spark.operators.temporal import sessionize
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "ts"
-    )
-    return sessionize(e, gap_seconds=30000)
-
-
-@register(
-    "j_session_stats",
-    """
-    WITH e AS (
-      SELECT event_id, user_id, ts, epoch_us(ts) AS us FROM events
-    ),
-    l AS (
-      SELECT event_id, user_id, ts, us,
-             lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev
-      FROM e
-    ),
-    s AS (
-      SELECT user_id, ts, us,
-             sum(CASE WHEN prev IS NULL OR us - prev >= 30000000000
-                      THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY us, event_id) - 1
-               AS session_seq
-      FROM l
-    )
-    SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS ts_start, max(ts) AS ts_end,
-           CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS duration_us
-    FROM s GROUP BY 1, 2
-    """,
-)
-def q_session_stats(spark, sf_dir):
-    """Per-session rollup (operators/temporal.session_stats): event
-    count, exact start/end timestamps and integer-microsecond
-    duration per (user, session). The batch twin of a streaming
-    session_window aggregation."""
-    from hope_graph_builder_spark.operators.temporal import session_stats
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "ts"
-    )
-    return session_stats(e, gap_seconds=30000)
-
-
-@register(
-    "j_asof_join",
-    """
-    WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-    r AS (SELECT user_id, event_id, ts, value FROM events WHERE event_type = 'view')
-    SELECT l.event_id, l.user_id, l.ts,
-           r.event_id AS prev_event_id, r.ts AS prev_ts, r.value AS prev_value
-    FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-    """,
-)
-def q_asof_join(spark, sf_dir):
-    """As-of join (point-in-time): for each click, the latest view by
-    the same user at or before it. Engine: the merge-sorted
-    union+window re-expression (operators/temporal.asof_join — one
-    exchange + one sort, no range blowup); oracle: DuckDB's NATIVE
-    ASOF JOIN, a fully independent implementation of the semantics."""
-    from hope_graph_builder_spark.operators.temporal import asof_join
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    left = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    right = e.filter(F.col("event_type") == "view").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    return asof_join(left, right, by="user_id", payload=["event_id", "ts", "value"])
-
-
-_GF_LO = 1704412800 // 3600  # 2024-01-05 00:00 UTC, hour bins
-_GF_HI = 1704585600 // 3600  # 2024-01-07 00:00 UTC
-
-
-@register(
-    "t_gapfill_locf",
-    f"""
-    WITH s AS (
-      SELECT user_id, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS bin, ts, event_id, value
-      FROM events
-      WHERE CAST(floor(epoch(ts) / 3600) AS BIGINT) >= {_GF_LO}
-        AND CAST(floor(epoch(ts) / 3600) AS BIGINT) < {_GF_HI}
-    ),
-    obs AS (
-      SELECT user_id, bin, value FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY user_id, bin ORDER BY ts DESC, event_id DESC) AS rn
-        FROM s) WHERE rn = 1
-    ),
-    keys AS (SELECT DISTINCT user_id FROM events),
-    grid AS (SELECT user_id, unnest(range({_GF_LO}, {_GF_HI})) AS bin FROM keys),
-    j AS (
-      SELECT g.user_id, g.bin, o.value
-      FROM grid g LEFT JOIN obs o ON o.user_id = g.user_id AND o.bin = g.bin
-    )
-    SELECT user_id, CAST(bin * 3600 AS BIGINT) AS bucket_s,
-           last_value(value IGNORE NULLS) OVER (
-             PARTITION BY user_id ORDER BY bin
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled,
-           value IS NOT NULL AS observed
-    FROM j
-    """,
-)
-def q_gapfill_locf(spark, sf_dir):
-    """Hypertable time_bucket_gapfill + locf (operators/temporal.
-    gapfill_locf): every key × every hour bucket of a 2-day literal
-    window; a bucket's value is its LAST observation (ts desc,
-    event_id desc — total order), empty buckets carry forward, leading
-    empties stay NULL. The oracle replays bucketing, the per-bucket
-    argmax, the grid, and the IGNORE NULLS carry — row counts
-    (keys × buckets exactly), carried values, and the observed flags
-    all hash-pinned."""
-    from hope_graph_builder_spark.operators.temporal import gapfill_locf
-
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = gapfill_locf(
-        e.select("user_id", "ts", "value", "event_id"),
-        by="user_id", ts="ts", value="value", bucket_seconds=3600,
-        start_ts="2024-01-05 00:00:00", end_ts="2024-01-07 00:00:00",
-        id_col="event_id",
-    )
-    return out.select(
-        "user_id",
-        F.unix_timestamp("bucket_ts").alias("bucket_s"),
-        "value_filled",
-        "observed",
-    )
-
-
-@register(
     "f18_combined",
     """
     SELECT event_id,
@@ -808,68 +494,6 @@ def q_f18(spark, sf_dir):
             F.coalesce(a, F.least(F.lit(1.0), F.col("value") / 200.0 + 0.6 * (F.col("value") / 50.0))),
             6,
         ).alias("combined"),
-    )
-
-
-@register(
-    "w_sessionize",
-    """
-    WITH t AS (
-      SELECT user_id, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-      FROM events
-    )
-    SELECT user_id,
-           CAST(1 + sum(CASE WHEN prev IS NOT NULL AND us - prev > 600000000 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_sessions
-    FROM t GROUP BY user_id
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """Sessionization: gap > 10 min starts a new session (lag + cumsum
-    pattern; micros-exact cross-engine)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        e.withColumn("prev", F.lag("us").over(w))
-        .groupBy("user_id")
-        .agg(
-            (
-                F.lit(1)
-                + F.sum(
-                    F.when(
-                        F.col("prev").isNotNull() & ((F.col("us") - F.col("prev")) > 600_000_000),
-                        1,
-                    ).otherwise(0)
-                )
-            ).alias("n_sessions")
-        )
-    )
-
-
-@register(
-    "w_time_buckets",
-    """
-    SELECT epoch_us(ts) // 300000000 AS bucket, event_type, count(*) AS cnt,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
-    FROM events GROUP BY 1, 2
-    """,
-)
-def q_time_buckets(spark, sf_dir):
-    """Windowed aggregation (batch twin of the streaming 5-min window)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        e.withColumn("us", F.unix_micros(F.col("ts").cast("timestamp")))
-        # integer DIV, not floor(double /): exact like DuckDB's //
-        .withColumn("bucket", F.expr("us DIV 300000000"))
-        .drop("us")
-        .groupBy("bucket", "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total"),
-        )
     )
 
 

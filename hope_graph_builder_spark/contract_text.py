@@ -1,5 +1,5 @@
 """Contract entries for the training-data-pipeline operators: dedup,
-text analysis, similarity search, multimodal plumbing, graph CC.
+text analysis, multimodal plumbing, web text and corpus shaping.
 
 Oracle twins reproduce the exact same md5-derived hashing and
 sequential-fold float arithmetic (validated primitives, oracle.py).
@@ -12,21 +12,13 @@ from pyspark.sql import functions as F
 
 from hope_graph_builder_spark import synth
 from hope_graph_builder_spark.contract import register
-from hope_graph_builder_spark.operators import dedup, multimodal, similarity, text
-from hope_graph_builder_spark.operators.graph import (
-    connected_components,
-    strongly_connected_components,
-)
+from hope_graph_builder_spark.operators import dedup, multimodal, text
 
 _H60 = "CAST(('0x' || substr(md5({expr}),1,15)) AS BIGINT)"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # DuckDB twins of the dedup building blocks -------------------------------
@@ -469,131 +461,6 @@ def q_fingerprint(spark, sf_dir):
     )
 
 
-# ------------------------------------------------------------ similarity --
-
-_SQL_VDOT = (
-    "list_reduce(list_transform(list_zip({a}, {b}), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),"
-    " (acc, x) -> acc + x)"
-)
-
-
-@register(
-    "e_cosine_topk",
-    f"""
-    WITH c AS (SELECT vec_id, embedding FROM embeddings),
-    q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-             {_SQL_VDOT.format(a='q.embedding', b='c.embedding')}
-             / (sqrt({_SQL_VDOT.format(a='q.embedding', b='q.embedding')})
-                * sqrt({_SQL_VDOT.format(a='c.embedding', b='c.embedding')})) AS cos
-      FROM c, q WHERE q.vec_id != c.vec_id
-    )
-    SELECT query_id, cand_id, round_even(cos, 9) AS cos, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
-)
-def q_cosine_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    out = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
-    return out.select(
-        "query_id", "cand_id", F.bround("cos", 9).alias("cos"), F.col("rank").alias("rnk")
-    )
-
-
-def _sql_lsh_bucket(vec: str, plane_offset: int = 0) -> str:
-    terms = []
-    for j in range(similarity.LSH_BITS):
-        w = "[" + ", ".join(
-            repr(similarity.lsh_plane_weight(plane_offset + j, k))
-            for k in range(similarity.DIM)
-        ) + "]"
-        dotv = _SQL_VDOT.format(a=vec, b=w)
-        terms.append(f"(CASE WHEN {dotv} >= 0.0 THEN (1::BIGINT << {j}) ELSE 0 END)")
-    return " + ".join(terms)
-
-
-@register(
-    "e_lsh_buckets",
-    f"SELECT vec_id, {_sql_lsh_bucket('embedding')} AS bucket FROM embeddings",
-)
-def q_lsh_buckets(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    v = similarity._as_double(F.col("embedding"))
-    return emb.select("vec_id", similarity.sign_lsh_bucket(v).alias("bucket"))
-
-
-@register(
-    "e_ann_lsh_topk",
-    f"""
-    WITH c AS (SELECT vec_id, embedding, {_sql_lsh_bucket('embedding')} AS bucket FROM embeddings),
-    q AS (SELECT * FROM c WHERE vec_id < 8),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-             {_SQL_VDOT.format(a='q.embedding', b='c.embedding')}
-             / (sqrt({_SQL_VDOT.format(a='q.embedding', b='q.embedding')})
-                * sqrt({_SQL_VDOT.format(a='c.embedding', b='c.embedding')})) AS cos
-      FROM c JOIN q ON c.bucket = q.bucket AND q.vec_id != c.vec_id
-    )
-    SELECT query_id, cand_id, round_even(cos, 9) AS cos, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
-)
-def q_ann_lsh(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    out = similarity.ann_lsh_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
-    return out.select(
-        "query_id", "cand_id", F.bround("cos", 9).alias("cos"), F.col("rank").alias("rnk")
-    )
-
-
-@register(
-    "e_ann_multitable",
-    f"""
-    WITH cb AS (
-      SELECT vec_id, 0 AS tbl, {_sql_lsh_bucket('embedding', 0)} AS bucket FROM embeddings
-      UNION ALL
-      SELECT vec_id, 1 AS tbl, {_sql_lsh_bucket('embedding', similarity.PLANE_STRIDE)} AS bucket
-      FROM embeddings
-    ),
-    qb AS (SELECT * FROM cb WHERE vec_id < 8),
-    pairs AS (
-      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
-      FROM cb c JOIN qb q ON c.tbl = q.tbl AND c.bucket = q.bucket AND q.vec_id != c.vec_id
-    ),
-    scored AS (
-      SELECT p.query_id, p.cand_id,
-             {_SQL_VDOT.format(a='eq.embedding', b='ec.embedding')}
-             / (sqrt({_SQL_VDOT.format(a='eq.embedding', b='eq.embedding')})
-                * sqrt({_SQL_VDOT.format(a='ec.embedding', b='ec.embedding')})) AS cos
-      FROM pairs p
-      JOIN embeddings ec ON ec.vec_id = p.cand_id
-      JOIN embeddings eq ON eq.vec_id = p.query_id
-    )
-    SELECT query_id, cand_id, round_even(cos, 9) AS cos, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
-)
-def q_ann_multitable(spark, sf_dir):
-    """Multi-table LSH ANN (the 100 TB shape: L tables × more bits —
-    per-bucket candidate sets shrink exponentially, union recall wins
-    back what longer codes lose; single-table 8-bit leaves n/256 per
-    bucket, quadratic within bucket at web scale)."""
-    emb = _emb(spark, sf_dir)
-    out = similarity.ann_multitable_lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, tables=2
-    )
-    return out.select(
-        "query_id", "cand_id", F.bround("cos", 9).alias("cos"), F.col("rank").alias("rnk")
-    )
-
-
 # ------------------------------------------------------------ multimodal --
 
 @register(
@@ -733,142 +600,6 @@ def q_bmp_features(spark, sf_dir):
     return feats.select(
         "url", "width", "height", "mean_r", "mean_g", "mean_b", "wsum"
     )
-
-
-# ------------------------------------------------------------------ graph --
-
-N_GRAPH_NODES = 2000
-
-
-def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fr = synth.xy_fragments("doc_id")
-    d = _docs(spark, sf_dir)
-    h1 = f"((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD})"
-    h2 = f"((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD})"
-    return d.select(
-        F.expr(f"{h1} % {N_GRAPH_NODES}").alias("src"),
-        F.expr(f"{h2} % {N_GRAPH_NODES}").alias("dst"),
-    )
-
-
-N_SCC_NODES = 400
-
-
-def _scc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed graph with real cycles: hash edges + reversed copies
-    for every third page."""
-    d = _docs(spark, sf_dir)
-    h1 = f"((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_SCC_NODES}"
-    h2 = f"((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_SCC_NODES}"
-    fwd = d.select(F.expr(h1).alias("src"), F.expr(h2).alias("dst"))
-    back = d.filter(F.col("doc_id") % 3 == 0).select(
-        F.expr(h2).alias("src"), F.expr(h1).alias("dst")
-    )
-    return fwd.unionByName(back)
-
-
-@register(
-    "g_strong_components",
-    f"""
-    WITH e AS (
-      SELECT ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_SCC_NODES} AS src,
-             ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_SCC_NODES} AS dst
-      FROM documents
-      UNION ALL
-      SELECT ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_SCC_NODES} AS src,
-             ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_SCC_NODES} AS dst
-      FROM documents WHERE doc_id % 3 = 0
-    ),
-    nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e),
-    reach AS (
-      WITH RECURSIVE r(a, b) AS (
-        SELECT id, id FROM nodes
-        UNION
-        SELECT r.a, e.dst FROM r JOIN e ON e.src = r.b
-      ) SELECT * FROM r
-    )
-    SELECT x.a AS id, min(x.b) AS component
-    FROM reach x JOIN reach y ON y.a = x.b AND y.b = x.a
-    GROUP BY x.a
-    """,
-)
-def q_strong_components(spark, sf_dir):
-    """G2 STRONG mode (otp_graph_import.py:161): FW-BW trim-settle SCC;
-    oracle = recursive-CTE mutual-reachability closure."""
-    return strongly_connected_components(_scc_edges(spark, sf_dir), max_rounds=20)
-
-
-@register(
-    "g_connected_components",
-    f"""
-    WITH e AS (
-      SELECT ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_GRAPH_NODES} AS src,
-             ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_GRAPH_NODES} AS dst
-      FROM documents
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e
-    ),
-    nodes AS (SELECT DISTINCT a AS id FROM sym),
-    walk AS (
-      WITH RECURSIVE w(id, seed) AS (
-        SELECT id, id FROM nodes
-        UNION
-        SELECT s.b, w.seed FROM w JOIN sym s ON s.a = w.id
-      ) SELECT * FROM w
-    )
-    SELECT id, min(seed) AS component FROM walk GROUP BY id
-    """,
-)
-def q_connected_components(spark, sf_dir):
-    """G2 re-expression: iterative min-label propagation; DuckDB oracle
-    is a recursive-CTE reachability closure."""
-    return connected_components(_graph_edges(spark, sf_dir))
-
-
-def _sql_pagerank(iters: int = 3, dp: int = 5) -> str:
-    """DuckDB twin of operators/graph.pagerank: the iterations
-    unrolled as CTE pairs (quantized contributions → decimal sum →
-    damped update), over the same hash-edge fixture."""
-    e = (
-        f"SELECT ((doc_id * {synth.A1} + {synth.C1}) % {synth.MOD}) % {N_GRAPH_NODES} AS src,"
-        f" ((doc_id * {synth.A2} + {synth.C2}) % {synth.MOD}) % {N_GRAPH_NODES} AS dst"
-        " FROM documents"
-    )
-    ctes = [
-        f"e AS ({e})",
-        "nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e)",
-        "deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src)",
-        "r0 AS (SELECT id, CAST(1 AS DOUBLE) AS rank FROM nodes)",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"c{i} AS (SELECT e.dst AS id,"
-            f" CAST(round_even(r.rank / deg.deg, {dp}) AS DECIMAL(20,10)) AS c"
-            f" FROM e JOIN r{i - 1} r ON r.id = e.src JOIN deg ON deg.src = e.src)"
-        )
-        ctes.append(
-            f"s{i} AS (SELECT id, CAST(sum(c) AS DOUBLE) AS s FROM c{i} GROUP BY id)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT n.id,"
-            f" round_even(CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE)"
-            f" * coalesce(s{i}.s, CAST(0 AS DOUBLE)), {dp}) AS rank"
-            f" FROM nodes n LEFT JOIN s{i} ON s{i}.id = n.id)"
-        )
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT id, rank FROM r{iters}"
-
-
-@register("g_pagerank", _sql_pagerank())
-def q_pagerank(spark, sf_dir):
-    """Quantized PageRank (operators/graph.pagerank), 3 power
-    iterations of r' = 0.15 + 0.85·Σ r/outdeg with quantize-then-
-    decimal-sum contributions — every node's rank double must match
-    the unrolled SQL twin exactly (the whole iteration TRAJECTORY is
-    order-free, not just the final histogram)."""
-    from hope_graph_builder_spark.operators.graph import pagerank
-
-    return pagerank(_graph_edges(spark, sf_dir), iters=3)
 
 
 # ------------------------------------------------------ text extraction --
@@ -1885,56 +1616,6 @@ def q_bpe_pairs(spark, sf_dir):
 
 
 @register(
-    "c_weighted_sample",
-    """
-    WITH d AS (
-      SELECT doc_id, n_chars AS w,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 64 AS kb
-      FROM documents WHERE n_chars > 0
-    ),
-    boff AS (SELECT kb, sum(w) AS bw FROM d GROUP BY kb),
-    boff2 AS (
-      SELECT kb, coalesce(sum(bw) OVER (ORDER BY kb
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS boffv
-      FROM boff
-    ),
-    r AS (
-      SELECT d.doc_id, d.w,
-             boff2.boffv + coalesce(sum(d.w) OVER (PARTITION BY d.kb
-               ORDER BY d.doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM d JOIN boff2 USING (kb)
-    ),
-    tot AS (SELECT sum(w) AS wt FROM d),
-    idx AS (
-      SELECT (j * (wt // 200) + (j * (wt % 200)) // 200)
-             + CAST(('0x' || substr(md5('ws0#' || CAST(j AS VARCHAR)), 1, 15))
-                    AS BIGINT)
-               % (((j + 1) * (wt // 200) + ((j + 1) * (wt % 200)) // 200)
-                  - (j * (wt // 200) + (j * (wt % 200)) // 200)) AS pos
-      FROM generate_series(0, 199) AS t(j), tot
-      WHERE ((j + 1) * (wt // 200) + ((j + 1) * (wt % 200)) // 200)
-            > (j * (wt // 200) + (j * (wt % 200)) // 200)
-    )
-    SELECT CAST(idx.pos AS BIGINT) AS idx, r.doc_id
-    FROM idx JOIN r ON idx.pos >= r.off AND idx.pos < r.off + r.w
-    """,
-)
-def q_weighted_sample(spark, sf_dir):
-    """Deterministic token-mass sampling (operators/join_sample
-    .weighted_sample): 200 draws with probability ∝ n_chars via
-    systematic strata over the cumulative-weight axis. The oracle
-    replays the bucket-decomposed weight offsets, the overflow-safe
-    strata and the containment — every draw's (idx, doc) must
-    match."""
-    from hope_graph_builder_spark.operators.join_sample import weighted_sample
-
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    return weighted_sample(d, "n_chars", 200, salt="ws0")
-
-
-@register(
     "c_quota_cap",
     """
     WITH h AS (
@@ -2151,256 +1832,6 @@ def q_charlm_score(spark, sf_dir):
         F.col("sum_lp").cast("double").alias("sum_lp_d"),
         "avg_nll",
     )
-
-
-def _sql_cos(a: str, b: str) -> str:
-    return (
-        f"{_SQL_VDOT.format(a=a, b=b)}"
-        f" / (sqrt({_SQL_VDOT.format(a=a, b=a)})"
-        f" * sqrt({_SQL_VDOT.format(a=b, b=b)}))"
-    )
-
-
-@register(
-    "e_ann_ivf_topk",
-    f"""
-    WITH c AS (SELECT vec_id, embedding FROM embeddings),
-    cen AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS list_id, embedding AS cen
-      FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)
-    ),
-    assigned AS (
-      SELECT cand_id, cv, list_id FROM (
-        SELECT c.vec_id AS cand_id, c.embedding AS cv, cen.list_id,
-               row_number() OVER (
-                 PARTITION BY c.vec_id
-                 ORDER BY {_sql_cos('c.embedding', 'cen.cen')} DESC, cen.list_id
-               ) AS arnk
-        FROM c, cen
-      ) WHERE arnk = 1
-    ),
-    q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 29 = 0),
-    probes AS (
-      SELECT query_id, qv, list_id FROM (
-        SELECT q.vec_id AS query_id, q.embedding AS qv, cen.list_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_sql_cos('q.embedding', 'cen.cen')} DESC, cen.list_id
-               ) AS qrnk
-        FROM q, cen
-      ) WHERE qrnk <= 2
-    ),
-    scored AS (
-      SELECT p.query_id, a.cand_id, {_sql_cos('p.qv', 'a.cv')} AS cos
-      FROM assigned a JOIN probes p USING (list_id)
-      WHERE p.query_id != a.cand_id
-    )
-    SELECT query_id, cand_id, round_even(cos, 9) AS cos, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
-)
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF-routed ANN (similarity.ivf_topk): nlist=8 deterministic
-    anchor centroids, nprobe=2 — the cluster-routing scale path
-    complementing the LSH family. The oracle replays assignment,
-    probing and in-list exact scoring with the identical fold-order
-    dot products, so routing AND scores must match exactly."""
-    emb = _emb(spark, sf_dir)
-    out = similarity.ivf_topk(
-        emb, emb.filter(F.col("vec_id") % 29 == 0), k=5, nlist=8, nprobe=2
-    )
-    return out.select(
-        "query_id", "cand_id", F.bround("cos", 9).alias("cos"), F.col("rank").alias("rnk")
-    )
-
-
-def _sql_kmeans(k: int = 8, iters: int = 2, dp: int = 5, dim: int = 64) -> str:
-    """DuckDB twin of similarity.kmeans_lloyd: iterations unrolled as
-    CTE pairs (assign → per-dimension decimal-sum mean). Emits one row
-    per (list_id, dim) of the FINAL centroids."""
-    ctes = [
-        "c AS (SELECT vec_id AS cand_id, "
-        f"list_transform(embedding, x -> round_even(CAST(x AS DOUBLE), {dp})) AS cv "
-        "FROM embeddings)",
-        "cen0 AS (SELECT row_number() OVER (ORDER BY cand_id) - 1 AS list_id,"
-        " cv AS cen FROM (SELECT * FROM c ORDER BY cand_id LIMIT"
-        f" {k}))",
-    ]
-    for i in range(1, iters + 1):
-        prev = f"cen{i - 1}"
-        ctes.append(
-            f"a{i} AS (SELECT cand_id, cv, list_id FROM ("
-            f"SELECT c.cand_id, c.cv, {prev}.list_id, "
-            f"row_number() OVER (PARTITION BY c.cand_id "
-            f"ORDER BY {_sql_cos('c.cv', prev + '.cen')} DESC, {prev}.list_id) AS arnk "
-            f"FROM c, {prev}) WHERE arnk = 1)"
-        )
-        ctes.append(
-            f"s{i} AS (SELECT list_id, r.range - 1 AS pos, "
-            f"CAST(sum(CAST(cv[r.range] AS DECIMAL(20,10))) AS DOUBLE) / count(*) AS m, "
-            f"count(*) AS n "
-            f"FROM a{i}, range(1, {dim + 1}) r GROUP BY list_id, r.range)"
-        )
-        ctes.append(
-            f"cen{i} AS (SELECT list_id, list(m ORDER BY pos) AS cen, min(n) AS size "
-            f"FROM s{i} GROUP BY list_id)"
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT list_id, pos, m AS cval, n AS size FROM s{iters}"
-    )
-
-
-@register(
-    "e_kmeans_centroids",
-    _sql_kmeans(),
-)
-def q_kmeans_centroids(spark, sf_dir):
-    """Distributed Lloyd k-means (similarity.kmeans_lloyd) — the
-    trained coarse quantizer behind ivf_topk(centroids=...). Two full
-    iterations (spherical argmax-cosine assignment, per-dimension
-    decimal-sum mean) verified value-exact against the unrolled SQL
-    twin: assignment routing AND every centroid component double must
-    match. Quantize-then-decimal-sum makes the float mean order-free
-    (bround/round_even parity holds at ≤5 dp)."""
-    cen = similarity.kmeans_lloyd(_emb(spark, sf_dir), k=8, iters=2)
-    return cen.select(
-        "list_id", F.posexplode("cen").alias("pos", "cval"), "size"
-    )
-
-
-_SQL_EMB_D = "list_transform({v}, x -> CAST(x AS DOUBLE))"
-
-
-@register(
-    "e_ann_recall",
-    f"""
-    WITH c AS (SELECT vec_id, embedding FROM embeddings),
-    q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 29 = 0),
-    exact AS (
-      SELECT query_id, cand_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY {_sql_cos('q.embedding', 'c.embedding')} DESC,
-                          c.vec_id) AS rnk
-        FROM c, q WHERE q.vec_id != c.vec_id
-      ) z WHERE rnk <= 5
-    ),
-    cen AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS list_id,
-             embedding AS cen
-      FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8) y
-    ),
-    assigned AS (
-      SELECT cand_id, cv, list_id FROM (
-        SELECT c.vec_id AS cand_id, c.embedding AS cv, cen.list_id,
-               row_number() OVER (
-                 PARTITION BY c.vec_id
-                 ORDER BY {_sql_cos('c.embedding', 'cen.cen')} DESC,
-                          cen.list_id) AS arnk
-        FROM c, cen
-      ) z WHERE arnk = 1
-    ),
-    probes AS (
-      SELECT query_id, qv, list_id FROM (
-        SELECT q.vec_id AS query_id, q.embedding AS qv, cen.list_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_sql_cos('q.embedding', 'cen.cen')} DESC,
-                          cen.list_id) AS qrnk
-        FROM q, cen
-      ) z WHERE qrnk <= 2
-    ),
-    approx AS (
-      SELECT query_id, cand_id FROM (
-        SELECT p.query_id, a.cand_id,
-               row_number() OVER (PARTITION BY p.query_id
-                 ORDER BY {_sql_cos('p.qv', 'a.cv')} DESC, a.cand_id) AS rnk
-        FROM assigned a JOIN probes p USING (list_id)
-        WHERE p.query_id != a.cand_id
-      ) z WHERE rnk <= 5
-    ),
-    per AS (
-      SELECT e.query_id, count(*) AS n, count(ap.cand_id) AS h
-      FROM exact e LEFT JOIN approx ap
-        ON e.query_id = ap.query_id AND e.cand_id = ap.cand_id
-      GROUP BY e.query_id
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           CAST(sum(n) AS BIGINT) AS n_exact,
-           CAST(sum(h) AS BIGINT) AS n_hits,
-           CAST(sum(h) AS DOUBLE) / CAST(sum(n) AS DOUBLE) AS micro_recall
-    FROM per
-    """,
-)
-def q_ann_recall(spark, sf_dir):
-    """Recall@5 of the IVF ANN path against exact brute force
-    (similarity.ann_recall) — the measurement that tunes nprobe. The
-    oracle replays BOTH retrievals (identical fold-order cosines) and
-    the per-query hit counting; micro_recall is one division of two
-    exact integer sums, so the number is engine-exact (macro, a float
-    mean, is deliberately left out of the hash)."""
-    from hope_graph_builder_spark.operators import similarity
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.col("vec_id") % 29 == 0)
-    approx = similarity.ivf_topk(emb, qs, k=5, nlist=8, nprobe=2)
-    exact = similarity.cosine_topk(emb, qs, k=5)
-    return similarity.ann_recall(approx, exact).select(
-        "n_queries", "n_exact", "n_hits", "micro_recall"
-    )
-
-
-@register(
-    "e_embed_neardup",
-    f"""
-    WITH base AS (SELECT vec_id, {_SQL_EMB_D.format(v='embedding')} AS v FROM embeddings),
-    dup AS (
-      SELECT vec_id + 100000 AS vec_id,
-             list_concat([v[1] + CAST(0.001 AS DOUBLE)], v[2:]) AS v
-      FROM base WHERE vec_id % 10 = 0
-    ),
-    e AS (SELECT * FROM base UNION ALL SELECT * FROM dup),
-    b0 AS (SELECT vec_id, 0 AS tbl, {_sql_lsh_bucket('v', 0)} AS bucket FROM e),
-    b1 AS (SELECT vec_id, 1 AS tbl,
-           {{B1}} AS bucket FROM e),
-    bk AS (SELECT * FROM b0 UNION ALL SELECT * FROM b1),
-    cand AS (
-      SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-      FROM bk x JOIN bk y
-        ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id
-    ),
-    scored AS (
-      SELECT cand.a, cand.b,
-             {_SQL_VDOT.format(a='ea.v', b='eb.v')}
-             / (sqrt({_SQL_VDOT.format(a='ea.v', b='ea.v')})
-                * sqrt({_SQL_VDOT.format(a='eb.v', b='eb.v')})) AS cos
-      FROM cand JOIN e ea ON ea.vec_id = cand.a JOIN e eb ON eb.vec_id = cand.b
-    )
-    SELECT a, b, round_even(cos, 9) AS cos FROM scored WHERE cos >= 0.99
-    """.replace("{B1}", _sql_lsh_bucket('v', similarity.PLANE_STRIDE)),
-)
-def q_embed_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup (similarity.embedding_neardup):
-    LSH-candidates → exact-cosine-verify, exercised on a corpus
-    augmented with deterministic perturbed duplicates (vec_id+100000,
-    first component +0.001 → cos ≈ 0.9999) so the ≥0.99 threshold has
-    real matches. The oracle mirrors augmentation, BOTH LSH tables and
-    the verify with identical fold-order arithmetic."""
-    emb = _emb(spark, sf_dir)
-    base = emb.select("vec_id", similarity._as_double(F.col("embedding")).alias("v"))
-    dup = base.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("v", 1) + F.lit(0.001)),
-            F.slice("v", 2, similarity.DIM - 1),
-        ).alias("v"),
-    )
-    corpus = base.unionByName(dup)
-    out = similarity.embedding_neardup(corpus, threshold=0.99, tables=2, vec_col="v")
-    return out.select("a", "b", F.bround("cos", 9).alias("cos"))
 
 
 @register(

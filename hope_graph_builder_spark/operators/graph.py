@@ -33,9 +33,8 @@ def connected_components(
     (documented deviation for one-way-only subgraphs)."""
     # checkpoint sym BEFORE deriving labels from it: labels self-unions
     # sym, so building it from the un-checkpointed plan re-evaluates the
-    # whole upstream edge pipeline (e.g. the MinHash+LSH pair join in
-    # the webtext ingest) two more times (measured; _directed_min_reach
-    # always had the checkpoint-first ordering)
+    # whole upstream edge pipeline two more times (measured;
+    # _directed_min_reach always had the checkpoint-first ordering)
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -262,69 +261,3 @@ def redensify_ids(nodes: DataFrame, id_col: str = "id",
         .withColumn("new_id", F.col("_off") + (F.col("_mid") - F.col("_min")))
         .drop("_pid", "_mid", "_min", "_off")
     )
-
-
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    damping: float = 0.85,
-    dp: int = 5,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Quantized PageRank — the iterative float-fixpoint member of the
-    graph family: → (id, rank) after ``iters`` power iterations of
-    the UNNORMALIZED form r' = (1−d) + d·Σ_in r/outdeg with r₀ = 1
-    (ranks stay O(1), so quantization keeps full working precision).
-
-    Cross-engine exactness (the repo rule): each edge contribution is
-    half-even-quantized to ``dp`` decimals and summed in DECIMAL —
-    the distributed sum is order-free and exact, so every iteration's
-    ranks (and therefore the fixpoint trajectory) are bit-identical
-    in any engine; the oracle unrolls the same iterations in SQL.
-    Dangling nodes keep the standard simplification (their mass
-    leaks; the (1−d) floor keeps them ranked).
-
-    Plan shape per iteration: one broadcast-or-shuffle join of edges
-    to the (tiny) rank table, one groupBy(dst) with map-side partial
-    decimal sums, one left join back to nodes; localCheckpoint cuts
-    the lineage each round (same pattern as connected_components)."""
-    # materialize the edge projection once: the loop references it
-    # every iteration, so an expensive caller pipeline (LSH pairs, a
-    # parsed import) would otherwise re-run ``iters`` times; deg is
-    # likewise loop-invariant (at cluster scale swap localCheckpoint
-    # for a reliable checkpoint dir, as everywhere in this module)
-    edges = edges.select(F.col(src), F.col(dst)).localCheckpoint()
-    nodes = (
-        edges.select(F.col(src).alias("id"))
-        .unionByName(edges.select(F.col(dst).alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy(src).agg(F.count("*").alias("_deg")).localCheckpoint()
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for _ in range(int(iters)):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("id", src), src)
-            .join(deg, src)
-            .select(
-                F.col(dst).alias("id"),
-                F.bround(F.col("rank") / F.col("_deg"), dp)
-                .cast("decimal(20,10)")
-                .alias("_c"),
-            )
-        )
-        sums = contrib.groupBy("id").agg(F.sum("_c").cast("double").alias("_s"))
-        ranks = (
-            nodes.join(sums, "id", "left")
-            .select(
-                "id",
-                F.bround(
-                    F.lit(float(1.0 - damping))
-                    + F.lit(float(damping)) * F.coalesce("_s", F.lit(0.0)),
-                    dp,
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks

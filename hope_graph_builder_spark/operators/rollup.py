@@ -8,7 +8,7 @@ FROM the previous level's (already tiny) cell table via the parent-cell
 arithmetic, so level ℓ-1 shuffles ~4× fewer rows than level ℓ —
 total extra work is a geometric series over cell counts, independent
 of raw data size. Each level is MATERIALIZED (localCheckpoint — the
-same lineage-cut pattern as operators/graph.py and kmeans_lloyd)
+same lineage-cut pattern as operators/graph.py)
 before the next folds it: measured here, Catalyst does NOT reuse the
 base aggregation exchange across the union's branches (AQE plans each
 branch separately), so without the cut the raw scan would run once per

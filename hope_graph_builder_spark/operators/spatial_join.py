@@ -14,8 +14,10 @@ Refinement strategy:
 
 Skew: hot cells (e.g. a popular page hotspot) are salted — the POINT
 side gets `salt = pmod(xxhash64(id), k)`, the (small) polygon side is
-replicated k× — either a static factor or per-cell factors from a
-profile pass (`hot_cell_factors`). AQE skew-join stays on as backstop.
+replicated k× — with per-cell factors 1 ≤ k ≤ 64 from the ``hot``
+frame (CELL, _k), normally the profile pass `hot_cell_factors`; a
+uniform factor is ``cells.distinct().withColumn("_k", F.lit(k))``. AQE
+skew-join stays on as backstop.
 """
 
 from __future__ import annotations
@@ -127,12 +129,8 @@ def _pack_ck(salt_col):
 
 
 def _apply_salt(
-    points: DataFrame, polys: DataFrame, point_id: str, salt: int, hot: DataFrame | None
+    points: DataFrame, polys: DataFrame, point_id: str, hot: DataFrame | None
 ) -> tuple[DataFrame, DataFrame, list[str]]:
-    if not (1 <= salt <= _MAX_SALT):
-        raise ValueError(
-            f"salt must be in [1, {_MAX_SALT}] (7 packed key bits), got {salt}"
-        )
     if hot is not None:
         points = points.join(F.broadcast(hot), CELL, "left").withColumn(
             "_ck",
@@ -148,16 +146,6 @@ def _apply_salt(
             .drop("_k", SALT, CELL)
         )
         return points, polys, ["_ck"]
-    if salt > 1:
-        points = points.withColumn(
-            "_ck", _pack_ck(F.pmod(F.xxhash64(F.col(point_id)), F.lit(salt)))
-        ).drop(CELL)
-        polys = (
-            polys.withColumn(SALT, F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-            .withColumn("_ck", _pack_ck(F.col(SALT)))
-            .drop(SALT, CELL)
-        )
-        return points, polys, ["_ck"]
     return points, polys, [CELL]
 
 
@@ -169,7 +157,6 @@ def pip_join_rect(
     y: str = "y",
     how: str = "inner",
     point_id: str = "doc_id",
-    salt: int = 1,
     hot: DataFrame | None = None,
     broadcast_polys: bool = True,
 ) -> DataFrame:
@@ -182,7 +169,7 @@ def pip_join_rect(
     """
     p = with_point_cell(points, x, y, res)
     g = with_cover_cells(rects, "minx", "miny", "maxx", "maxy", res)
-    p, g, keys = _apply_salt(p, g, point_id, salt, hot)
+    p, g, keys = _apply_salt(p, g, point_id, hot)
     if broadcast_polys:
         g = F.broadcast(g)
     cand = p.join(g, keys, "inner")
@@ -208,7 +195,6 @@ def pip_join_wkb(
     point_id: str = "doc_id",
     poly_id: str = "poly_id",
     geom: str = "geom",
-    salt: int = 1,
     hot: DataFrame | None = None,
     broadcast_polys: bool = True,
 ) -> DataFrame:
@@ -226,7 +212,7 @@ def pip_join_wkb(
     """
     p = with_point_cell(points, x, y, res)
     g = with_cover_cells(polys, "minx", "miny", "maxx", "maxy", res)
-    p, g, keys = _apply_salt(p, g, point_id, salt, hot)
+    p, g, keys = _apply_salt(p, g, point_id, hot)
     if broadcast_polys:
         g = F.broadcast(g)
     cand = p.join(g, keys, "inner").drop(*keys, "minx", "miny", "maxx", "maxy")
@@ -259,7 +245,6 @@ def dwithin_join(
     y: str = "y",
     point_id: str = "doc_id",
     broadcast_points: bool = False,
-    salt: int = 1,
     hot: DataFrame | None = None,
 ) -> DataFrame:
     """points × 2-vertex segments within ``dist`` meters — fully native.
@@ -271,15 +256,15 @@ def dwithin_join(
     stays in whole-stage codegen).
     ``segments`` must carry x1, y1, x2, y2.
 
-    Skew: same valve as the PIP joins — ``salt``/``hot`` spray the
-    point side by pmod(xxhash64(point_id), k) and replicate the
-    cover-exploded segment side k× (hot: only in profiled hot cells),
-    joined on the packed single-long (cell, salt) key. A dense page
-    hotspot otherwise lands every pair of its cell in one task at
-    100 TB. Salted ≡ unsalted is pytest-asserted."""
+    Skew: same valve as the PIP joins — ``hot`` sprays the point side
+    by pmod(xxhash64(point_id), k) and replicates the cover-exploded
+    segment side k× in the hot cells, joined on the packed single-long
+    (cell, salt) key. A dense page hotspot otherwise lands every pair
+    of its cell in one task at 100 TB. Salted ≡ unsalted is
+    pytest-asserted."""
     g = with_dist_cover(segments, dist, res)
     p = with_point_cell(points, x, y, res)
-    p, g, keys = _apply_salt(p, g, point_id, salt, hot)
+    p, g, keys = _apply_salt(p, g, point_id, hot)
     cand = g.join(F.broadcast(p) if broadcast_points else p, keys, "inner").drop(*keys)
     return cand.filter(f"{_dist2_sql(x, y)} <= {dbl(dist * dist)}")
 
@@ -311,7 +296,6 @@ def dwithin_polyline_join(
     y: str = "y",
     point_id: str = "doc_id",
     line_id: str = "edge_id",
-    salt: int = 1,
     hot: DataFrame | None = None,
 ) -> DataFrame:
     """points × MULTI-VERTEX polylines within ``dist`` meters →
@@ -340,7 +324,7 @@ def dwithin_polyline_join(
     )
     g = with_dist_cover(segs, dist, res)
     p = with_point_cell(points, x, y, res)
-    p, g, keys = _apply_salt(p, g, point_id, salt, hot)
+    p, g, keys = _apply_salt(p, g, point_id, hot)
     cand = g.join(p, keys, "inner").drop(*keys)
     return (
         cand.withColumn("_d2", F.expr(_dist2_sql(x, y)))

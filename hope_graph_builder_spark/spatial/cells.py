@@ -36,18 +36,6 @@ def cell_size(res: int) -> float:
     return EXTENT_M / float(1 << res)
 
 
-def suggest_res(typical_extent_m: float) -> int:
-    """Resolution whose cell size ≈ the typical geometry extent, so a
-    polygon covers ~1-4 cells (cover rows stay linear in polygon count)
-    while per-cell candidate lists stay small. Clamped to [0, 20]."""
-    import math
-
-    if typical_extent_m <= 0:
-        return 12
-    res = round(math.log2(EXTENT_M / typical_extent_m))
-    return max(0, min(20, int(res)))
-
-
 def _floor_sql(v: str, res: int) -> str:
     return f"CAST(FLOOR(({v}) / {dbl(cell_size(res))}) AS BIGINT)"
 

@@ -142,9 +142,3 @@ def lonlat_to_mercator_expr(lon: Column, lat: Column) -> tuple[Column, Column]:
     x = F.radians(lon) * F.lit(R)
     y = F.log(F.tan(F.lit(float(np.pi / 4.0)) + F.radians(lat) / F.lit(2.0))) * F.lit(R)
     return x, y
-
-
-def mercator_to_lonlat_expr(x: Column, y: Column) -> tuple[Column, Column]:
-    lon = F.degrees(x / F.lit(R))
-    lat = F.degrees(F.atan(F.exp(y / F.lit(R))) * F.lit(2.0) - F.lit(float(np.pi / 2.0)))
-    return lon, lat

@@ -546,10 +546,3 @@ def trapezoid_areas(traps: np.ndarray) -> np.ndarray:
 def poly_union_area(polys: list[list[np.ndarray]]) -> float:
     """Exact union AREA of general polygons (trapezoid-sweep sum)."""
     return float(trapezoid_areas(poly_union_trapezoids(polys)).sum())
-
-
-def bbox_of(coords: np.ndarray) -> tuple[float, float, float, float]:
-    return (
-        float(coords[:, 0].min()), float(coords[:, 1].min()),
-        float(coords[:, 0].max()), float(coords[:, 1].max()),
-    )

@@ -181,13 +181,6 @@ def dense_ids(spark: SparkSession, sf_dir: str, mult: int) -> DataFrame:
     )
 
 
-def page_points_dense(spark: SparkSession, sf_dir: str, mult: int) -> DataFrame:
-    fr = xy_fragments("doc_id")
-    return dense_ids(spark, sf_dir, mult).select(
-        "doc_id", F.expr(fr["x"]).alias("x"), F.expr(fr["y"]).alias("y")
-    )
-
-
 def page_edges_dense(spark: SparkSession, sf_dir: str, mult: int) -> DataFrame:
     fr = xy_fragments("doc_id")
     return dense_ids(spark, sf_dir, mult).select(

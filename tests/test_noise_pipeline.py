@@ -209,8 +209,9 @@ def test_salting_preserves_results(spark, edges, layers):
         pip_join_rect(pts, layers, res=9, how="inner", point_id="xy_id")
         .groupBy("xy_id", "layer").agg(F.max("db").alias("db"))
     )
+    hot = with_point_cell(pts, "x", "y", 9).select("_cell").distinct().withColumn("_k", F.lit(4))
     salted = (
-        pip_join_rect(pts, layers, res=9, how="inner", point_id="xy_id", salt=4)
+        pip_join_rect(pts, layers, res=9, how="inner", point_id="xy_id", hot=hot)
         .groupBy("xy_id", "layer").agg(F.max("db").alias("db"))
     )
     assert base.exceptAll(salted).count() == 0

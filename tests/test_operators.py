@@ -1,12 +1,13 @@
-"""Operator-level tests: graph CC vs a Python union-find oracle,
-multimodal plumbing, dedup/similarity sanity."""
+"""Operator-level tests: graph CC vs a Python union-find oracle, the
+skew valves of the DWithin joins, the cell/xy_id SQL texts vs their
+numpy twins, multimodal plumbing and dedup/text sanity."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from hope_graph_builder_spark import synth
-from hope_graph_builder_spark.operators import dedup, multimodal, similarity
+from hope_graph_builder_spark.operators import dedup, multimodal
 from hope_graph_builder_spark.operators.graph import (
     connected_components,
     drop_small_components,
@@ -87,65 +88,6 @@ def test_minhash_catches_near_dups(spark):
     assert (1, 3) not in got and (2, 3) not in got
 
 
-def test_cosine_topk_self_similarity(spark):
-    emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3)
-    out = similarity.cosine_topk(emb, q, k=5).toPandas()
-    assert set(out.query_id) == {0, 1, 2}
-    assert (out.groupby("query_id").size() == 5).all()
-    assert (out.cos <= 1.0 + 1e-9).all() and (out.cos >= -1.0 - 1e-9).all()
-    # ANN recall: bucketed candidates are a subset ranked identically
-    ann = similarity.ann_lsh_topk(emb, q, k=5).toPandas()
-    assert set(ann.columns) == {"query_id", "cand_id", "cos", "rank"}
-
-
-def test_kmeans_lloyd_converges_and_feeds_ivf(spark):
-    """Lloyd iterations must tighten clusters on a separable fixture,
-    and ivf_topk(centroids=trained, nprobe=nlist) must equal the exact
-    brute-force top-k (with every list probed, routing cannot lose a
-    candidate)."""
-    import numpy as np
-
-    from hope_graph_builder_spark.operators import similarity
-
-    rng = np.random.RandomState(42)
-    centers = rng.normal(size=(4, 64))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(200):
-        c = i % 4
-        v = centers[c] + 0.15 * rng.normal(size=64)
-        v /= np.linalg.norm(v)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    cen1 = similarity.kmeans_lloyd(emb, k=4, iters=1)
-    cen3 = similarity.kmeans_lloyd(emb, k=4, iters=3)
-
-    def sse(cen_df):
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
-
-        c = emb.select(F.col("vec_id").alias("cand_id"),
-                       similarity._as_double(F.col("embedding")).alias("cv"))
-        wa = Window.partitionBy("cand_id").orderBy(F.desc("acos"), F.asc("list_id"))
-        a = (c.crossJoin(F.broadcast(cen_df.select("list_id", "cen")))
-             .withColumn("acos", similarity.cosine(F.col("cv"), F.col("cen")))
-             .withColumn("r", F.row_number().over(wa)).filter("r = 1"))
-        return a.agg(F.avg(1.0 - F.col("acos"))).collect()[0][0]
-
-    assert sse(cen3) <= sse(cen1) + 1e-12
-    sizes = {r.list_id: r.size for r in cen3.collect()}
-    assert sum(sizes.values()) == 200 and len(sizes) == 4
-    # trained-centroid IVF with full probing == exact brute force
-    q = emb.filter("vec_id % 50 = 0")
-    ivf = similarity.ivf_topk(emb, q, k=5, nlist=4, nprobe=4, centroids=cen3)
-    exact = similarity.cosine_topk(emb, q, k=5)
-    got = {(r.query_id, r.rank): r.cand_id for r in ivf.collect()}
-    want = {(r.query_id, r.rank): r.cand_id for r in exact.collect()}
-    assert got == want
-
-
 def test_dwithin_salting_preserves_results(spark):
     """dwithin_join salted / profile-hot ≡ unsalted on the synthetic
     hotspot data (the skew those valves exist for)."""
@@ -162,7 +104,10 @@ def test_dwithin_salting_preserves_results(spark):
     pts = synth.page_points(spark, SF_TINY).select("doc_id", "x", "y")
     edges = synth.page_edges(spark, SF_TINY).select("edge_id", "x1", "y1", "x2", "y2")
     base = dwithin_join(pts, edges, dist=30.0, res=9).select("doc_id", "edge_id")
-    salted = dwithin_join(pts, edges, dist=30.0, res=9, salt=8).select("doc_id", "edge_id")
+    cells = with_point_cell(pts, "x", "y", 9).select("_cell").distinct()
+    salted = dwithin_join(
+        pts, edges, dist=30.0, res=9, hot=cells.withColumn("_k", F.lit(8))
+    ).select("doc_id", "edge_id")
     hot = hot_cell_factors(with_point_cell(pts, "x", "y", 9), threshold=5).localCheckpoint()
     hotted = dwithin_join(pts, edges, dist=30.0, res=9, hot=hot).select("doc_id", "edge_id")
     for other in (salted, hotted):
@@ -221,140 +166,6 @@ def test_repetition_signals_hand_cases(spark):
     assert not out[2].ok  # looped text fails the bigram gate
 
 
-def test_asof_join_semantics(spark):
-    """≤-semantics, latest-wins, per-key isolation, NULL when no prior."""
-    from datetime import datetime
-
-    from hope_graph_builder_spark.operators.temporal import asof_join
-
-    T = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    left = spark.createDataFrame(
-        [(1, 7, T("2024-01-01T10:00:00")),
-         (2, 7, T("2024-01-01T12:00:00")),
-         (3, 8, T("2024-01-01T09:00:00")),   # no prior view for user 8
-         (4, 9, T("2024-01-01T11:00:00"))],  # exact-ts match
-        "event_id long, user_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(7, 100, T("2024-01-01T09:30:00"), 1.0),
-         (7, 101, T("2024-01-01T11:30:00"), 2.0),
-         (8, 102, T("2024-01-01T09:30:00"), 3.0),   # AFTER left 3 → no match
-         (9, 103, T("2024-01-01T11:00:00"), 4.0)],  # ts == left 4 ts → matches
-        "user_id long, event_id long, ts timestamp, value double",
-    )
-    out = {r.event_id: r for r in asof_join(
-        left, right, by="user_id", payload=["event_id", "ts", "value"]
-    ).collect()}
-    assert out[1].prev_event_id == 100 and out[1].prev_value == 1.0
-    assert out[2].prev_event_id == 101   # latest of the two priors
-    assert out[3].prev_event_id is None and out[3].prev_ts is None
-    assert out[4].prev_event_id == 103   # <= includes the exact tie
-
-
-def test_interval_join_bins_and_boundaries(spark):
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from hope_graph_builder_spark.operators.temporal import interval_join
-
-    T = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    pts = spark.createDataFrame(
-        [(1, T("2024-01-01T10:00:00")),       # == start → in
-         (2, T("2024-01-01T12:00:00")),       # == end → OUT (half-open)
-         (3, T("2024-01-01T11:59:59.900")),   # sub-second before end → in
-         (4, T("2024-01-01T13:30:00")),       # outside
-         (5, T("2024-01-02T02:00:00"))],      # inside the long window
-        "event_id long, ts timestamp",
-    )
-    iv = spark.createDataFrame(
-        [(100, T("2024-01-01T10:00:00"), T("2024-01-01T12:00:00")),
-         (200, T("2024-01-01T20:00:00"), T("2024-01-02T06:00:00"))],  # spans 10 bins
-        "window_id long, start_ts timestamp, end_ts timestamp",
-    )
-    out = interval_join(pts, iv)
-    got = sorted((r.event_id, r.window_id) for r in out.collect())
-    assert got == [(1, 100), (3, 100), (5, 200)]
-    # each pair exactly once despite the multi-bin cover
-    assert out.count() == len(got)
-    # the plan is an equi-join, not a broadcast nested loop
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_interval_join_cover_valve(spark):
-    """Heavy-tailed intervals route to coarser bin levels (the
-    time-axis split_by_cover_size): results identical to the
-    valve-free join, the plan stays equi-join (no BNLJ/Cartesian),
-    every interval's explode at its routed level is ≤ max_cover, and
-    each interval lives in exactly one level (no duplicate pairs)."""
-    from datetime import datetime, timedelta
-
-    from hope_graph_builder_spark.operators.temporal import interval_join
-
-    base = datetime.fromisoformat("2024-01-01T00:00:00")
-    # 40 short (≤ 2 h) windows + 6 long tails (3 d .. 40 d)
-    iv_rows, pt_rows = [], []
-    for i in range(40):
-        s = base + timedelta(hours=3 * i, minutes=7)
-        iv_rows.append((i, s, s + timedelta(minutes=30 + i)))
-        pt_rows.append((1000 + i, s + timedelta(minutes=10)))
-    for j, days in enumerate([3, 5, 8, 13, 21, 40]):
-        s = base + timedelta(hours=11 * j)
-        iv_rows.append((100 + j, s, s + timedelta(days=days)))
-        pt_rows.append((2000 + j, s + timedelta(days=days // 2)))
-    pts = spark.createDataFrame(pt_rows, "event_id long, ts timestamp")
-    iv = spark.createDataFrame(
-        iv_rows, "window_id long, start_ts timestamp, end_ts timestamp"
-    )
-    MAXC = 4
-    valved = interval_join(pts, iv, max_cover=MAXC, level_scale=8)
-    plain = interval_join(pts, iv)  # single-level reference
-    got = sorted((r.event_id, r.window_id) for r in valved.collect())
-    want = sorted((r.event_id, r.window_id) for r in plain.collect())
-    assert got == want and len(got) == len(set(got))  # equal, no dups
-    plan = valved._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # explode bound: at its routed level every interval covers ≤ MAXC
-    # bins (levels 3600·8^ℓ; an interval routes to the first level
-    # where its cover fits)
-    import math
-
-    for _, s, e in iv_rows:
-        su, eu = int(s.timestamp()), int(e.timestamp())
-        for lvl in range(6):
-            w = 3600 * 8 ** lvl
-            cover = eu // w - su // w + 1
-            if cover <= MAXC or lvl == 5:
-                assert cover <= MAXC, f"interval cover {cover} > {MAXC} at final level"
-                break
-
-
-def test_kmeans_anchor_init_offset_ids(spark):
-    """Rank-based anchor init: ids starting at 10^6 still yield k
-    clusters (the value-based `id < k` init silently produced ZERO
-    anchors here); a corpus smaller than k raises instead of training
-    short."""
-    import pytest as _pytest
-
-    from hope_graph_builder_spark.operators import similarity
-
-    emb = (
-        spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
-        .select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
-    )
-    cen = similarity.kmeans_lloyd(emb, k=4, iters=1)
-    rows = cen.collect()
-    assert sorted(r.list_id for r in rows) == [0, 1, 2, 3]
-    assert all(len(r.cen) == 64 and r.size > 0 for r in rows)
-    with _pytest.raises(ValueError, match="anchor init"):
-        similarity.kmeans_lloyd(emb.limit(3), k=4, iters=1)
-    # ivf_topk shares the anchor path: offset ids still route
-    out = similarity.ivf_topk(emb, emb.limit(4), k=3, nlist=4, nprobe=2)
-    assert out.count() > 0
-
-
 def test_webtext_trigram_vs_marker_disagreement(spark):
     """A doc whose marker-word score says 'de' (it contains ' der und
     die ' once, no en marker words) but whose trigram profile hits say
@@ -391,36 +202,6 @@ def test_webtext_trigram_vs_marker_disagreement(spark):
     assert out.keep  # rich varied text passes both gates
 
 
-def test_asof_join_total_tiebreak_deterministic(spark):
-    """Two right rows sharing (key, ts, payload[0]) but differing in a
-    later payload field: the carried payload must be the struct-order
-    minimum... maximum under last(): the window orders by the FULL
-    payload struct ascending, so the LAST row in frame order (the one
-    carried forward) is the struct-maximum — pinned and stable across
-    partitionings."""
-    from datetime import datetime
-
-    from hope_graph_builder_spark.operators.temporal import asof_join
-
-    T = datetime.fromisoformat
-    left = spark.createDataFrame(
-        [(1, 7, T("2024-01-01T12:00:00"))],
-        "event_id long, user_id long, ts timestamp",
-    )
-    right_rows = [
-        (7, 100, T("2024-01-01T10:00:00"), 5.0),   # tie on (user, ts, event_id)
-        (7, 100, T("2024-01-01T10:00:00"), 2.0),
-    ]
-    for nparts in (1, 4):
-        right = spark.createDataFrame(
-            right_rows, "user_id long, event_id long, ts timestamp, value double"
-        ).repartition(nparts)
-        r = asof_join(left, right, by="user_id",
-                      payload=["event_id", "ts", "value"]).first()
-        # full-struct order: (100, ts, 2.0) < (100, ts, 5.0) → last = 5.0
-        assert r.prev_value == 5.0, f"nondeterministic tie at nparts={nparts}"
-
-
 def test_dwithin_polyline_matches_bruteforce(spark):
     """dwithin_polyline_join (segment explode → cell join → refine →
     min agg) ≡ the brute-force cross-join min over every segment; the
@@ -428,6 +209,7 @@ def test_dwithin_polyline_matches_bruteforce(spark):
     from hope_graph_builder_spark.operators.spatial_join import (
         dwithin_polyline_join,
         point_segment_dist2,
+        with_point_cell,
     )
 
     pts = synth.page_points(spark, SF_TINY).select("doc_id", "x", "y").limit(200)
@@ -455,7 +237,8 @@ def test_dwithin_polyline_matches_bruteforce(spark):
     assert out.exceptAll(brute).count() == 0
     assert brute.exceptAll(out).count() == 0
     assert out.count() > 0
-    salted = dwithin_polyline_join(pts, pl, dist=30.0, res=9, salt=4)
+    hot = with_point_cell(pts, "x", "y", 9).select("_cell").distinct().withColumn("_k", F.lit(4))
+    salted = dwithin_polyline_join(pts, pl, dist=30.0, res=9, hot=hot)
     assert salted.exceptAll(out).count() == 0
     assert out.exceptAll(salted).count() == 0
 
@@ -511,43 +294,6 @@ def test_host_and_domain_extraction(spark):
         assert r.d == d, (u, r.d)
 
 
-def test_gapfill_locf_semantics(spark):
-    """Constructed series: bucket-local last-observation wins (ts then
-    id tie-break), gaps carry forward, leading gaps stay NULL, every
-    key gets every bucket."""
-    from datetime import datetime
-
-    from hope_graph_builder_spark.operators.temporal import gapfill_locf
-
-    T = datetime.fromisoformat
-    rows = [
-        # key 1: two obs in bucket 01:00 (same ts → id tie-break), gap at 02:00
-        (1, T("2024-01-01T01:10:00"), 10.0, 100),
-        (1, T("2024-01-01T01:10:00"), 11.0, 101),  # higher id wins
-        (1, T("2024-01-01T03:05:00"), 12.0, 102),
-        # key 2: first obs only in the second bucket → leading NULL
-        (2, T("2024-01-01T01:30:00"), 20.0, 200),
-        # outside the window → ignored
-        (1, T("2024-01-02T00:00:00"), 99.0, 103),
-    ]
-    s = spark.createDataFrame(rows, "k long, ts timestamp, value double, event_id long")
-    out = gapfill_locf(
-        s, by="k", ts="ts", value="value", bucket_seconds=3600,
-        start_ts="2024-01-01 00:00:00", end_ts="2024-01-01 05:00:00",
-        id_col="event_id",
-    )
-    got = {(r.k, r.bucket_ts.hour): (r.value_filled, r.observed) for r in out.collect()}
-    assert len(got) == 2 * 5  # every key × every bucket
-    assert got[(1, 0)] == (None, False)          # leading gap stays NULL
-    assert got[(1, 1)] == (11.0, True)           # id tie-break: 101 wins
-    assert got[(1, 2)] == (11.0, False)          # carried forward
-    assert got[(1, 3)] == (12.0, True)
-    assert got[(1, 4)] == (12.0, False)
-    assert got[(2, 0)] == (None, False)
-    assert got[(2, 1)] == (20.0, True)
-    assert got[(2, 4)] == (20.0, False)
-
-
 def test_simhash_pairs_exact_recall_and_refusal(spark):
     """4-band Hamming index == brute-force all-pairs popcount at
     radius 3 (the pigeonhole guarantee); radii beyond the guarantee
@@ -577,24 +323,6 @@ def test_simhash_pairs_exact_recall_and_refusal(spark):
     assert got.filter((F.col("b") - F.col("a") == 50000) & (F.col("hamming") == 0)).count() > 0
     with _pytest.raises(ValueError, match="exact-recall"):
         dedup.simhash_dup_pairs(corpus, max_hamming=4)
-
-
-def test_pagerank_hand_computed(spark):
-    """Tiny graph 1→2, 1→3, 2→3 — two iterations computed by hand
-    (unnormalized damped form, r0=1): sources pin at 1−d, the sink
-    accumulates both paths; dangling node 3 contributes nothing."""
-    from hope_graph_builder_spark.operators.graph import pagerank
-
-    e = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "src long, dst long")
-    r1 = {r.id: r.rank for r in pagerank(e, iters=1).collect()}
-    assert r1 == {1: 0.15, 2: 0.575, 3: 1.425}
-    r2 = {r.id: r.rank for r in pagerank(e, iters=2).collect()}
-    assert r2[1] == 0.15
-    # the operator brounds each iteration at 5 dp — round expectations too
-    assert r2[2] == round(0.15 + 0.85 * (0.15 / 2), 5)          # 0.21375
-    assert r2[3] == round(0.15 + 0.85 * (0.15 / 2 + 0.575), 5)  # 0.7025
-    # every rank ≥ the (1−d) floor
-    assert all(v >= 0.15 for v in r2.values())
 
 
 def test_minhash_fast_hash_mode(spark):
@@ -946,254 +674,16 @@ def test_dup_substring_spans(spark):
     )
 
 
-def test_join_uniform_sample(spark):
-    """Sampling over a join without materializing it: every sampled
-    pair must equal the pair the global-index bijection names —
-    replicated independently in Python (same hash, same bucket-major
-    key order, same row ranks) — with k distinct in-range strata
-    indices; deterministic across reruns; tiny joins return the full
-    join."""
-    import hashlib
-
-    from hope_graph_builder_spark.operators.join_sample import (
-        join_uniform_sample,
-    )
-
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    # skewed: key 0 carries half of a; key ids 0..9
-    a_rows = [(i, i % 10 if i % 2 else 0) for i in range(200)]
-    b_rows = [(1000 + i, i % 10) for i in range(150)]
-    a = spark.createDataFrame(a_rows, "a_id long, k long")
-    b = spark.createDataFrame(b_rows, "b_id long, k long")
-
-    ca, cb = {}, {}
-    for _, key in a_rows:
-        ca[key] = ca.get(key, 0) + 1
-    for _, key in b_rows:
-        cb[key] = cb.get(key, 0) + 1
-    keys = sorted(
-        (kk for kk in ca if kk in cb),
-        key=lambda kk: (h60(str(kk)) % 64, kk),
-    )
-    off, offs = 0, {}
-    for kk in keys:
-        offs[kk] = off
-        off += ca[kk] * cb[kk]
-    P = off
-    a_by_key = {}
-    for i, key in sorted(a_rows):
-        a_by_key.setdefault(key, []).append(i)
-    b_by_key = {}
-    for i, key in sorted(b_rows):
-        b_by_key.setdefault(key, []).append(i)
-
-    k = 37
-    salt = "t0"
-    q, r = P // k, P % k
-    expected = {}
-    for j in range(k):
-        lo = j * q + (j * r) // k
-        hi = (j + 1) * q + ((j + 1) * r) // k
-        pos = lo + h60(f"{salt}#{j}") % (hi - lo)
-        kk = max((kk for kk in keys if offs[kk] <= pos),
-                 key=lambda kk: offs[kk])
-        rel = pos - offs[kk]
-        expected[pos] = (kk, a_by_key[kk][rel // cb[kk]],
-                         b_by_key[kk][rel % cb[kk]])
-
-    out = {r2.idx: (r2.k, r2.a_id, r2.b_id) for r2 in
-           join_uniform_sample(a, b, "k", k, "a_id", "b_id", salt=salt).collect()}
-    assert out == expected and len(out) == k
-    # deterministic rerun
-    out2 = {r2.idx: (r2.k, r2.a_id, r2.b_id) for r2 in
-            join_uniform_sample(a, b, "k", k, "a_id", "b_id", salt=salt).collect()}
-    assert out2 == out
-    # tiny join: full result comes back
-    from pyspark.sql import functions as F
-    tiny = join_uniform_sample(a.filter(F.col("a_id") < 3),
-                               b.filter(F.col("b_id") < 1002), "k", 1000,
-                               "a_id", "b_id").collect()
-    got_pairs = {(r2.k, r2.a_id, r2.b_id) for r2 in tiny}
-    want_pairs = {(ka, ia, ib) for ia, ka in a_rows[:3]
-                  for ib, kb2 in b_rows[:2] if ka == kb2}
-    assert got_pairs == want_pairs
-    # n_buckets='auto' (r06 scale knob): below the 64M-key floor it
-    # must resolve to 64 and reproduce the fixed-bucket sample exactly
-    out_auto = {r2.idx: (r2.k, r2.a_id, r2.b_id) for r2 in
-                join_uniform_sample(a, b, "k", k, "a_id", "b_id",
-                                    salt=salt, n_buckets="auto").collect()}
-    assert out_auto == out
-    # n_buckets is a bijection PARAMETER: another value draws a valid
-    # (k distinct in-range strata, real join pairs) but generally
-    # DIFFERENT sample — which is why auto cannot silently replace a
-    # caller's fixed value above the floor
-    out512 = join_uniform_sample(a, b, "k", k, "a_id", "b_id",
-                                 salt=salt, n_buckets=512).collect()
-    assert len(out512) == k and len({r2.idx for r2 in out512}) == k
-    all_pairs = {(ka, ia, ib) for ia, ka in a_rows
-                 for ib, kb2 in b_rows if ka == kb2}
-    assert {(r2.k, r2.a_id, r2.b_id) for r2 in out512} <= all_pairs
-    assert all(0 <= r2.idx < P for r2 in out512)
-
-
-def test_join_uniform_sample_uniformity(spark):
-    """Empirical pin of the uniformity claim: over 20 independent
-    salts × 50 draws, each key's selection frequency matches its pair
-    share ca·cb/P within 5 binomial standard deviations (deterministic
-    — fixed salts, no flake). A layout bias (e.g. truncation toward
-    low-offset keys) would blow through the bound."""
-    from collections import Counter
-
-    from hope_graph_builder_spark.operators.join_sample import (
-        join_uniform_sample,
-    )
-
-    a_rows = [(i, i % 7) for i in range(140)]          # 20 rows/key
-    b_rows = [(1000 + i, i % 7) for i in range(70)]    # 10 rows/key
-    a = spark.createDataFrame(a_rows, "a_id long, k long")
-    b = spark.createDataFrame(b_rows, "b_id long, k long")
-    P, per_key = 7 * 20 * 10, 20 * 10
-    draws = Counter()
-    n_salts, k = 20, 50
-    for s in range(n_salts):
-        for r in join_uniform_sample(a, b, "k", k, "a_id", "b_id",
-                                     salt=f"u{s}").collect():
-            draws[r.k] += 1
-    n = n_salts * k
-    p = per_key / P
-    import math
-    sd = math.sqrt(n * p * (1 - p))
-    for key in range(7):
-        assert abs(draws[key] - n * p) <= 5 * sd, (key, draws[key], n * p, sd)
-    assert sum(draws.values()) == n
-
-
-def test_pip_rect_uniform_sample(spark):
-    """Spatial join sampling: every returned pair is a TRUE
-    containment pair (subset of the materialized PIP join), count is
-    min(k, accepted), reruns are identical, and a different salt
-    draws a different (still valid) sample."""
-    from hope_graph_builder_spark import synth
-    from hope_graph_builder_spark.operators.join_sample import (
-        pip_rect_uniform_sample,
-    )
-    from hope_graph_builder_spark.operators.spatial_join import pip_join_rect
-
-    pts = synth.page_points(spark, "/root/testdata/sf0.001").select(
-        "doc_id", "x", "y"
-    )
-    layers = synth.noise_layers(spark)
-    true_pairs = {
-        (r.doc_id, r.poly_id)
-        for r in pip_join_rect(pts, layers, res=9, point_id="doc_id")
-        .select("doc_id", "poly_id").collect()
-    }
-    out = pip_rect_uniform_sample(
-        pts, layers, k=40, res=9, rect_id="poly_id", salt="s1"
-    ).collect()
-    assert 0 < len(out) <= 40
-    assert all((r.doc_id, r.poly_id) in true_pairs for r in out)
-    out2 = pip_rect_uniform_sample(
-        pts, layers, k=40, res=9, rect_id="poly_id", salt="s1"
-    ).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-    other = pip_rect_uniform_sample(
-        pts, layers, k=40, res=9, rect_id="poly_id", salt="s2"
-    ).collect()
-    assert all((r.doc_id, r.poly_id) in true_pairs for r in other)
-    assert {r.idx for r in other} != {r.idx for r in out}
-
-
-def test_weighted_sample(spark):
-    """Token-mass sampling closed-form: draw counts track weights (a
-    doc with half the total mass gets ~half the draws), zero weights
-    never drawn, deterministic reruns, and the exact draw positions
-    match an independent Python replica of strata + cumulative-weight
-    containment."""
-    import hashlib
-
-    from hope_graph_builder_spark.operators.join_sample import weighted_sample
-
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    rows = [(1, 500), (2, 250), (3, 125), (4, 125), (5, 0)]
-    d = spark.createDataFrame(rows, "doc_id long, w long")
-    k, salt = 100, "w1"
-    # python replica
-    live = [(i, w) for i, w in rows if w > 0]
-    order = sorted(live, key=lambda t: (h60(str(t[0])) % 64, t[0]))
-    offs, off = {}, 0
-    for i, w in order:
-        offs[i] = off
-        off += w
-    W = off
-    q, r = W // k, W % k
-    expected = {}
-    for j in range(k):
-        lo = j * q + (j * r) // k
-        hi = (j + 1) * q + ((j + 1) * r) // k
-        if hi <= lo:
-            continue
-        pos = lo + h60(f"{salt}#{j}") % (hi - lo)
-        doc = max((i for i, _ in order if offs[i] <= pos),
-                  key=lambda i: offs[i])
-        expected[pos] = doc
-    got = {r2.idx: r2.doc_id for r2 in
-           weighted_sample(d, "w", k, salt=salt).collect()}
-    assert got == expected
-    counts = {}
-    for doc in got.values():
-        counts[doc] = counts.get(doc, 0) + 1
-    assert 5 not in counts
-    assert abs(counts[1] - 50) <= 2 and abs(counts[2] - 25) <= 2
-    got2 = {r2.idx: r2.doc_id for r2 in
-            weighted_sample(d, "w", k, salt=salt).collect()}
-    assert got2 == got
-
-
-def test_dwithin_uniform_sample(spark):
-    """Range-join sampling: every returned pair is a TRUE
-    DWithin(30 m) pair (subset of the materialized dwithin join) and
-    reruns are identical."""
-    from hope_graph_builder_spark import synth
-    from hope_graph_builder_spark.operators.join_sample import (
-        dwithin_uniform_sample,
-    )
-    from hope_graph_builder_spark.operators.spatial_join import dwithin_join
-
-    pts = synth.page_points(spark, "/root/testdata/sf0.001").select(
-        "doc_id", "x", "y"
-    )
-    edges = synth.page_edges(spark, "/root/testdata/sf0.001").select(
-        "edge_id", "x1", "y1", "x2", "y2"
-    )
-    true_pairs = {
-        (r.doc_id, r.edge_id)
-        for r in dwithin_join(pts, edges, 30.0, res=11)
-        .select("doc_id", "edge_id").collect()
-    }
-    out = dwithin_uniform_sample(pts, edges, 30.0, 25, res=11, salt="d1").collect()
-    assert 0 < len(out) <= 25
-    assert all((r.doc_id, r.edge_id) in true_pairs for r in out)
-    out2 = dwithin_uniform_sample(pts, edges, 30.0, 25, res=11, salt="d1").collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-
-
 def test_review_fix_regressions(spark, monkeypatch):
     """Regression pins for the round-5 review findings: NULL-text
     batch rows survive delta dedup (sentinel digest, dedupe among
-    themselves); ann_recall k-trim without a rank column raises
-    instead of AnalysisException; parse_json_fields output-name
-    collisions raise; the curation chunk_uid guard raises on a 20-bit
-    chunk_id overflow instead of silently colliding."""
+    themselves); parse_json_fields output-name collisions raise; the
+    curation chunk_uid guard raises on a 20-bit chunk_id overflow
+    instead of silently colliding."""
     import pytest
     from pyspark.sql import functions as F
 
     from hope_graph_builder_spark.operators import dedup as dd
-    from hope_graph_builder_spark.operators.similarity import ann_recall
     from hope_graph_builder_spark.operators.web import parse_json_fields
     from hope_graph_builder_spark.pipelines import curation
 
@@ -1210,17 +700,12 @@ def test_review_fix_regressions(spark, monkeypatch):
     assert out[2].keep and not out[2].dup_of_index and not out[2].dup_in_batch
     assert out[3].dup_in_batch and not out[3].dup_of_index and not out[3].keep
 
-    # 2. k-trim needs rank on BOTH inputs
-    two_col = spark.createDataFrame([(1, 2)], "query_id long, cand_id long")
-    with pytest.raises(ValueError, match="rank"):
-        ann_recall(two_col, two_col, k=3)
-
-    # 3. '.'→'_' output-name collision is loud
+    # 2. '.'→'_' output-name collision is loud
     d = spark.createDataFrame([(1, '{"a": {"b": 1}}')], "id long, props string")
     with pytest.raises(ValueError, match="collision"):
         parse_json_fields(d, "props", {"a.b": "int", "a_b": "string"})
 
-    # 4. chunk_uid overflow raises (shrink the shift so a small doc trips it)
+    # 3. chunk_uid overflow raises (shrink the shift so a small doc trips it)
     monkeypatch.setattr(curation, "_CHUNK_UID_SHIFT", 2)
     docs = spark.createDataFrame(
         [(1, "s", " ".join(f"w{i} of the and to be have that with ok" for i in range(30)))],
@@ -1319,53 +804,6 @@ def test_chunk_tokens_random_brute_force(spark):
             )
         for d in texts:
             assert sorted(got.get(d, [])) == want[d], (seq_len, overlap, d)
-
-
-def test_ann_recall(spark):
-    """Recall harness closed-form: per-query hit counting, a query the
-    approximate index misses entirely counts as 0 (not dropped),
-    macro vs micro disagree exactly as hand-computed, k trims by
-    rank."""
-    from hope_graph_builder_spark.operators.similarity import ann_recall
-
-    exact = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2), (1, 12, 3), (1, 13, 4),
-         (2, 20, 1), (2, 21, 2)],
-        "query_id long, cand_id long, rank int",
-    )
-    approx = spark.createDataFrame(
-        [(1, 10, 1), (1, 12, 2), (1, 99, 3), (1, 13, 4)],
-        "query_id long, cand_id long, rank int",
-    )
-    r = ann_recall(approx, exact).collect()[0]
-    # q1: 3 of 4 hit; q2: no approx rows at all -> 0 of 2
-    assert (r.n_queries, r.n_exact, r.n_hits) == (2, 6, 3)
-    assert r.micro_recall == 0.5
-    assert abs(r.macro_recall - (0.75 + 0.0) / 2) < 1e-9
-    # k=2: exact trims to {10,11}/{20,21}, approx to {10,12}
-    r2 = ann_recall(approx, exact, k=2).collect()[0]
-    assert (r2.n_exact, r2.n_hits) == (4, 1)
-
-
-def test_ivf_recall_monotone_and_complete(spark):
-    """IVF recall@5 measured against brute force: monotone
-    non-decreasing in nprobe, and probing EVERY list (nprobe == nlist)
-    is exhaustive search — recall exactly 1.0. Pins both the recall
-    harness and the IVF routing."""
-    from pyspark.sql import functions as F
-
-    from hope_graph_builder_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 29 == 0)
-    exact = similarity.cosine_topk(emb, qs, k=5)
-    prev = -1.0
-    for nprobe in (1, 2, 8):
-        a = similarity.ivf_topk(emb, qs, k=5, nlist=8, nprobe=nprobe)
-        r = similarity.ann_recall(a, exact).collect()[0]
-        assert r.micro_recall >= prev
-        prev = r.micro_recall
-    assert prev == 1.0  # nprobe == nlist probes everything
 
 
 def test_lsh_params():
@@ -1468,42 +906,6 @@ def test_run_corpus_curation(spark):
         assert toks[start:start + len(ct)] == ct[: max(0, len(toks) - start)]
         toks[start:start + len(ct)] = ct
     assert len(toks) > 0
-
-
-def test_sessionize(spark):
-    """Closed-form session boundaries: gap >= threshold opens a new
-    session (the session_window rule — an event exactly at the closed
-    end starts fresh), sessions never cross users, ties ordered by
-    event id, stats roll up exactly."""
-    from datetime import datetime, timedelta
-
-    from hope_graph_builder_spark.operators.temporal import (
-        session_stats,
-        sessionize,
-    )
-
-    t0 = datetime(2024, 1, 1, 0, 0, 0)
-
-    def at(s):
-        return t0 + timedelta(seconds=s)
-
-    rows = [
-        (1, 10, at(0)), (2, 10, at(100)),      # same session
-        (3, 10, at(100 + 600)),                # exactly gap -> NEW session
-        (4, 10, at(100 + 600 + 599)),          # gap-1 -> same
-        (5, 20, at(50)),                       # other user
-        (6, 20, at(50)),                       # tie ts -> same session, id order
-    ]
-    d = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    out = {r.event_id: r.session_seq for r in
-           sessionize(d, gap_seconds=600).collect()}
-    assert out == {1: 0, 2: 0, 3: 1, 4: 1, 5: 0, 6: 0}
-    st = {(r.user_id, r.session_seq): r for r in
-          session_stats(d, gap_seconds=600).collect()}
-    assert st[(10, 0)].n_events == 2 and st[(10, 1)].n_events == 2
-    assert st[(10, 0)].duration_us == 100_000_000
-    assert st[(10, 1)].duration_us == 599_000_000
-    assert st[(20, 0)].n_events == 2 and st[(20, 0)].duration_us == 0
 
 
 def test_gopher_flags(spark):

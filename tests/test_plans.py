@@ -5,7 +5,11 @@ products, whole-stage codegen around the refine filters."""
 from pyspark.sql import functions as F
 
 from hope_graph_builder_spark import synth
-from hope_graph_builder_spark.operators.spatial_join import dwithin_join, pip_join_rect
+from hope_graph_builder_spark.operators.spatial_join import (
+    dwithin_join,
+    pip_join_rect,
+    with_point_cell,
+)
 from hope_graph_builder_spark.pipelines.noise_join import run_noise_join
 
 from tests.conftest import SF_TINY
@@ -26,10 +30,11 @@ def test_pip_join_broadcasts_polygons(spark):
 def test_pip_join_shuffle_path_is_equi(spark):
     pts = synth.page_points(spark, SF_TINY)
     layers = synth.noise_layers(spark)
+    hot = with_point_cell(pts, "x", "y", 7).select("_cell").distinct().withColumn("_k", F.lit(4))
     plan = _plan(
         pip_join_rect(
             pts, layers, res=7, how="inner", point_id="doc_id",
-            salt=4, broadcast_polys=False,
+            hot=hot, broadcast_polys=False,
         )
     )
     # salted shuffle path: a hash-partitioned equi join, never a loop join
@@ -141,42 +146,6 @@ def test_status_store_stage_metrics_accessible(spark):
     assert stats.for_groups(tracer.groups(s), s.wall)["spark.stages"] == got["spark.stages"]
 
 
-def test_asof_join_single_keyed_sort_no_range_join(spark):
-    """asof_join's plan: one hash exchange on the key feeding a window
-    sort — no BroadcastNestedLoopJoin / CartesianProduct anywhere (the
-    failure mode of naive range-condition as-of implementations)."""
-    from hope_graph_builder_spark.operators.temporal import asof_join
-
-    e = spark.read.parquet(f"{SF_TINY}/events.parquet")
-    left = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    right = e.filter(F.col("event_type") == "view").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    plan = _plan(asof_join(left, right, by="user_id", payload=["event_id", "ts", "value"]))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Window") >= 1
-    assert "hashpartitioning(user_id" in plan
-
-
-def test_ivf_assignment_broadcasts_centroids(spark):
-    """The centroid-assignment shape (shared by ivf_topk and every
-    Lloyd iteration — kmeans_lloyd localCheckpoints its result, so the
-    IVF plan is the inspectable twin) must broadcast the tiny centroid
-    table; a shuffled centroid join would serialize the pass."""
-    from hope_graph_builder_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 4)
-    plan = _plan(similarity.ivf_topk(emb, q, k=3, nlist=4, nprobe=2))
-    # the corpus-side assignment crossJoin runs against a BROADCAST of
-    # ≤ nlist rows — the intended bounded fan-out (it may plan as a
-    # BroadcastNestedLoopJoin over the broadcast side, which is fine);
-    # what must NEVER appear is a data×data CartesianProduct
-    assert plan.count("BroadcastExchange") >= 1
-    assert "CartesianProduct" not in plan
-
-
 def test_tile_pyramid_single_raw_scan(spark):
     """The pyramid's coarser levels must fold the FINEST level's
     aggregate, not rescan raw data: each level is checkpointed before
@@ -282,31 +251,6 @@ def test_dup_substrings_no_cartesian_no_python(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "SinglePartition" not in plan
-
-
-def test_join_sample_plan(spark):
-    """join_uniform_sample's final plan: the key-containment probe is
-    the per-bucket as-of (union + partitioned window), NOT a
-    nested-loop/cartesian over the key table; no Python eval; no
-    unpartitioned window over data-sized tables (the one
-    Window.orderBy is the <= n_buckets offsets pass)."""
-    from pyspark.sql import functions as F
-
-    from hope_graph_builder_spark.operators.join_sample import (
-        join_uniform_sample,
-    )
-
-    e = spark.read.parquet(f"{SF_TINY}/events.parquet")
-    a = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("a_id"), "user_id"
-    )
-    b = e.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("b_id"), "user_id"
-    )
-    plan = _plan(join_uniform_sample(a, b, "user_id", 50, "a_id", "b_id"))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_corpus_curation_plan(spark):

@@ -1,19 +1,7 @@
-"""Structured Streaming windowed ingest == batch equivalent."""
-
-from hope_graph_builder_spark.streaming.windowed import (
-    batch_equivalent,
-    run_stream_to_memory,
-)
+"""Structured Streaming stages == their batch equivalents: the
+flagship exposure stage, web-text signals and stream-static chunking."""
 
 from tests.conftest import SF_TINY
-
-
-def test_stream_matches_batch(spark):
-    stream_out = run_stream_to_memory(spark, SF_TINY, name="win_test")
-    batch_out = batch_equivalent(spark, SF_TINY)
-    assert stream_out.count() == batch_out.count() > 0
-    assert stream_out.exceptAll(batch_out).count() == 0
-    assert batch_out.exceptAll(stream_out).count() == 0
 
 
 def test_streaming_noise_exposures_match_batch(spark):
@@ -94,118 +82,6 @@ def test_streaming_webtext_signals_match_batch(spark, tmp_path):
     )
     j = stream_out.select("doc_id", "lang_pred", "quality", "n_tokens", "rep_pass")
     assert j.exceptAll(full).count() == 0
-
-
-def test_streaming_interval_join_stream_static(spark, tmp_path):
-    """operators/temporal.interval_join works UNCHANGED over a
-    streaming points side (including the heavy-tail cover valve): the
-    interval side is static and pre-exploded, the join is a
-    stream-static equi-join + stateless refine — no state store, no
-    watermark needed. Stream result == batch result."""
-    from pyspark.sql import functions as F
-
-    from hope_graph_builder_spark.operators.temporal import interval_join
-
-    e = spark.read.parquet(f"{SF_TINY}/events.parquet")
-    w = e.filter(F.col("event_id") % 17 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("start_ts"),
-        (
-            F.col("ts")
-            + F.make_interval(
-                secs=F.when(
-                    F.col("event_id") % 5 == 0,
-                    F.lit(200000) + F.col("event_id") * 7 % 400000,
-                ).otherwise(F.lit(1000) + F.col("event_id") * 13 % 5000).cast("double")
-            )
-        ).alias("end_ts"),
-    )
-    p = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    src = str(tmp_path / "points_stream")
-    p.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    p.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    p_stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        interval_join(p_stream, w, max_cover=16)
-        .select("event_id", "window_id")
-        .writeStream.format("memory")
-        .queryName("interval_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("interval_stream_test")
-    want = interval_join(p, w, max_cover=16).select("event_id", "window_id")
-    assert got.count() == want.count() > 0
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_streaming_session_window_matches_batch(spark, tmp_path):
-    """The batch sessionize/session_stats boundary rule IS Spark's
-    native streaming session_window: a watermarked session_window
-    aggregation over a file stream reproduces every batch session
-    (n_events, start, end; window.end == ts_end + gap) exactly."""
-    from pyspark.sql import functions as F
-
-    from hope_graph_builder_spark.operators.temporal import session_stats
-
-    ev = (
-        spark.read.parquet(f"{SF_TINY}/events.parquet")
-        .select("event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"))
-    )
-    src = str(tmp_path / "ev_stream")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    gap = 30000
-    schema = spark.read.parquet(src).schema
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    # complete mode: no watermark, every session emitted from state at
-    # the end — the file split is out of time order, so an append-mode
-    # watermark would either drop the second file as late (delay 0) or
-    # never finalize the tail sessions (huge delay)
-    q = (
-        s.groupBy("user_id", F.session_window("ts", f"{gap} seconds"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("ts_start"),
-            F.max("ts").alias("ts_end"),
-        )
-        .writeStream.format("memory")
-        .queryName("session_stream_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("session_stream_test").select(
-        "user_id",
-        "n_events",
-        "ts_start",
-        "ts_end",
-        (
-            F.col("session_window.end")
-            - F.make_interval(secs=F.lit(float(gap)))
-        ).alias("window_end_minus_gap"),
-    )
-    want = session_stats(
-        spark.read.parquet(src), gap_seconds=gap
-    ).select(
-        "user_id",
-        "n_events",
-        F.col("ts_start").cast("timestamp").alias("ts_start"),
-        F.col("ts_end").cast("timestamp").alias("ts_end"),
-        F.col("ts_end").cast("timestamp").alias("window_end_minus_gap"),
-    )
-    assert got.count() == want.count() > 0
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
 
 
 def test_streaming_chunk_tokens_stream_static(spark, tmp_path):

@@ -20,9 +20,7 @@ def main() -> None:
     from hope_graph_builder_spark import contract
 
     names = list(entry.queries())
-    recorded = contract._recorded_fingerprints()
-    for n in names:
-        recorded[n] = contract._fingerprint(n)
+    recorded = {n: contract._fingerprint(n) for n in names}
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "contract_fingerprints.json")
     with open(path, "w") as f:
