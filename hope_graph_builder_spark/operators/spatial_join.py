@@ -270,6 +270,10 @@ def dwithin_join(
 
 
 def _dist2_sql(x: str, y: str) -> str:
+    """Exact point→segment distance² as SQL text (clamped projection
+    onto [x1,y1]-[x2,y2]; degenerate segment → endpoint distance). The
+    identical association order is mirrored in every DuckDB oracle that
+    shares it."""
     px, py = ident(x), ident(y)
     dx, dy = "(x2 - x1)", "(y2 - y1)"
     seg2 = f"({dx} * {dx} + {dy} * {dy})"
@@ -277,14 +281,6 @@ def _dist2_sql(x: str, y: str) -> str:
     t = f"(CASE WHEN {seg2} > 0 THEN least(greatest({t_raw}, 0.0D), 1.0D) ELSE 0.0D END)"
     cx, cy = f"(x1 + {t} * {dx})", f"(y1 + {t} * {dy})"
     return f"(({px} - {cx}) * ({px} - {cx}) + ({py} - {cy}) * ({py} - {cy}))"
-
-
-def point_segment_dist2(x: str, y: str):
-    """Exact point→segment distance² as one codegen'd expression (clamped
-    projection onto [x1,y1]-[x2,y2]; degenerate segment → endpoint
-    distance). The identical association order is mirrored in every
-    DuckDB oracle that shares it."""
-    return F.expr(_dist2_sql(x, y))
 
 
 def dwithin_polyline_join(

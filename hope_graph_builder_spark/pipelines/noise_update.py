@@ -20,13 +20,6 @@ from hope_graph_builder_spark.functions.graphml_types import (
     str_map_from,
 )
 
-EMPTY_NOISES = F.map_from_arrays(
-    F.array().cast("array<int>"), F.array().cast("array<double>")
-)
-EMPTY_SOURCES = F.map_from_arrays(
-    F.array().cast("array<string>"), F.array().cast("array<int>")
-)
-
 
 def read_edge_noise_csv(spark: SparkSession, path: str) -> DataFrame:
     """One reference noise CSV (columns: index, id_ig, noises dict-repr,
@@ -50,13 +43,20 @@ def set_default_and_na_edge_noises(
     (including empty geometries, which GEOS 'within' rejects) get
     NULL."""
     w = F.col(within)
+    # built per call: a Column needs an active session, so none at import
+    empty_noises = F.map_from_arrays(
+        F.array().cast("array<int>"), F.array().cast("array<double>")
+    )
+    empty_sources = F.map_from_arrays(
+        F.array().cast("array<string>"), F.array().cast("array<int>")
+    )
     return edges.withColumn(
-        "noises", F.when(w, EMPTY_NOISES).otherwise(F.lit(None).cast("map<int,double>"))
+        "noises", F.when(w, empty_noises).otherwise(F.lit(None).cast("map<int,double>"))
     ).withColumn(
         "noise_source", F.when(w, F.lit("")).otherwise(F.lit(None).cast("string"))
     ).withColumn(
         "noise_sources",
-        F.when(w, EMPTY_SOURCES).otherwise(F.lit(None).cast("map<string,int>")),
+        F.when(w, empty_sources).otherwise(F.lit(None).cast("map<string,int>")),
     )
 
 

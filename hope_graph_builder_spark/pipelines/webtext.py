@@ -159,7 +159,7 @@ def run_webtext_ingest_checkpointed(
       + the extracted text itself), bucketed by
       pmod(xxhash64(doc_id), buckets) as the manifest tile_group:
       a killed job resumes at bucket granularity, completed buckets
-      are never recomputed (manifest anti-join).
+      are never recomputed (filtered out by their manifest rows).
     - stage ``webtext_final_<fp>`` — the GLOBAL near-dup clustering +
       quality-first canonical keep over the COMMITTED signal table.
       Clustering is a global fixpoint, so its manifest rows are only

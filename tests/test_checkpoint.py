@@ -178,3 +178,117 @@ def test_run_pipeline_entry_resumes(spark, tmp_path, monkeypatch, capsys):
     n_edges = synth.page_edges(spark, SF_TINY).count()
     assert got.count() == n_edges
     assert got.select("edge_id").distinct().count() == n_edges
+
+
+def _group_files(root: str, stage: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(f"{root}/data/{stage}/tile_group=*/*.parquet"))
+
+
+def _rewrite(path: str, table) -> None:
+    """Replace one data file the way a tool outside Spark would: the
+    stale Hadoop ``.crc`` sidecar goes, or Spark's local reader would
+    reject the file before the manifest check ever sees it."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    pq.write_table(table, path)
+
+
+def test_verify_rejects_dropped_and_duplicated_row(spark, tmpdir):
+    """A group file that lost a row or gained a duplicate no longer
+    matches its manifest row: read_stage(verify=True) raises, while
+    the default read still returns the committed groups' rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pts = _points(spark)
+    run_stage(spark, pts, "pts", tmpdir)
+    n = pts.count()
+    assert read_stage(spark, tmpdir, "pts", verify=True).count() == n
+
+    victim = max(_group_files(tmpdir, "pts"), key=lambda p: pq.read_metadata(p).num_rows)
+    orig = pq.read_table(victim)
+    assert orig.num_rows >= 2
+    for mutated, delta in ((orig.slice(1), -1), (pa.concat_tables([orig, orig.slice(0, 1)]), 1)):
+        _rewrite(victim, mutated)
+        with pytest.raises(ValueError, match="differ from their manifest"):
+            read_stage(spark, tmpdir, "pts", verify=True)
+        assert read_stage(spark, tmpdir, "pts").count() == n + delta
+    _rewrite(victim, orig)
+    assert read_stage(spark, tmpdir, "pts", verify=True).count() == n
+
+
+def test_hash_sum_catches_what_xor_and_count_miss(spark, tmpdir):
+    """Swapping a duplicated pair of rows for another duplicated pair
+    keeps the row count and the xor checksum (x ^ x == 0); only the
+    hash sum changes, and verify raises on it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = spark.createDataFrame(
+        [(1, v) for v in ("a", "a", "b", "c")], "tile_group long, v string"
+    ).coalesce(1)
+    run_stage(spark, df, "dup", tmpdir)
+    (victim,) = _group_files(tmpdir, "dup")
+    _rewrite(victim, pa.table({"v": ["b", "b", "b", "c"]}))
+
+    m = read_manifest(spark, tmpdir).first()
+    data = read_stage(spark, tmpdir, "dup").agg(
+        F.count("*").alias("n"), F.bit_xor(F.xxhash64("v")).alias("x")
+    ).first()
+    assert (data.n, data.x) == (m.row_count, m.checksum)
+    with pytest.raises(ValueError, match="differ from their manifest"):
+        read_stage(spark, tmpdir, "dup", verify=True)
+    assert pq.read_table(victim).num_rows == 4
+
+
+def test_run_stage_keeps_session_overwrite_mode(spark, tmpdir):
+    """Dynamic partition overwrite is a per-write option: the session
+    setting every later overwrite sees is left as it was."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    run_stage(spark, _points(spark), "pts", tmpdir)
+    assert spark.conf.get(key) == before == "STATIC"
+
+
+def test_resume_from_spark_written_manifest(spark, tmpdir):
+    """A root whose manifest was committed through Spark before hash_sum
+    existed (6 columns, int wall_ms, _SUCCESS and .crc files beside the
+    parts) resumes: its groups are skipped, its rows are still read,
+    and verify checks them on the columns they carry."""
+    pts = _points(spark)
+    groups = sorted(r.tile_group for r in pts.select("tile_group").distinct().collect())
+    half = groups[: len(groups) // 2]
+    part1 = pts.filter(F.col("tile_group").isin(half))
+    part1.write.partitionBy("tile_group").parquet(f"{tmpdir}/data/pts")
+    (
+        spark.read.parquet(f"{tmpdir}/data/pts")
+        .groupBy("tile_group")
+        .agg(
+            F.count("*").alias("row_count"),
+            F.bit_xor(F.xxhash64("doc_id", "x", "y")).alias("checksum"),
+        )
+        .select(
+            F.lit("pts").alias("stage"), "tile_group", "row_count", "checksum",
+            F.lit(1234).alias("wall_ms"), F.lit("done").alias("status"),
+        )
+        .write.mode("append").parquet(f"{tmpdir}/_manifest")
+    )
+
+    stats = run_stage(spark, pts, "pts", tmpdir)
+    assert stats["groups_skipped"] == len(half)
+    assert stats["groups_written"] == len(groups) - len(half)
+    m = read_manifest(spark, tmpdir)
+    assert m.count() == len(groups)
+    assert m.filter(F.col("hash_sum").isNull()).count() == len(half)
+    assert m.filter(F.col("wall_ms") == 1234).count() == len(half)
+    out = read_stage(spark, tmpdir, "pts", verify=True)
+    assert out.columns[0] == "tile_group"
+    assert out.count() == pts.count()
+    assert out.select("doc_id").exceptAll(pts.select("doc_id")).count() == 0

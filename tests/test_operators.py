@@ -204,39 +204,37 @@ def test_webtext_trigram_vs_marker_disagreement(spark):
 
 def test_dwithin_polyline_matches_bruteforce(spark):
     """dwithin_polyline_join (segment explode → cell join → refine →
-    min agg) ≡ the brute-force cross-join min over every segment; the
-    salted variant is identical too."""
+    min agg) ≡ the brute-force min over every (segment, point) pair,
+    computed in numpy from the collected inputs; the salted variant is
+    identical too."""
     from hope_graph_builder_spark.operators.spatial_join import (
         dwithin_polyline_join,
-        point_segment_dist2,
         with_point_cell,
     )
 
-    pts = synth.page_points(spark, SF_TINY).select("doc_id", "x", "y").limit(200)
-    pl = synth.page_polylines(spark, SF_TINY).limit(200)
+    pts = synth.page_points(spark, SF_TINY).select("doc_id", "x", "y").limit(200).localCheckpoint()
+    pl = synth.page_polylines(spark, SF_TINY).limit(200).localCheckpoint()
     out = dwithin_polyline_join(pts, pl, dist=30.0, res=9)
-    n = F.size("xs")
-    segs = pl.select(
-        "edge_id",
-        F.explode(F.sequence(F.lit(1), n - 1)).alias("_i"),
-        "xs", "ys",
-    ).select(
-        "edge_id",
-        F.element_at("xs", F.col("_i").cast("int")).alias("x1"),
-        F.element_at("ys", F.col("_i").cast("int")).alias("y1"),
-        F.element_at("xs", (F.col("_i") + 1).cast("int")).alias("x2"),
-        F.element_at("ys", (F.col("_i") + 1).cast("int")).alias("y2"),
-    )
-    brute = (
-        segs.crossJoin(pts)
-        .withColumn("_d2", point_segment_dist2("x", "y"))
-        .groupBy("edge_id", "doc_id")
-        .agg(F.min("_d2").alias("min_d2"))
-        .filter(F.col("min_d2") <= 900.0)
-    )
-    assert out.exceptAll(brute).count() == 0
-    assert brute.exceptAll(out).count() == 0
-    assert out.count() > 0
+
+    p = pts.toPandas()
+    px, py = p["x"].to_numpy()[None, :], p["y"].to_numpy()[None, :]
+    best: dict[int, np.ndarray] = {}
+    for line in pl.select("edge_id", "xs", "ys").collect():
+        xs, ys = np.asarray(line.xs, dtype=float), np.asarray(line.ys, dtype=float)
+        ax, ay, bx, by = (v[:, None] for v in (xs[:-1], ys[:-1], xs[1:], ys[1:]))
+        dx, dy = bx - ax, by - ay
+        seg2 = dx * dx + dy * dy
+        with np.errstate(invalid="ignore", divide="ignore"):
+            t = np.where(seg2 > 0, np.clip(((px - ax) * dx + (py - ay) * dy) / seg2, 0.0, 1.0), 0.0)
+        d2 = ((px - (ax + t * dx)) ** 2 + (py - (ay + t * dy)) ** 2).min(axis=0)
+        best[line.edge_id] = np.minimum(best.get(line.edge_id, d2), d2)
+    brute = {
+        (e, int(d)): float(v)
+        for e, d2 in best.items() for d, v in zip(p["doc_id"], d2) if v <= 900.0
+    }
+    got = {(r.edge_id, r.doc_id): r.min_d2 for r in out.collect()}
+    assert got and got.keys() == brute.keys()
+    assert all(np.isclose(v, brute[k], rtol=1e-12, atol=1e-9) for k, v in got.items())
     hot = with_point_cell(pts, "x", "y", 9).select("_cell").distinct().withColumn("_k", F.lit(4))
     salted = dwithin_polyline_join(pts, pl, dist=30.0, res=9, hot=hot)
     assert salted.exceptAll(out).count() == 0
