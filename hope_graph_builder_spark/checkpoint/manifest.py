@@ -7,18 +7,25 @@ Generalizes the reference's poor-man's checkpoint — chunked CSVs named
 (`/root/reference/src/noise_graph_join/noise_graph_join.py:140-148,
 171-179`) — to:
 
-- output parquet partitioned by ``tile_group`` (a coarse cell id —
-  partition pruning works on reads)
-- a manifest of per-partition lineage rows (``MANIFEST_SCHEMA``:
-  stage, tile_group, row_count, checksum, hash_sum, wall_ms, status),
-  one small parquet file per commit under ``root/_manifest``
+- one commit directory per ``run_stage`` call,
+  ``root/commits/<stage>/<commit>/``: a flat parquet write of the
+  groups that call wrote, sorted by ``tile_group`` within each file
+  (parquet min/max statistics still prune a group filter), plus the
+  written frame's schema as ``_schema.json``
+- a manifest of per-group lineage rows (``MANIFEST_SCHEMA``: stage,
+  tile_group, row_count, checksum, hash_sum, wall_ms, status, commit),
+  one small parquet file per commit under ``root/_manifest``;
+  ``wall_ms`` is the data-write wall of the row's commit
 - resume = the completed groups, read once on the driver, filtered out
-  by partition value (replaces the filename max-id trick; works for
-  any subset, not just a prefix)
+  of the input (replaces the filename max-id trick; works for any
+  subset, not just a prefix)
 
+Reads take the file list from the manifest, as Delta Lake takes it
+from its log: no directory listing job and no schema inference job.
 A stage commit runs two Spark jobs: the data write and one aggregate
-of the groups just written, collected to the driver (≤ one row per
-group). The driver writes the manifest file itself.
+of the directory just written, re-read with the written frame's
+schema and collected to the driver (≤ one row per group). The driver
+writes the manifest file itself.
 
 Checksums, both order-free folds of ``xxhash64`` over a row's non-key
 columns:
@@ -32,17 +39,25 @@ columns:
 ``read_stage(..., verify=True)`` recomputes (row_count, checksum,
 hash_sum) per committed group and raises on a mismatch.
 
-Crash safety: data partitions land first (dynamic partition overwrite
-→ idempotent rewrites), then one driver-written manifest file is
-renamed in from a hidden temp name; a crash before the rename just
-re-processes those partitions on resume.
+Crash safety comes from the manifest alone: a commit directory counts
+once one driver-written manifest file naming it is renamed in from a
+hidden temp name. A crash before the rename leaves a directory no
+manifest row names; it is never read, its groups are rewritten into a
+new commit on resume, and the stage's next ``run_stage`` deletes it
+(this assumes one writer per stage).
+
+Manifest rows without a ``commit`` (roots written with the older
+Hive-style ``data/<stage>/tile_group=<g>/`` layout) are read from
+``root/data/<stage>``; resuming such a root writes new commits beside it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -50,7 +65,7 @@ import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import MapType
+from pyspark.sql.types import MapType, StructType
 
 from hope_graph_builder_spark.functions.sqltext import ident
 from hope_graph_builder_spark.spatial.cells import cell_id_sql
@@ -63,6 +78,7 @@ _MANIFEST_COLS = (
     ("hash_sum", "long"),
     ("wall_ms", "long"),
     ("status", "string"),
+    ("commit", "string"),
 )
 # the one manifest schema: Spark DDL for reads, Arrow for the driver commit
 MANIFEST_SCHEMA = ", ".join(f"{n} {t}" for n, t in _MANIFEST_COLS)
@@ -74,8 +90,9 @@ _CHECKS = ("row_count", "checksum", "hash_sum")
 
 def with_tile_group(df: DataFrame, x: str, y: str, res: int = 4,
                     out: str = "tile_group") -> DataFrame:
-    """Coarse-cell partition key (res 4 → 8192 m tiles → ≤256 groups
-    in the synthetic extent; tune res so groups ≫ executors)."""
+    """Coarse-cell resume key (res 4 → 8192 m tiles → ≤256 groups in
+    the synthetic extent). A group is the unit ``run_stage`` skips or
+    rewrites, not a directory: tune res so groups ≫ executors."""
     return df.withColumn(out, F.expr(cell_id_sql(ident(x), ident(y), res)))
 
 
@@ -83,11 +100,21 @@ def _manifest_path(root: str) -> str:
     return f"{root}/_manifest"
 
 
+def _commits_path(root: str, stage: str) -> str:
+    return f"{root}/commits/{stage}"
+
+
 def _fs(path: str) -> tuple[pafs.FileSystem, str]:
     """pyarrow filesystem and path for a Spark path: a URI, or a local
     path (a relative one resolves against the cwd, as Spark's does)."""
     uri = "://" in path or path.startswith("file:")
     return pafs.FileSystem.from_uri(path if uri else os.path.abspath(path))
+
+
+def _write_text(path: str, text: str) -> None:
+    fs, p = _fs(path)
+    with fs.open_output_stream(p) as f:
+        f.write(text.encode())
 
 
 def _existing_manifest(root: str) -> tuple[pafs.FileSystem, str] | None:
@@ -98,7 +125,7 @@ def _existing_manifest(root: str) -> tuple[pafs.FileSystem, str] | None:
 def _committed(root: str, stage: str, columns: list[str]) -> pa.Table:
     """The stage's done manifest rows, read on the driver. An absent
     manifest means nothing is done; files of manifests written before
-    ``hash_sum`` existed read it as null."""
+    ``hash_sum`` or ``commit`` existed read them as null."""
     found = _existing_manifest(root)
     if found is None:
         return _ARROW_SCHEMA.empty_table().select(columns)
@@ -108,8 +135,17 @@ def _committed(root: str, stage: str, columns: list[str]) -> pa.Table:
     )
 
 
-def _done_groups(root: str, stage: str) -> list[int]:
-    return sorted(set(_committed(root, stage, ["tile_group"])["tile_group"].to_pylist()))
+def _groups(committed: pa.Table) -> list[int]:
+    return sorted(set(committed["tile_group"].to_pylist()))
+
+
+def _drop_orphans(root: str, stage: str, keep: set[str]) -> None:
+    """Delete the stage's commit directories that no manifest row names
+    (left by a crash before the manifest commit)."""
+    fs, base = _fs(_commits_path(root, stage))
+    for info in fs.get_file_info(pafs.FileSelector(base, allow_not_found=True)):
+        if info.type == pafs.FileType.Directory and info.base_name not in keep:
+            fs.delete_dir(info.path)
 
 
 def _signed64(v: int) -> int:
@@ -157,7 +193,8 @@ def read_manifest(spark: SparkSession, root: str) -> DataFrame:
 
 
 def completed_groups(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    return spark.createDataFrame([(g,) for g in _done_groups(root, stage)], "tile_group long")
+    groups = _groups(_committed(root, stage, ["tile_group"]))
+    return spark.createDataFrame([(g,) for g in groups], "tile_group long")
 
 
 def run_stage(
@@ -167,40 +204,60 @@ def run_stage(
     root: str,
     tile_col: str = "tile_group",
 ) -> dict:
-    """Execute one checkpointed stage: write only not-yet-completed
-    tile groups of ``df`` to ``root/data/<stage>``, then commit their
-    lineage rows. Returns counters (mirrors the reference's logged
-    count invariants, noise_graph_join.py:116-125)."""
-    done = _done_groups(root, stage)
+    """Execute one checkpointed stage: write the not-yet-completed tile
+    groups of ``df`` into a new commit directory under
+    ``root/commits/<stage>``, then commit their lineage rows. Returns
+    counters (mirrors the reference's logged count invariants,
+    noise_graph_join.py:116-125)."""
+    committed = _committed(root, stage, ["tile_group", "commit"])
+    done = _groups(committed)
+    _drop_orphans(root, stage, set(committed["commit"].to_pylist()))
     todo = df.filter(~F.col(tile_col).isin(done)) if done else df
 
+    commit = f"{time.time_ns()}-{uuid.uuid4().hex}"
+    path = f"{_commits_path(root, stage)}/{commit}"
     t0 = time.time()
-    data_path = f"{root}/data/{stage}"
-    (todo.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy(tile_col).parquet(data_path))
+    todo.sortWithinPartitions(tile_col).write.parquet(path)
     wall_ms = int((time.time() - t0) * 1000)
 
-    written = spark.read.parquet(data_path)
-    lineage = _lineage(written.filter(~F.col(tile_col).isin(done)) if done else written, tile_col)
+    lineage = _lineage(spark.read.schema(todo.schema).parquet(path), tile_col)
     if lineage:
+        _write_text(f"{path}/_schema.json", todo.schema.json())
         _commit(root, [
             {"stage": stage, "tile_group": g, "row_count": n, "checksum": x, "hash_sum": s,
-             "wall_ms": wall_ms, "status": "done"}
+             "wall_ms": wall_ms, "status": "done", "commit": commit}
             for g, (n, x, s) in sorted(lineage.items())
         ])
+    else:  # every group was done already: keep no empty commit
+        fs, p = _fs(path)
+        fs.delete_dir(p)
     return {"stage": stage, "groups_written": len(lineage), "groups_skipped": len(done),
             "wall_ms": wall_ms}
 
 
 def read_stage(spark: SparkSession, root: str, stage: str, verify: bool = False) -> DataFrame:
-    """Read a completed stage's data, restricted to manifest-committed
-    partitions (uncommitted stragglers from a crash are ignored —
-    they'll be overwritten on resume). ``verify`` first recomputes each
-    committed group's counters and raises ``ValueError`` on a mismatch;
-    a null manifest counter (older manifests) is not compared."""
-    committed = _committed(root, stage, ["tile_group", *_CHECKS])
-    done = sorted(set(committed["tile_group"].to_pylist()))
-    data = spark.read.parquet(f"{root}/data/{stage}").filter(F.col("tile_group").isin(done))
+    """Read a completed stage's data: the commit directories its
+    manifest rows name, with the schema stored beside them, so no
+    listing or inference job runs (a commit directory from a crash is
+    never named, so never read). Rows without a commit come from the
+    older ``data/<stage>`` layout. ``verify`` first recomputes each
+    committed group's counters and raises ``ValueError`` on a
+    mismatch; a null manifest counter (older manifests) is not
+    compared."""
+    committed = _committed(root, stage, ["tile_group", "commit", *_CHECKS])
+    done = _groups(committed)
+    commits = sorted({c for c in committed["commit"].to_pylist() if c is not None})
+    reader, parts = spark.read, []
+    if commits:
+        base = _commits_path(root, stage)
+        fs, p = _fs(f"{base}/{commits[-1]}/_schema.json")
+        with fs.open_input_stream(p) as f:
+            reader = spark.read.schema(StructType.fromJson(json.loads(f.read())))
+        parts.append(reader.parquet(*[f"{base}/{c}" for c in commits]))
+    # older roots; with the schema known, only their listing job runs
+    if len(commits) == 0 or committed["commit"].null_count:
+        parts.append(reader.parquet(f"{root}/data/{stage}"))
+    data = reduce(DataFrame.unionByName, parts).filter(F.col("tile_group").isin(done))
     if verify:
         got = _lineage(data, "tile_group")
         bad = []
@@ -218,13 +275,10 @@ def debug_sink(df, path: str, sample_rows: int | None = None) -> None:
     """S5 debug sink (reference exports intermediate GeoDataFrames to
     debug GeoPackages when b_export_*_gpkg flags are set,
     otp_graph_import.py:58-64, 180-194): tap any intermediate
-    DataFrame to parquet plus a sidecar schema.json, optionally
-    sampled. Sampling uses LIMIT (deterministic enough for debugging;
-    a tap must never add a full shuffle to the traced plan)."""
-    import json as _json
-
+    DataFrame to parquet plus a sidecar _schema.json, optionally
+    sampled. ``path`` may be a local path or a URI. Sampling uses
+    LIMIT (deterministic enough for debugging; a tap must never add a
+    full shuffle to the traced plan)."""
     out = df.limit(sample_rows) if sample_rows else df
     out.write.mode("overwrite").parquet(path)
-    schema_path = os.path.join(path, "_schema.json")
-    with open(schema_path, "w") as f:
-        f.write(_json.dumps(_json.loads(out.schema.json()), indent=1))
+    _write_text(f"{path}/_schema.json", json.dumps(json.loads(out.schema.json()), indent=1))

@@ -88,11 +88,19 @@ def test_debug_sink_tap(spark, tmp_path):
     sch = json.load(open(os.path.join(out, "_schema.json")))
     assert sch["fields"][0]["name"] == "v"
 
+    # a file:// URI: Spark and the sidecar write resolve it alike
+    uri_dir = tmp_path / "tap_uri"
+    debug_sink(df, uri_dir.as_uri())
+    assert spark.read.parquet(uri_dir.as_uri()).count() == 100
+    sch = json.load(open(uri_dir / "_schema.json"))
+    assert sch["fields"][0]["name"] == "v"
+
 
 def test_webtext_ingest_checkpointed_kill_resume(spark, tmpdir):
     """Resumable CC ingest: a bucket-aligned partial run (the crash
-    surrogate — dynamic partition overwrite means a mid-write kill
-    leaves uncommitted groups that replay identically) is resumed by a
+    surrogate — a mid-write kill leaves a commit directory no manifest
+    row names, which is never read and whose groups replay
+    identically into a new commit) is resumed by a
     full run that (a) skips every completed signal bucket, (b) detects
     the grown signal set via the stage-2 content fingerprint and
     re-runs the GLOBAL clustering in a fresh namespace, and (c) ends
@@ -181,9 +189,11 @@ def test_run_pipeline_entry_resumes(spark, tmp_path, monkeypatch, capsys):
 
 
 def _group_files(root: str, stage: str) -> list[str]:
+    """The stage's data files: each commit directory holds flat parquet
+    files with a ``tile_group`` column."""
     import glob
 
-    return sorted(glob.glob(f"{root}/data/{stage}/tile_group=*/*.parquet"))
+    return sorted(glob.glob(f"{root}/commits/{stage}/*/*.parquet"))
 
 
 def _rewrite(path: str, table) -> None:
@@ -236,7 +246,7 @@ def test_hash_sum_catches_what_xor_and_count_miss(spark, tmpdir):
     ).coalesce(1)
     run_stage(spark, df, "dup", tmpdir)
     (victim,) = _group_files(tmpdir, "dup")
-    _rewrite(victim, pa.table({"v": ["b", "b", "b", "c"]}))
+    _rewrite(victim, pa.table({"tile_group": [1] * 4, "v": ["b", "b", "b", "c"]}))
 
     m = read_manifest(spark, tmpdir).first()
     data = read_stage(spark, tmpdir, "dup").agg(
@@ -249,8 +259,8 @@ def test_hash_sum_catches_what_xor_and_count_miss(spark, tmpdir):
 
 
 def test_run_stage_keeps_session_overwrite_mode(spark, tmpdir):
-    """Dynamic partition overwrite is a per-write option: the session
-    setting every later overwrite sees is left as it was."""
+    """run_stage sets no session conf: the partition overwrite mode
+    every later overwrite sees is left as it was."""
     key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
     run_stage(spark, _points(spark), "pts", tmpdir)
@@ -292,3 +302,100 @@ def test_resume_from_spark_written_manifest(spark, tmpdir):
     assert out.columns[0] == "tile_group"
     assert out.count() == pts.count()
     assert out.select("doc_id").exceptAll(pts.select("doc_id")).count() == 0
+
+
+def _halves(spark):
+    pts = _points(spark)
+    groups = sorted(r.tile_group for r in pts.select("tile_group").distinct().collect())
+    half = groups[: len(groups) // 2]
+    return pts, groups, half
+
+
+def test_torn_commit_is_ignored_and_rewritten(spark, tmpdir, monkeypatch):
+    """A crash after a stage's data write but before its manifest commit
+    leaves a commit directory that no manifest row names: read_stage
+    returns only the groups committed earlier, the re-run writes each
+    missing group exactly once and deletes the orphan, and verify
+    passes."""
+    import os
+
+    from hope_graph_builder_spark.checkpoint import manifest
+
+    pts, groups, half = _halves(spark)
+    part1 = pts.filter(F.col("tile_group").isin(half))
+    run_stage(spark, part1, "pts", tmpdir)
+    commits_dir = f"{tmpdir}/commits/pts"
+    (first,) = os.listdir(commits_dir)
+
+    real_commit = manifest._commit
+
+    def torn(root, rows):
+        monkeypatch.setattr(manifest, "_commit", real_commit)
+        raise RuntimeError("killed before the manifest commit")
+
+    monkeypatch.setattr(manifest, "_commit", torn)
+    with pytest.raises(RuntimeError, match="killed before the manifest commit"):
+        run_stage(spark, pts, "pts", tmpdir)
+    (orphan,) = set(os.listdir(commits_dir)) - {first}
+
+    got = read_stage(spark, tmpdir, "pts")
+    assert sorted(r.tile_group for r in got.select("tile_group").distinct().collect()) == half
+    assert got.count() == part1.count()
+
+    stats = run_stage(spark, pts, "pts", tmpdir)
+    assert stats["groups_skipped"] == len(half)
+    assert stats["groups_written"] == len(groups) - len(half)
+    assert first in os.listdir(commits_dir) and orphan not in os.listdir(commits_dir)
+    m = read_manifest(spark, tmpdir)
+    assert m.count() == len(groups)
+    assert m.groupBy("tile_group").count().filter(F.col("count") != 1).count() == 0
+    out = read_stage(spark, tmpdir, "pts", verify=True)
+    assert out.count() == pts.count()
+    assert out.select("doc_id").exceptAll(pts.select("doc_id")).count() == 0
+
+
+def test_resume_from_partitioned_layout(spark, tmpdir):
+    """A root in the older layout (data under data/<stage>/tile_group=<g>/
+    and a 7-column driver-written manifest with no commit column)
+    resumes into a commit directory, and read_stage(verify=True)
+    returns every row exactly once across both layouts."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pts, groups, half = _halves(spark)
+    legacy = f"{tmpdir}/data/pts"
+    pts.filter(F.col("tile_group").isin(half)).write.partitionBy("tile_group").parquet(legacy)
+    lineage = {}
+    for r in spark.read.parquet(legacy).select(
+        "tile_group", F.xxhash64("doc_id", "x", "y").alias("h")
+    ).collect():
+        n, x, s = lineage.get(r.tile_group, (0, 0, 0))
+        lineage[r.tile_group] = (n + 1, x ^ r.h, s + r.h)
+    gs = sorted(lineage)
+    os.makedirs(f"{tmpdir}/_manifest")
+    pq.write_table(pa.table({
+        "stage": ["pts"] * len(gs),
+        "tile_group": gs,
+        "row_count": [lineage[g][0] for g in gs],
+        "checksum": [lineage[g][1] for g in gs],
+        # sum mod 2**64, stored as a signed long
+        "hash_sum": [(lineage[g][2] + 2**63) % 2**64 - 2**63 for g in gs],
+        "wall_ms": [1234] * len(gs),
+        "status": ["done"] * len(gs),
+    }), f"{tmpdir}/_manifest/part-0.parquet")
+    assert gs == half
+
+    stats = run_stage(spark, pts, "pts", tmpdir)
+    assert stats["groups_skipped"] == len(half)
+    assert stats["groups_written"] == len(groups) - len(half)
+    assert len(os.listdir(f"{tmpdir}/commits/pts")) == 1
+    m = read_manifest(spark, tmpdir)
+    assert m.count() == len(groups)
+    assert m.filter(F.col("commit").isNull()).count() == len(half)
+    out = read_stage(spark, tmpdir, "pts", verify=True)
+    assert out.columns == ["tile_group", "doc_id", "x", "y"]
+    assert out.count() == pts.count()
+    assert out.exceptAll(pts.select(*out.columns)).count() == 0
+    assert pts.select(*out.columns).exceptAll(out).count() == 0

@@ -42,8 +42,8 @@ def main() -> None:
     )
     layers = synth.noise_layers(spark)
     noises = run_noise_join(edges, layers, synth.NODATA_RECT, res=args.res)
-    # partition the output by tile group of the edge start point for
-    # checkpointed, resumable writes
+    # key the output by the tile group of the edge start point: the
+    # unit a resumed run skips or rewrites
     out = with_tile_group(
         noises.join(edges.select("edge_id", "x1", "y1"), "edge_id"), "x1", "y1", res=4
     ).drop("x1", "y1")
