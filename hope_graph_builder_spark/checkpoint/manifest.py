@@ -9,9 +9,8 @@ Generalizes the reference's poor-man's checkpoint — chunked CSVs named
 
 - one commit directory per ``run_stage`` call,
   ``root/commits/<stage>/<commit>/``: a flat parquet write of the
-  groups that call wrote, sorted by ``tile_group`` within each file
-  (parquet min/max statistics still prune a group filter), plus the
-  written frame's schema as ``_schema.json``
+  groups that call wrote (one file per write task), plus the written
+  frame's schema as ``_schema.json``
 - a manifest of per-group lineage rows (``MANIFEST_SCHEMA``: stage,
   tile_group, row_count, checksum, hash_sum, wall_ms, status, commit),
   one small parquet file per commit under ``root/_manifest``;
@@ -20,8 +19,12 @@ Generalizes the reference's poor-man's checkpoint — chunked CSVs named
   of the input (replaces the filename max-id trick; works for any
   subset, not just a prefix)
 
-Reads take the file list from the manifest, as Delta Lake takes it
-from its log: no directory listing job and no schema inference job.
+Reads take the directory list from the manifest, as Delta Lake takes
+its file list from its log, and the schema from the commit: no schema
+inference job, and no parallel listing job while the paths read stay
+at or under ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+(32 by default; above it Spark lists them in one job). The paths are a
+stage's commits, one per ``run_stage`` call that wrote anything.
 A stage commit runs two Spark jobs: the data write and one aggregate
 of the directory just written, re-read with the written frame's
 schema and collected to the driver (≤ one row per group). The driver
@@ -60,6 +63,7 @@ import uuid
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
@@ -217,7 +221,7 @@ def run_stage(
     commit = f"{time.time_ns()}-{uuid.uuid4().hex}"
     path = f"{_commits_path(root, stage)}/{commit}"
     t0 = time.time()
-    todo.sortWithinPartitions(tile_col).write.parquet(path)
+    todo.write.parquet(path)
     wall_ms = int((time.time() - t0) * 1000)
 
     lineage = _lineage(spark.read.schema(todo.schema).parquet(path), tile_col)
@@ -238,15 +242,17 @@ def run_stage(
 def read_stage(spark: SparkSession, root: str, stage: str, verify: bool = False) -> DataFrame:
     """Read a completed stage's data: the commit directories its
     manifest rows name, with the schema stored beside them, so no
-    listing or inference job runs (a commit directory from a crash is
-    never named, so never read). Rows without a commit come from the
-    older ``data/<stage>`` layout. ``verify`` first recomputes each
+    inference job runs (a commit directory from a crash is never named,
+    so never read). Every row of a named commit is committed. Rows
+    without a commit come from the older ``data/<stage>`` layout, kept
+    to the groups committed there: a group left uncommitted in it was
+    rewritten into a commit on resume. ``verify`` first recomputes each
     committed group's counters and raises ``ValueError`` on a
     mismatch; a null manifest counter (older manifests) is not
     compared."""
     committed = _committed(root, stage, ["tile_group", "commit", *_CHECKS])
-    done = _groups(committed)
     commits = sorted({c for c in committed["commit"].to_pylist() if c is not None})
+    legacy = _groups(committed.filter(pc.is_null(committed["commit"])))
     reader, parts = spark.read, []
     if commits:
         base = _commits_path(root, stage)
@@ -255,9 +261,9 @@ def read_stage(spark: SparkSession, root: str, stage: str, verify: bool = False)
             reader = spark.read.schema(StructType.fromJson(json.loads(f.read())))
         parts.append(reader.parquet(*[f"{base}/{c}" for c in commits]))
     # older roots; with the schema known, only their listing job runs
-    if len(commits) == 0 or committed["commit"].null_count:
-        parts.append(reader.parquet(f"{root}/data/{stage}"))
-    data = reduce(DataFrame.unionByName, parts).filter(F.col("tile_group").isin(done))
+    if legacy or not commits:
+        parts.append(reader.parquet(f"{root}/data/{stage}").filter(F.col("tile_group").isin(legacy)))
+    data = reduce(DataFrame.unionByName, parts)
     if verify:
         got = _lineage(data, "tile_group")
         bad = []
@@ -265,8 +271,10 @@ def read_stage(spark: SparkSession, root: str, stage: str, verify: bool = False)
             want, have = tuple(row[c] for c in _CHECKS), got.get(row["tile_group"])
             if have is None or any(w is not None and w != h for w, h in zip(want, have)):
                 bad.append(f"{row['tile_group']}: manifest {want}, data {have}")
+        # a named commit is read whole: a group it holds must have a manifest row
+        bad += [f"{g}: no manifest row, data {got[g]}" for g in sorted(got.keys() - set(_groups(committed)))]
         if bad:
-            raise ValueError(f"stage {stage!r}: {len(bad)} committed tile group(s) differ from "
+            raise ValueError(f"stage {stage!r}: {len(bad)} tile group(s) differ from "
                              "their manifest (row_count, checksum, hash_sum): " + "; ".join(bad[:5]))
     return data.select("tile_group", *[c for c in data.columns if c != "tile_group"])
 

@@ -258,6 +258,22 @@ def test_hash_sum_catches_what_xor_and_count_miss(spark, tmpdir):
     assert pq.read_table(victim).num_rows == 4
 
 
+def test_verify_rejects_group_without_manifest_row(spark, tmpdir):
+    """A commit directory is read whole, so a row of a group its
+    manifest rows do not name comes back from the default read, and
+    verify raises on it."""
+    import pyarrow as pa
+
+    df = spark.createDataFrame([(1, "a"), (1, "b")], "tile_group long, v string").coalesce(1)
+    run_stage(spark, df, "one", tmpdir)
+    (victim,) = _group_files(tmpdir, "one")
+    _rewrite(victim, pa.table({"tile_group": [1, 1, 2], "v": ["a", "b", "c"]}))
+
+    assert read_stage(spark, tmpdir, "one").count() == 3
+    with pytest.raises(ValueError, match="2: no manifest row"):
+        read_stage(spark, tmpdir, "one", verify=True)
+
+
 def test_run_stage_keeps_session_overwrite_mode(spark, tmpdir):
     """run_stage sets no session conf: the partition overwrite mode
     every later overwrite sees is left as it was."""
@@ -357,18 +373,22 @@ def test_torn_commit_is_ignored_and_rewritten(spark, tmpdir, monkeypatch):
 def test_resume_from_partitioned_layout(spark, tmpdir):
     """A root in the older layout (data under data/<stage>/tile_group=<g>/
     and a 7-column driver-written manifest with no commit column)
-    resumes into a commit directory, and read_stage(verify=True)
-    returns every row exactly once across both layouts."""
+    resumes into a commit directory, and read_stage returns every row
+    exactly once across both layouts, with and without verify. The
+    root also holds one group directory a crash left uncommitted: it
+    is rewritten into the commit, and its old directory is not read."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     pts, groups, half = _halves(spark)
+    torn = groups[len(half)]
     legacy = f"{tmpdir}/data/pts"
-    pts.filter(F.col("tile_group").isin(half)).write.partitionBy("tile_group").parquet(legacy)
+    pts.filter(F.col("tile_group").isin(half + [torn])).write.partitionBy("tile_group").parquet(legacy)
+    assert os.path.isdir(f"{legacy}/tile_group={torn}")
     lineage = {}
-    for r in spark.read.parquet(legacy).select(
+    for r in spark.read.parquet(legacy).filter(F.col("tile_group").isin(half)).select(
         "tile_group", F.xxhash64("doc_id", "x", "y").alias("h")
     ).collect():
         n, x, s = lineage.get(r.tile_group, (0, 0, 0))
@@ -394,8 +414,10 @@ def test_resume_from_partitioned_layout(spark, tmpdir):
     m = read_manifest(spark, tmpdir)
     assert m.count() == len(groups)
     assert m.filter(F.col("commit").isNull()).count() == len(half)
-    out = read_stage(spark, tmpdir, "pts", verify=True)
-    assert out.columns == ["tile_group", "doc_id", "x", "y"]
-    assert out.count() == pts.count()
-    assert out.exceptAll(pts.select(*out.columns)).count() == 0
-    assert pts.select(*out.columns).exceptAll(out).count() == 0
+    assert m.filter(F.col("tile_group") == torn).first().commit is not None
+    for verify in (False, True):
+        out = read_stage(spark, tmpdir, "pts", verify=verify)
+        assert out.columns == ["tile_group", "doc_id", "x", "y"]
+        assert out.count() == pts.count()
+        assert out.exceptAll(pts.select(*out.columns)).count() == 0
+        assert pts.select(*out.columns).exceptAll(out).count() == 0
