@@ -1064,8 +1064,8 @@ def q_sample_polyline(spark, sf_dir):
 )
 def q_pip_wkb_triangles(spark, sf_dir):
     """General-polygon PIP (J1's non-rectangular form): cell-cover
-    prefilter + vectorized ray-cast refine over WKB rings in Arrow
-    batches. The oracle is the INDEPENDENT closed form (three
+    prefilter + native even-odd ray-cast over the vertex arrays each
+    triangle's WKB decodes to once. The oracle is the INDEPENDENT closed form (three
     half-plane signs on CCW triangles) — two different PIP
     formulations must produce identical match sets (boundary hits are
     measure-zero on the jittered fixture)."""

@@ -9,8 +9,9 @@ refinement.
 Refinement strategy:
 - rectangles (axis-aligned)  → native comparisons (whole-stage codegen)
 - DWithin(point, segment, d) → native arithmetic (dist² ≤ d², no UDF)
-- general polygon rings      → vectorized numpy ray-cast inside
-                               mapInPandas (Arrow batches)
+- general polygon rings      → native even-odd ray-cast over vertex
+                               arrays; the WKB decode is one Arrow UDF
+                               over the polygon rows, before the join
 
 Skew: hot cells (e.g. a popular page hotspot) are salted — the POINT
 side gets `salt = pmod(xxhash64(id), k)`, the (small) polygon side is
@@ -25,15 +26,14 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from hope_graph_builder_spark.functions.sqltext import dbl, ident
 from hope_graph_builder_spark.spatial.cells import cell_id_sql, cover_bbox_sql
-from hope_graph_builder_spark.spatial.kernels import points_in_rings
-from hope_graph_builder_spark.spatial.wkb import multipolygon_from_wkb
+from hope_graph_builder_spark.spatial.wkb import ring_vertex_lists
 
 CELL = "_cell"
 SALT = "_salt"
@@ -202,38 +202,80 @@ def pip_join_wkb(
     MultiPolygon, WITH hole rings (reference noise/land-cover surfaces
     carry both, noise_data_preprocessing.py:26-41).
 
-    Same cell prefilter as pip_join_rect; exact refine is a vectorized
-    even-odd ray-cast across ALL rings of all parts
-    (spatial/kernels.points_in_rings — inside-the-hole correctly does
-    NOT match) over Arrow batches, grouped by polygon within each
-    batch — one decode + one vectorized test per (batch, polygon).
-    Requires bbox columns minx/miny/maxx/maxy on ``polys`` (cheap to
-    precompute at ingest; keeps the cover native).
+    Same cell prefilter as pip_join_rect; the exact refine is an
+    even-odd ray-cast across ALL rings of all parts — inside-the-hole
+    correctly does NOT match. Each polygon's WKB is decoded ONCE, before
+    the cover explode, into vertex arrays (``_polygon_vertices``, an
+    Arrow UDF over the polygon rows only); every candidate is then
+    tested by a native array predicate (``_even_odd_sql``), so the
+    point rows never leave the JVM. Bit-identical to
+    spatial/kernels.points_in_rings. Requires bbox columns
+    minx/miny/maxx/maxy on ``polys`` (cheap to precompute at ingest;
+    keeps the cover native). Output: the point columns, then the
+    polygon columns without ``geom`` and the bbox.
     """
     p = with_point_cell(points, x, y, res)
-    g = with_cover_cells(polys, "minx", "miny", "maxx", "maxy", res)
+    g = with_cover_cells(
+        _polygon_vertices(polys, geom, poly_id), "minx", "miny", "maxx", "maxy", res
+    )
     p, g, keys = _apply_salt(p, g, point_id, hot)
     if broadcast_polys:
         g = F.broadcast(g)
     cand = p.join(g, keys, "inner").drop(*keys, "minx", "miny", "maxx", "maxy")
-    out_schema = StructType([f for f in cand.schema.fields if f.name != geom])
-    xcol, ycol, gcol = x, y, geom
+    return cand.filter(_even_odd_sql(x, y)).drop("_vx", "_vy")
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf.drop(columns=[gcol])
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[xcol].to_numpy(dtype=np.float64)
-            py = pdf[ycol].to_numpy(dtype=np.float64)
-            for _, idx in pdf.groupby(poly_id, sort=False).indices.items():
-                parts = multipolygon_from_wkb(bytes(pdf[gcol].iloc[idx[0]]))
-                rings = [r for part in parts for r in part]
-                keep[idx] = points_in_rings(px[idx], py[idx], rings)
-            yield pdf.loc[keep].drop(columns=[gcol])
 
-    return cand.mapInPandas(refine, schema=out_schema)
+def _polygon_vertices(polys: DataFrame, geom: str, poly_id: str) -> DataFrame:
+    """``polys`` with ``geom`` replaced by the vertex arrays ``_vx``/
+    ``_vy`` of wkb.ring_vertex_lists: every ring closed, one NULL
+    between rings. Rows whose geometry has no edge are dropped (they
+    contain no point). A non-finite vertex raises ValueError naming the
+    polygon: Spark orders NaN above every double where numpy compares
+    it false, so the two refines would part ways on it."""
+    vertex = ArrayType(DoubleType())
+    schema = StructType(
+        [f for f in polys.schema.fields if f.name != geom]
+        + [StructField("_vx", vertex), StructField("_vy", vertex)]
+    )
+
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            offsets, xs, ys, valid = ring_vertex_lists(b.column(geom).to_pylist())
+            bad = np.flatnonzero(valid & ~(np.isfinite(xs) & np.isfinite(ys)))
+            if len(bad):
+                row = int(np.searchsorted(offsets, bad[0], side="right")) - 1
+                raise ValueError(
+                    f"{poly_id} {b.column(poly_id)[row].as_py()!r}: non-finite vertex"
+                    f" ({xs[bad[0]]}, {ys[bad[0]]})"
+                )
+            off = pa.array(offsets, pa.int32())
+            cols = [b.column(f.name) for f in schema.fields[:-2]] + [
+                pa.ListArray.from_arrays(off, pa.array(xs, mask=~valid)),
+                pa.ListArray.from_arrays(off, pa.array(ys, mask=~valid)),
+            ]
+            out = pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
+            yield out.filter(pa.array(np.diff(offsets) > 0))
+
+    return polys.mapInArrow(decode, schema)
+
+
+def _even_odd_sql(x: str, y: str) -> str:
+    """Even-odd containment of the point (x, y) in the rings of
+    ``_vx``/``_vy`` as SQL text: the number of edges (k, k + 1) the
+    rightward ray crosses is odd. The operation order is
+    kernels.points_in_ring's, so both refines round alike; a NULL
+    separator makes the CASE fall through to false, so no edge spans
+    two rings. ``filter`` + ``size``, not ``aggregate``: an
+    ``aggregate`` in the join condition makes Spark 4.1 push an
+    unresolvable filter onto the polygon side
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
+    px, py = ident(x), ident(y)
+    crosses = (
+        f"CASE WHEN (_vy[_e] > {py}) != (_vy[_e + 1] > {py}) "
+        f"THEN {px} < _vx[_e] + ({py} - _vy[_e]) * (_vx[_e + 1] - _vx[_e])"
+        " / (_vy[_e + 1] - _vy[_e]) ELSE false END"
+    )
+    return f"size(filter(sequence(0, size(_vx) - 2), _e -> {crosses})) % 2 = 1"
 
 
 def dwithin_join(

@@ -1,7 +1,11 @@
 """Vectorized numpy geometry kernels — the Shapely stand-in.
 
-These run inside Arrow-batched pandas UDFs (never per-row Python UDFs).
-Each kernel documents which reference operation it re-expresses.
+The overlay and geometry operators run these inside Arrow-batched
+pandas UDFs (never per-row Python UDFs). ``points_in_ring(s)`` is the
+reference twin of the native WKB point-in-polygon refine
+(operators/spatial_join.pip_join_wkb), which repeats its operation
+order in SQL. Each kernel documents which reference operation it
+re-expresses.
 """
 
 from __future__ import annotations

@@ -10,7 +10,8 @@ ring only — reference polygons are exploded to single parts first,
 
 Hot paths do NOT round-trip WKB per row; they carry plain double
 columns (x, y / x1..y2) or coordinate arrays. WKB is for I/O edges and
-for general-polygon refinement kernels.
+for general-polygon kernels; the point-in-polygon join decodes each
+polygon once into vertex arrays (``ring_vertex_lists``).
 """
 
 from __future__ import annotations
@@ -145,19 +146,30 @@ def multipolygon_to_wkb(parts: list[list[np.ndarray]]) -> bytes:
     return head + b"".join(polygon_to_wkb_rings(rings) for rings in parts)
 
 
-def polygon_rings_from_wkb(buf: bytes, offset: int = 0) -> tuple[list[np.ndarray], int]:
-    """All rings of one polygon record; returns (rings, next offset)."""
+def _polygon_ring_spans(buf: bytes, offset: int = 0) -> tuple[list[tuple[int, int, str]], int]:
+    """(coordinate byte offset, vertex count, byte order) of each ring
+    of the polygon record at ``offset``; returns (spans, next offset)."""
     e = _bo(buf, offset)
     (t,) = struct.unpack_from(f"{e}I", buf, offset + 1)
-    assert t == WKB_POLYGON, t
+    if t != WKB_POLYGON:
+        raise ValueError(f"expected a WKB Polygon record, got type {t}")
     (nrings,) = struct.unpack_from(f"{e}I", buf, offset + 5)
     p = offset + 9
-    rings = []
+    spans = []
     for _ in range(nrings):
         (n,) = struct.unpack_from(f"{e}I", buf, p)
-        a = np.frombuffer(buf, f"{e}f8", 2 * n, p + 4).reshape(n, 2)
-        rings.append(a.astype(np.float64) if e == ">" else a)
+        spans.append((p + 4, n, e))
         p += 4 + 16 * n
+    return spans, p
+
+
+def polygon_rings_from_wkb(buf: bytes, offset: int = 0) -> tuple[list[np.ndarray], int]:
+    """All rings of one polygon record; returns (rings, next offset)."""
+    spans, p = _polygon_ring_spans(buf, offset)
+    rings = []
+    for s, n, e in spans:
+        a = np.frombuffer(buf, f"{e}f8", 2 * n, s).reshape(n, 2)
+        rings.append(a.astype(np.float64) if e == ">" else a)
     return rings, p
 
 
@@ -176,6 +188,64 @@ def multipolygon_from_wkb(buf: bytes) -> list[list[np.ndarray]]:
         rings, off = polygon_rings_from_wkb(buf, off)
         out.append(rings)
     return out
+
+
+def _ring_spans(buf: bytes) -> list[tuple[int, int, str]]:
+    """Ring spans of every part of a Polygon or MultiPolygon record."""
+    t = wkb_type(buf)
+    if t == WKB_POLYGON:
+        return _polygon_ring_spans(buf)[0]
+    if t != WKB_MULTIPOLYGON:
+        raise ValueError(f"expected a WKB Polygon or MultiPolygon, got type {t}")
+    (nparts,) = struct.unpack_from(f"{_bo(buf)}I", buf, 5)
+    spans, off = [], 9
+    for _ in range(nparts):
+        part, off = _polygon_ring_spans(buf, off)
+        spans += part
+    return spans
+
+
+def ring_vertex_lists(bufs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Polygon/MultiPolygon WKB values → the flat layout of a pair of
+    ``array<double>`` columns: (offsets, xs, ys, valid), where value i
+    owns slots ``offsets[i]:offsets[i + 1]``.
+
+    All rings of all parts (outers and holes) are closed — the first
+    vertex is appended when the record leaves the ring open — and laid
+    end to end with ONE invalid slot between consecutive rings, so a
+    consecutive-slot edge never spans two rings. A ring of fewer than
+    two vertices has no edge and is left out; a None or ring-less value
+    owns no slot. Each ring is read in place, in its own byte order;
+    closing and layout are whole-array numpy steps."""
+    coords, counts, owner = [], [], []
+    for i, b in enumerate(bufs):
+        if b is None:
+            continue
+        for s, n, e in _ring_spans(b):
+            if n >= 2:
+                coords.append(np.frombuffer(b, f"{e}f8", 2 * n, s))
+                counts.append(n)
+                owner.append(i)
+    n = np.array(counts, dtype=np.int64)
+    owner = np.array(owner, dtype=np.int64)
+    xy = np.concatenate(coords).astype(np.float64) if coords else np.zeros(0)
+    x, y = xy[0::2], xy[1::2]
+    # output slots per ring: [separator] + its vertices + [closing vertex]
+    v0 = np.cumsum(n) - n
+    v1 = v0 + n - 1
+    is_open = (x[v0] != x[v1]) | (y[v0] != y[v1])
+    sep = np.concatenate([[False], owner[1:] == owner[:-1]]) if len(n) else np.zeros(0, bool)
+    width = sep + n + is_open
+    at = np.cumsum(width) - width + sep
+    xs = np.zeros(int(width.sum()))
+    ys = np.zeros(len(xs))
+    valid = np.zeros(len(xs), dtype=bool)
+    dst = np.repeat(at - v0, n) + np.arange(len(x))
+    xs[dst], ys[dst], valid[dst] = x, y, True
+    close = at[is_open] + n[is_open]
+    xs[close], ys[close], valid[close] = x[v0[is_open]], y[v0[is_open]], True
+    per_value = np.bincount(owner, weights=width, minlength=len(bufs)).astype(np.int64)
+    return np.concatenate([[0], np.cumsum(per_value)]), xs, ys, valid
 
 
 def rect_to_wkb(minx: float, miny: float, maxx: float, maxy: float) -> bytes:

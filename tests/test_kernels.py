@@ -253,6 +253,25 @@ def test_poly_union_trapezoids_rect_parity_and_disjoint():
     assert counts.max() <= 1
 
 
+def test_ring_vertex_lists_layout():
+    """Vertex-array layout of the WKB point-in-polygon refine: rings
+    closed, one invalid slot between rings, rings without an
+    edge and None values own no slot, XDR read in its own order."""
+    import struct
+
+    sq = np.array([[0, 0], [4, 0], [4, 4], [0, 4]], float)  # open
+    hole = np.array([[1, 1], [2, 1], [2, 2], [1, 1]], float)  # closed
+    xdr = struct.pack(">BIII", 0, 3, 1, 3) + np.array([[9, 9], [8, 9], [9, 8]], ">f8").tobytes()
+    dot = struct.pack("<BIII", 1, 3, 1, 1) + np.array([[5.0, 5.0]], "<f8").tobytes()
+    offsets, xs, ys, valid = wkb.ring_vertex_lists(
+        [wkb.multipolygon_to_wkb([[sq, hole]]), None, xdr, dot]
+    )
+    np.testing.assert_array_equal(offsets, [0, 10, 10, 14, 14])
+    np.testing.assert_array_equal(valid, [True] * 5 + [False] + [True] * 8)
+    np.testing.assert_array_equal(xs[valid], [0, 4, 4, 0, 0, 1, 2, 2, 1, 9, 8, 9, 9])
+    np.testing.assert_array_equal(ys[valid], [0, 0, 4, 4, 0, 1, 1, 2, 1, 9, 9, 8, 9])
+
+
 def test_wkb_big_endian_decode():
     """Every decoder honors the per-record XDR flag (OGC 06-103r4 §8):
     byte-swapped buffers decode to the same geometry, including mixed

@@ -42,6 +42,42 @@ def test_pip_join_shuffle_path_is_equi(spark):
     assert "Join" in plan
 
 
+def test_pip_wkb_refine_keeps_points_in_jvm(spark):
+    """The pages_tiles shape (salted shuffle, wide page rows): the WKB
+    refine is a native predicate, and the one Python node left in the
+    plan is the vertex decode over the polygon relation alone, so no
+    page row crosses into Python."""
+    import re
+
+    from hope_graph_builder_spark.operators.spatial_join import hot_cell_factors, pip_join_wkb
+    from hope_graph_builder_spark.spatial.wkb import rect_to_wkb
+
+    pages = synth.page_points(spark, SF_TINY)
+    grid = synth._layer_grid_np()
+    grid["geom"] = [rect_to_wkb(*r) for r in zip(grid.minx, grid.miny, grid.maxx, grid.maxy)]
+    polys = spark.createDataFrame(grid)
+    hot = hot_cell_factors(with_point_cell(pages, "x", "y", 7), threshold=5)
+    plan = _plan(pip_join_wkb(pages, polys, res=7, hot=hot, broadcast_polys=False))
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    lines = plan.splitlines()
+    python = [i for i, ln in enumerate(lines) if re.search(r"\b\w*(InArrow|InPandas|EvalPython)", ln)]
+    assert len(python) == 1, plan
+
+    def depth(ln):
+        return re.search(r"[A-Za-z]", ln).start()
+
+    i = python[0]
+    sub = []
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        sub.append(ln)
+    leaves = [ln for j, ln in enumerate(sub) if j + 1 == len(sub) or depth(sub[j + 1]) <= depth(ln)]
+    assert len(leaves) == 1 and "geom" in leaves[0], sub
+    assert not any("documents" in ln or "doc_id" in ln for ln in sub), sub
+
+
 def test_dwithin_refine_stays_native(spark):
     pts = synth.page_points(spark, SF_TINY).select("doc_id", "x", "y")
     edges = synth.page_edges(spark, SF_TINY).select("edge_id", "x1", "y1", "x2", "y2")

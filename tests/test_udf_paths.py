@@ -1,17 +1,28 @@
-"""The Arrow/pandas-UDF refinement paths must agree with the native
-paths on shapes both can express (rectangles) — plus CRS/WKT codecs."""
+"""The refinement paths must agree with each other and with the numpy
+kernels: the WKB point-in-polygon refine (native predicate over vertex
+arrays decoded by an Arrow UDF) with the rect path and with
+kernels.points_in_rings, the pandas-UDF overlay paths with the native
+ones on shapes both can express (rectangles) — plus CRS/WKT codecs."""
+
+import struct
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hope_graph_builder_spark import synth
-from hope_graph_builder_spark.operators.spatial_join import pip_join_rect, pip_join_wkb
+from hope_graph_builder_spark.operators.spatial_join import (
+    pip_join_rect,
+    pip_join_wkb,
+    with_point_cell,
+)
 from hope_graph_builder_spark.pipelines.overlay import (
     overlay_share_convex,
     overlay_share_rect,
 )
 from hope_graph_builder_spark.spatial import crs, wkb
+from hope_graph_builder_spark.spatial.kernels import points_in_rings
 from hope_graph_builder_spark.spatial.wkt import (
     format_linestring_np,
     format_point_expr,
@@ -44,6 +55,101 @@ def test_pip_wkb_matches_rect_path(spark):
     b = pip_join_wkb(pts, layers, res=7, point_id="doc_id").select("doc_id", "poly_id")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def _xdr_polygon(rings):
+    out = struct.pack(">BII", 0, 3, len(rings))
+    for r in rings:
+        out += struct.pack(">I", len(r)) + np.asarray(r, ">f8").tobytes()
+    return out
+
+
+def _pip_fixture():
+    """Polygons that exercise every layout the vertex arrays carry, and
+    points on their vertices, on their horizontal, vertical and slanted
+    edges, in the hole, in the overlap of two parts and around them."""
+    sq = np.array([[1000, 1000], [1010, 1000], [1010, 1010], [1000, 1010]], float)
+    hole = np.array([[1002, 1002], [1004, 1002], [1004, 1004], [1002, 1004]], float)
+    tri = np.array([[1040.1, 1000.3], [1053.7, 1002.9], [1045.5, 1011.1]])
+    ell = np.array([[1060, 1000], [1070, 1000], [1070, 1004], [1064, 1004],
+                    [1064, 1012], [1060, 1012]], float)
+    geoms = {
+        # closed NDR polygon with a hole
+        1: wkb.polygon_to_wkb_rings([sq, hole]),
+        # NDR multipolygon whose parts overlap: the overlap is outside
+        2: wkb.multipolygon_to_wkb([[sq + [20, 0]], [sq + [25, 5]]]),
+        # unclosed concave ring (the record leaves the ring open)
+        3: struct.pack("<BIII", 1, 3, 1, len(ell)) + ell.astype("<f8").tobytes(),
+        # big-endian (XDR) slanted triangle with a big-endian hole
+        4: _xdr_polygon([tri, (tri - tri.mean(0)) * 0.3 + tri.mean(0)]),
+        # mixed-order multipolygon: XDR header, NDR + XDR parts
+        5: struct.pack(">BII", 0, 6, 2) + wkb.polygon_to_wkb_rings([sq + [0, 20]])
+        + _xdr_polygon([hole + [0, 20]]),
+    }
+    rings = {
+        k: [r for part in wkb.multipolygon_from_wkb(g) for r in part] for k, g in geoms.items()
+    }
+    pts = [np.stack(np.meshgrid(np.arange(995.0, 1080.0, 0.5),
+                                np.arange(995.0, 1036.0, 0.5)), -1).reshape(-1, 2)]
+    rng = np.random.default_rng(7)
+    for rs in rings.values():
+        for r in rs:
+            a, b = r, np.roll(r, -1, axis=0)
+            t = np.concatenate([[0.0, 0.5], rng.random(6)])[:, None, None]
+            pts.append((a + t * (b - a)).reshape(-1, 2))
+    pts = np.unique(np.concatenate(pts), axis=0)
+    return geoms, rings, pts
+
+
+def test_pip_wkb_refine_equals_kernel(spark):
+    """The native vertex-array refine equals kernels.points_in_rings on
+    EVERY (point, polygon) pair — vertices, edges, holes, multipart
+    overlaps, an unclosed ring and big-endian records — broadcast,
+    shuffled and salted. The points frame is built before the polygons
+    and the join is consumed by count(), the shape in which an
+    ``aggregate`` form of the predicate failed to plan (as the first
+    query of a fresh session)."""
+    geoms, rings, xy = _pip_fixture()
+    want = {
+        (int(i), k)
+        for k, rs in rings.items()
+        for i in np.flatnonzero(points_in_rings(xy[:, 0], xy[:, 1], rs))
+    }
+    pts = spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.arange(len(xy)), "x": xy[:, 0], "y": xy[:, 1]})
+    )
+    polys = spark.createDataFrame(
+        [
+            (k, bytearray(g), float(np.concatenate(rings[k])[:, 0].min()),
+             float(np.concatenate(rings[k])[:, 1].min()),
+             float(np.concatenate(rings[k])[:, 0].max()),
+             float(np.concatenate(rings[k])[:, 1].max()))
+            for k, g in geoms.items()
+        ],
+        "poly_id long, geom binary, minx double, miny double, maxx double, maxy double",
+    )
+    hot = with_point_cell(pts, "x", "y", 14).select("_cell").distinct().withColumn("_k", F.lit(3))
+    for kw in ({}, {"broadcast_polys": False}, {"broadcast_polys": False, "hot": hot},
+               {"hot": hot}):
+        out = pip_join_wkb(pts, polys, res=14, **kw)
+        assert out.count() == len(want), kw
+        assert out.columns == ["doc_id", "x", "y", "poly_id"]
+        assert {(r.doc_id, r.poly_id) for r in out.collect()} == want, kw
+
+
+def test_pip_wkb_rejects_non_finite_vertex(spark):
+    """Spark orders NaN above every double, numpy compares it false: a
+    non-finite vertex would split the two refines, so the decode
+    refuses it and names the polygon."""
+    pts = spark.createDataFrame([(1, 5.0, 5.0)], "doc_id long, x double, y double")
+    for bad in (np.nan, np.inf):
+        ring = np.array([[0, 0], [10, 0], [10, bad], [0, 10]], float)
+        polys = spark.createDataFrame(
+            [(42, bytearray(wkb.polygon_to_wkb(ring)), 0.0, 0.0, 10.0, 10.0)],
+            "poly_id long, geom binary, minx double, miny double, maxx double, maxy double",
+        )
+        with pytest.raises(Exception, match="poly_id 42: non-finite vertex"):
+            pip_join_wkb(pts, polys, res=10).count()
 
 
 def test_overlay_convex_matches_rect_path(spark):
