@@ -10,8 +10,10 @@ Refinement strategy:
 - rectangles (axis-aligned)  → native comparisons (whole-stage codegen)
 - DWithin(point, segment, d) → native arithmetic (dist² ≤ d², no UDF)
 - general polygon rings      → native even-odd ray-cast over vertex
-                               arrays; the WKB decode is one Arrow UDF
-                               over the polygon rows, before the join
+                               arrays, split into horizontal edge
+                               strips on polygons of many edges; the
+                               WKB decode is one Arrow UDF over the
+                               polygon rows, before the join
 
 Skew: hot cells (e.g. a popular page hotspot) are salted — the POINT
 side gets `salt = pmod(xxhash64(id), k)`, the (small) polygon side is
@@ -208,7 +210,11 @@ def pip_join_wkb(
     the cover explode, into vertex arrays (``_polygon_vertices``, an
     Arrow UDF over the polygon rows only); every candidate is then
     tested by a native array predicate (``_even_odd_sql``), so the
-    point rows never leave the JVM. Bit-identical to
+    point rows never leave the JVM. A polygon of more than
+    ``_STRIP_EDGES`` edges is split into horizontal strips
+    (``_edge_strips``) and a candidate tests only its strip's edges,
+    so the interpreted per-candidate work stays near ``_STRIP_EDGES``
+    edges whatever the vertex count. Bit-identical to
     spatial/kernels.points_in_rings. Requires bbox columns
     minx/miny/maxx/maxy on ``polys`` (cheap to precompute at ingest;
     keeps the cover native). Output: the point columns, then the
@@ -222,20 +228,22 @@ def pip_join_wkb(
     if broadcast_polys:
         g = F.broadcast(g)
     cand = p.join(g, keys, "inner").drop(*keys, "minx", "miny", "maxx", "maxy")
-    return cand.filter(_even_odd_sql(x, y)).drop("_vx", "_vy")
+    return cand.filter(_even_odd_sql(x, y)).drop("_vx", "_vy", "_vs")
 
 
 def _polygon_vertices(polys: DataFrame, geom: str, poly_id: str) -> DataFrame:
     """``polys`` with ``geom`` replaced by the vertex arrays ``_vx``/
-    ``_vy`` of wkb.ring_vertex_lists: every ring closed, one NULL
-    between rings. Rows whose geometry has no edge are dropped (they
-    contain no point). A non-finite vertex raises ValueError naming the
-    polygon: Spark orders NaN above every double where numpy compares
-    it false, so the two refines would part ways on it."""
+    ``_vy`` of wkb.ring_vertex_lists (every ring closed, one NULL
+    between rings), re-laid by ``_edge_strips`` with the strip header
+    ``_vs`` on polygons of many edges. Rows whose geometry has no edge
+    are dropped (they contain no point). A non-finite vertex raises
+    ValueError naming the polygon: Spark orders NaN above every double
+    where numpy compares it false, so the two refines would part ways
+    on it."""
     vertex = ArrayType(DoubleType())
     schema = StructType(
         [f for f in polys.schema.fields if f.name != geom]
-        + [StructField("_vx", vertex), StructField("_vy", vertex)]
+        + [StructField("_vx", vertex), StructField("_vy", vertex), StructField("_vs", vertex)]
     )
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -248,10 +256,15 @@ def _polygon_vertices(polys: DataFrame, geom: str, poly_id: str) -> DataFrame:
                     f"{poly_id} {b.column(poly_id)[row].as_py()!r}: non-finite vertex"
                     f" ({xs[bad[0]]}, {ys[bad[0]]})"
                 )
+            offsets, xs, ys, valid, h_off, hv, striped = _edge_strips(offsets, xs, ys, valid)
             off = pa.array(offsets, pa.int32())
-            cols = [b.column(f.name) for f in schema.fields[:-2]] + [
+            cols = [b.column(f.name) for f in schema.fields[:-3]] + [
                 pa.ListArray.from_arrays(off, pa.array(xs, mask=~valid)),
                 pa.ListArray.from_arrays(off, pa.array(ys, mask=~valid)),
+                pa.ListArray.from_arrays(
+                    pa.array(h_off, pa.int32()), pa.array(hv, pa.float64()),
+                    mask=pa.array(~striped),
+                ),
             ]
             out = pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
             yield out.filter(pa.array(np.diff(offsets) > 0))
@@ -259,23 +272,130 @@ def _polygon_vertices(polys: DataFrame, geom: str, poly_id: str) -> DataFrame:
     return polys.mapInArrow(decode, schema)
 
 
+_STRIP_EDGES = 8
+_STRIP_GROWTH = 4
+
+
+def _edge_strips(offsets, xs, ys, valid):
+    """Horizontal strips over the vertex layout of wkb.ring_vertex_lists,
+    so that a candidate tests the edges its ray can cross, not every
+    edge of the polygon.
+
+    A row with more than ``_STRIP_EDGES`` non-horizontal edges gets
+    B = ceil(edges / _STRIP_EDGES) strips of height h over its edges'
+    y-extent from y0. Its slots are re-laid strip after strip: strip k
+    holds every non-horizontal edge whose y-range meets the strip, as
+    runs of consecutive vertices with one invalid slot between runs.
+    Its header is [y0, h, o_0, ..., o_B]: strip k owns the row's slots
+    o_k:o_(k+1). A point at y reads strip floor(clip((y - y0) / h, 0,
+    B - 1)); that map is monotone in y under IEEE rounding, so the
+    strip holds every edge the ray at y straddles (min <= y < max).
+    The edges it leaves out are horizontal or not straddled: they add
+    no crossing, and the count's parity is unchanged. Other rows keep
+    their slots and get no header, and so does a row whose strips would
+    take more than ``_STRIP_GROWTH`` times its slots (edges that span
+    many strips, as in a zig-zag, repeat in each), which bounds the
+    growth of the cover exchange.
+
+    Returns (offsets, xs, ys, valid, header offsets, header values,
+    has-header mask)."""
+    rows = len(offsets) - 1
+    owner = np.repeat(np.arange(rows), np.diff(offsets))
+    e = np.flatnonzero(valid[:-1] & valid[1:] & (owner[:-1] == owner[1:]) & (ys[:-1] != ys[1:]))
+    r = owner[e]
+    lo_y, hi_y = np.minimum(ys[e], ys[e + 1]), np.maximum(ys[e], ys[e + 1])
+    nb = -(-np.bincount(r, minlength=rows) // _STRIP_EDGES)
+    y0 = np.full(rows, np.inf)
+    y1 = np.full(rows, -np.inf)
+    np.minimum.at(y0, r, lo_y)
+    np.maximum.at(y1, r, hi_y)
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        h = (y1 - y0) / nb
+    striped = (nb > 1) & np.isfinite(h) & (h > 0)
+
+    def unstriped():
+        return offsets, xs, ys, valid, np.zeros(rows + 1, np.int64), np.zeros(0), striped
+
+    if not striped.any():
+        return unstriped()
+    keep = striped[r]
+    e, r, lo_y, hi_y = e[keep], r[keep], lo_y[keep], hi_y[keep]
+
+    def strip(v):
+        return np.floor(np.clip((v - y0[r]) / h[r], 0, nb[r] - 1)).astype(np.int64)
+
+    # one (row, strip, edge) triple per strip an edge meets, in slot order
+    k0 = strip(lo_y)
+    cnt = strip(hi_y) - k0 + 1
+    pe, pr = np.repeat(e, cnt), np.repeat(r, cnt)
+    pk = np.repeat(k0 - (np.cumsum(cnt) - cnt), cnt) + np.arange(cnt.sum())
+    o = np.lexsort((pe, pk, pr))
+    pe, pk, pr = pe[o], pk[o], pr[o]
+    first = np.ones(len(pe), bool)
+    first[1:] = (pr[1:] != pr[:-1]) | (pk[1:] != pk[:-1])
+    run = first.copy()
+    run[1:] |= pe[1:] != pe[:-1] + 1
+    # slots per triple: [separator] + edge start, when it opens a run, + edge end
+    width = 1 + run + (run & ~first)
+    n_str = np.bincount(pr, weights=width, minlength=rows).astype(np.int64)
+    striped &= n_str <= _STRIP_GROWTH * np.diff(offsets)
+    if not striped.any():
+        return unstriped()
+    keep = striped[pr]
+    pe, pk, pr, run, width = pe[keep], pk[keep], pr[keep], run[keep], width[keep]
+    n_str[~striped] = 0
+    end = np.cumsum(width)
+    str_at = np.cumsum(n_str) - n_str
+    new_off = np.concatenate([[0], np.cumsum(np.where(striped, n_str, np.diff(offsets)))])
+    X, Y = np.zeros(new_off[-1]), np.zeros(new_off[-1])
+    V = np.zeros(new_off[-1], bool)
+    src = np.flatnonzero(~striped[owner])
+    dst = src + (new_off[:-1] - offsets[:-1])[owner[src]]
+    X[dst], Y[dst], V[dst] = xs[src], ys[src], valid[src]
+    shift = new_off[:-1] - str_at
+    at = end - 1 + shift[pr]
+    X[at], Y[at], V[at] = xs[pe + 1], ys[pe + 1], True
+    at = (end - 2 + shift[pr])[run]
+    X[at], Y[at], V[at] = xs[pe[run]], ys[pe[run]], True
+    # headers: [y0, h, 0, end of strip 0, ..., end of strip B - 1]
+    hn = np.where(striped, nb + 3, 0)
+    h_off = np.concatenate([[0], np.cumsum(hn)])
+    hv = np.zeros(h_off[-1])
+    rs = np.flatnonzero(striped)
+    hv[h_off[rs]], hv[h_off[rs] + 1] = y0[rs], h[rs]
+    ns = np.where(striped, nb, 0)
+    s_at = np.cumsum(ns) - ns
+    srow = np.repeat(rs, nb[rs])
+    ends = np.cumsum(np.bincount(s_at[pr] + pk, weights=width, minlength=len(srow)))
+    hv[h_off[srow] + 3 + np.arange(len(srow)) - s_at[srow]] = ends - str_at[srow]
+    return new_off, X, Y, V, h_off, hv, striped
+
+
 def _even_odd_sql(x: str, y: str) -> str:
     """Even-odd containment of the point (x, y) in the rings of
     ``_vx``/``_vy`` as SQL text: the number of edges (k, k + 1) the
-    rightward ray crosses is odd. The operation order is
+    rightward ray crosses is odd. Only the slots of the point's strip
+    are tested when the row has a strip header ``_vs`` (see
+    ``_edge_strips``), all of them otherwise. The operation order is
     kernels.points_in_ring's, so both refines round alike; a NULL
     separator makes the CASE fall through to false, so no edge spans
-    two rings. ``filter`` + ``size``, not ``aggregate``: an
-    ``aggregate`` in the join condition makes Spark 4.1 push an
-    unresolvable filter onto the polygon side
-    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
+    two rings or two runs. ``filter`` + ``size``, not ``aggregate``: an
+    every-edge ``aggregate`` form made Spark 4.1 push an unresolvable
+    filter onto the polygon side (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    when the join was a session's first query."""
     px, py = ident(x), ident(y)
+    k = f"CAST(FLOOR(least(greatest(({py} - _vs[0]) / _vs[1], 0), size(_vs) - 4)) AS INT)"
+    lo = f"if(_vs IS NULL, 0, CAST(_vs[{k} + 2] AS INT))"
+    hi = f"if(_vs IS NULL, size(_vx), CAST(_vs[{k} + 3] AS INT))"
     crosses = (
         f"CASE WHEN (_vy[_e] > {py}) != (_vy[_e + 1] > {py}) "
         f"THEN {px} < _vx[_e] + ({py} - _vy[_e]) * (_vx[_e + 1] - _vx[_e])"
         " / (_vy[_e + 1] - _vy[_e]) ELSE false END"
     )
-    return f"size(filter(sequence(0, size(_vx) - 2), _e -> {crosses})) % 2 = 1"
+    return (
+        f"CASE WHEN {hi} - {lo} >= 2"
+        f" THEN size(filter(sequence({lo}, {hi} - 2), _e -> {crosses})) % 2 = 1 ELSE false END"
+    )
 
 
 def dwithin_join(

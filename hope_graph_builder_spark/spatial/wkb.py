@@ -146,30 +146,20 @@ def multipolygon_to_wkb(parts: list[list[np.ndarray]]) -> bytes:
     return head + b"".join(polygon_to_wkb_rings(rings) for rings in parts)
 
 
-def _polygon_ring_spans(buf: bytes, offset: int = 0) -> tuple[list[tuple[int, int, str]], int]:
-    """(coordinate byte offset, vertex count, byte order) of each ring
-    of the polygon record at ``offset``; returns (spans, next offset)."""
+def polygon_rings_from_wkb(buf: bytes, offset: int = 0) -> tuple[list[np.ndarray], int]:
+    """All rings of one polygon record; returns (rings, next offset)."""
     e = _bo(buf, offset)
     (t,) = struct.unpack_from(f"{e}I", buf, offset + 1)
     if t != WKB_POLYGON:
         raise ValueError(f"expected a WKB Polygon record, got type {t}")
     (nrings,) = struct.unpack_from(f"{e}I", buf, offset + 5)
     p = offset + 9
-    spans = []
+    rings = []
     for _ in range(nrings):
         (n,) = struct.unpack_from(f"{e}I", buf, p)
-        spans.append((p + 4, n, e))
-        p += 4 + 16 * n
-    return spans, p
-
-
-def polygon_rings_from_wkb(buf: bytes, offset: int = 0) -> tuple[list[np.ndarray], int]:
-    """All rings of one polygon record; returns (rings, next offset)."""
-    spans, p = _polygon_ring_spans(buf, offset)
-    rings = []
-    for s, n, e in spans:
-        a = np.frombuffer(buf, f"{e}f8", 2 * n, s).reshape(n, 2)
+        a = np.frombuffer(buf, f"{e}f8", 2 * n, p + 4).reshape(n, 2)
         rings.append(a.astype(np.float64) if e == ">" else a)
+        p += 4 + 16 * n
     return rings, p
 
 
@@ -180,7 +170,8 @@ def multipolygon_from_wkb(buf: bytes) -> list[list[np.ndarray]]:
     if t == WKB_POLYGON:  # single part rides through unchanged
         rings, _ = polygon_rings_from_wkb(buf)
         return [rings]
-    assert t == WKB_MULTIPOLYGON, t
+    if t != WKB_MULTIPOLYGON:
+        raise ValueError(f"expected a WKB Polygon or MultiPolygon, got type {t}")
     e = _bo(buf)
     (nparts,) = struct.unpack_from(f"{e}I", buf, 5)
     out, off = [], 9
@@ -188,21 +179,6 @@ def multipolygon_from_wkb(buf: bytes) -> list[list[np.ndarray]]:
         rings, off = polygon_rings_from_wkb(buf, off)
         out.append(rings)
     return out
-
-
-def _ring_spans(buf: bytes) -> list[tuple[int, int, str]]:
-    """Ring spans of every part of a Polygon or MultiPolygon record."""
-    t = wkb_type(buf)
-    if t == WKB_POLYGON:
-        return _polygon_ring_spans(buf)[0]
-    if t != WKB_MULTIPOLYGON:
-        raise ValueError(f"expected a WKB Polygon or MultiPolygon, got type {t}")
-    (nparts,) = struct.unpack_from(f"{_bo(buf)}I", buf, 5)
-    spans, off = [], 9
-    for _ in range(nparts):
-        part, off = _polygon_ring_spans(buf, off)
-        spans += part
-    return spans
 
 
 def ring_vertex_lists(bufs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -215,17 +191,17 @@ def ring_vertex_lists(bufs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndar
     end to end with ONE invalid slot between consecutive rings, so a
     consecutive-slot edge never spans two rings. A ring of fewer than
     two vertices has no edge and is left out; a None or ring-less value
-    owns no slot. Each ring is read in place, in its own byte order;
-    closing and layout are whole-array numpy steps."""
+    owns no slot. Closing and layout are whole-array numpy steps."""
     coords, counts, owner = [], [], []
     for i, b in enumerate(bufs):
         if b is None:
             continue
-        for s, n, e in _ring_spans(b):
-            if n >= 2:
-                coords.append(np.frombuffer(b, f"{e}f8", 2 * n, s))
-                counts.append(n)
-                owner.append(i)
+        for part in multipolygon_from_wkb(b):
+            for r in part:
+                if len(r) >= 2:
+                    coords.append(r.ravel())
+                    counts.append(len(r))
+                    owner.append(i)
     n = np.array(counts, dtype=np.int64)
     owner = np.array(owner, dtype=np.int64)
     xy = np.concatenate(coords).astype(np.float64) if coords else np.zeros(0)
